@@ -1,10 +1,10 @@
 package graft.embed
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{DocTemplate, ProductDoc}
-import graft.vector.VectorSearch
 
 /** The reference's embedding pipeline end-to-end (SURVEY.md §3.3, ref
   * `scripts/transform/generate_embeddings.py`): product rows → templated
@@ -81,63 +81,50 @@ object EmbeddingPipeline {
     * `get_product_details`, `:364-493`): embed the query, kNN over the
     * store, join metadata back, score = 1 - distance (V4).
     *
+    * The kNN is the pgvector idiom `ORDER BY embedding <-> q LIMIT k`
+    * written declaratively — distance to the query literal projected
+    * off the store, `orderBy(dist, product_code).limit(k)` — so
+    * [[graft.plans.KnnTopKRewrite]] plans it as per-partition bounded
+    * heaps merged on one partition. `rank` is `row_number()` over the
+    * same order and runs on that merged, already-sorted partition;
+    * the hits then left-join the catalog (a hit with no catalog row
+    * keeps null catalog columns). Rows with a null embedding are not
+    * searchable. Plain mode returns at most k rows, ranked 1..k, and
+    * scans `store` once.
+    *
     * `withTies = true` switches the contract from "some k rows in
     * distance order" to SQL's `rank() <= k` (top-k WITH TIES): every
-    * row whose distance ≤ the k-th smallest distance is returned. The
-    * plain mode's result SET is ambiguous when a distance tie
-    * straddles the rank-k boundary — which members of the tie group
-    * the bounded heap keeps is internal order, so two engines (or two
-    * runs over differently-partitioned data) can legally disagree;
-    * with-ties includes the whole boundary group and is deterministic
-    * at ANY scale (the r16 sf1 check caught exactly this: v13's
-    * boundary landed inside a 6-member sqrt(7) tie group that sf0.01
-    * and sf0.1 don't produce). Cost: one extra store scan filtered by
-    * the k-th distance (broadcast, one row per query) — pay it when
-    * the result feeds a correctness contract; skip it for serving.
-    *
-    * Contract: `store` is scanned TWICE (once by the kNN, once for the
-    * id→code join-back; with-ties adds a third) — the reference's
-    * store is a materialized vector table and so should this one be;
-    * pass a read-from-disk or cached frame, not an expensive live
-    * computation (a computed store re-runs its whole upstream per
-    * scan, as v13 deliberately demonstrates at fixture scale). */
+    * row whose distance ≤ the k-th smallest distance is returned, and
+    * `rank` is `rank()`. When a distance tie straddles the rank-k
+    * boundary, plain mode's product_code tiebreak picks one of several
+    * valid top-k sets — another engine with another tiebreak may pick
+    * a different one; with-ties includes the whole boundary group and
+    * is engine-independent at ANY scale (the r16 sf1 check caught
+    * exactly this: v13's boundary landed inside a 6-member sqrt(7) tie
+    * group that sf0.01 and sf0.1 don't produce). Cost: a second,
+    * filtered store scan bounded by `max(dist)` of the plain top-k (a
+    * scalar subquery) — pay it when the result feeds a correctness
+    * contract; skip it for serving. Both modes read `store` per scan,
+    * so pass a read-from-disk or cached frame, not an expensive live
+    * computation. */
   def search(store: DataFrame, catalog: DataFrame,
       queryText: String, embedder: TextEmbedder, k: Int,
       withTies: Boolean = false): DataFrame = {
-    val spark = store.sparkSession
     val qvec = embedder.embedBatch(Seq(queryText)).head
-    val queries = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(0L, qvec.toSeq)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("qid",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("qvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-    val withId = store.withColumn("__id", xxhash64(col("product_code")))
-    val topk = VectorSearch.knn(
-      withId, "__id", "embedding", queries, "qid", "qvec", k)
+    // the distance is null exactly when the embedding is (null-intolerant)
+    val scored = store.filter(col("embedding").isNotNull)
+      .select(col("product_code"), call_function("graft_l2_distance",
+        col("embedding"), typedLit(qvec)).as("dist"))
+    val order = Seq(col("dist"), col("product_code"))
+    val topk = scored.orderBy(order: _*).limit(k)
     val hits =
-      if (!withTies) topk
-      else {
-        // rank() <= k ⟺ dist <= d_k, and d_k = max(dist) of ANY valid
-        // top-k — stable no matter which tie members the heap kept
-        val bound = topk.groupBy("query_id")
-          .agg(max(col("dist")).as("__bound"))
-        withId
-          .crossJoin(broadcast(queries.select(
-            col("qid").as("query_id"), col("qvec"))))
-          .withColumn("dist", call_function("graft_l2_distance",
-            col("embedding"), col("qvec")))
-          .join(broadcast(bound), Seq("query_id"))
-          .filter(col("dist") <= col("__bound"))
-          .select(col("query_id"), col("__id").as("id"), col("dist"))
-      }
-    hits
-      .join(withId.select(col("__id").as("id"), col("product_code")),
-        Seq("id"))
-      .join(catalog, Seq("product_code"), "left")
+      if (!withTies)
+        topk.withColumn("rank", row_number().over(Window.orderBy(order: _*)))
+      else
+        // rank() <= k ⟺ dist <= d_k, and d_k = max(dist) of ANY valid top-k
+        scored.filter(col("dist") <= topk.agg(max(col("dist"))).scalar())
+          .withColumn("rank", rank().over(Window.orderBy(col("dist"))))
+    hits.join(catalog, Seq("product_code"), "left")
       .withColumn("score", lit(1.0) - col("dist"))
-      .drop("id", "query_id", "__bound")
   }
 }

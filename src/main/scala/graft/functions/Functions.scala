@@ -76,12 +76,16 @@ object TextOps {
   /** Driver-side twin of [[md5Long60]] — same value as the engine
     * computes, used to pre-fold constant salts into literals so the
     * per-row plan hashes each shingle once instead of once per hash
-    * function. */
+    * function. The top 60 bits of the digest — the value of its first
+    * 15 hex digits — are shifted in straight from the bytes: 0..6 whole,
+    * then the high nibble of byte 7. */
   def md5Long60Jvm(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val hex = d.map(b => f"$b%02x").mkString.take(15)
-    java.lang.Long.parseLong(hex, 16)
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var h = 0L
+    var i = 0
+    while (i < 7) { h = (h << 8) | (d(i) & 0xff); i += 1 }
+    (h << 4) | ((d(7) & 0xff) >>> 4)
   }
 
   /** Rolling polynomial fingerprint of a token array, mod 1e9+7

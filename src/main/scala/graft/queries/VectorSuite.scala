@@ -577,7 +577,8 @@ object VectorSuite extends QuerySuite {
 
   /** v13's persisted intermediates, one generation per session.
     * [[graft.embed.EmbeddingPipeline.search]]'s contract says the
-    * store is a MATERIALIZED vector table (it scans the store twice;
+    * store is a MATERIALIZED vector table (the with-ties search v13
+    * runs scans it twice: the top-k bound, then the filtered pass;
     * the reference's is a pgvector table, `generate_embeddings.py`
     * writes it before `test_search` reads it) — so v13 persists the
     * store and the LlmFill output instead of re-running the whole
@@ -647,7 +648,8 @@ object VectorSuite extends QuerySuite {
       // not indexable — their absence from the result set is the
       // oracle-visible trace of the fallback
       .filter(exists(col("embedding"), x => x =!= 0f))
-      // search's documented store contract: materialized, scanned twice
+      // search's documented store contract: materialized (with ties,
+      // scanned twice)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val catalog = filled.select(
       col("doc_id").cast("string").as("product_code"),

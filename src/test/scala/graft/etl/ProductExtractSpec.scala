@@ -325,6 +325,10 @@ class ProductExtractSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // resolved on the test thread: `site` cancels via `assume` when the
+    // reference config is absent, and inside the foreachBatch function
+    // that cancel would surface as a StreamingQueryException instead
+    val breadtalk = site("breadtalk")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, String, String)]
     mem.addData(
@@ -337,7 +341,7 @@ class ProductExtractSpec extends SparkSpec {
       .createTempDirectory("graft-extract-cp").toString
     val q = graft.streaming.EventStreams.transformSink(
       mem.toDF.toDF("url", "html", "category_url"),
-      batch => productsFromHtml(batch, site("breadtalk"),
+      batch => productsFromHtml(batch, breadtalk,
         categoryUrlCol = Some("category_url")).toDF(),
       out, cp)
     q.awaitTermination()

@@ -67,10 +67,12 @@ class V13BoundarySpec extends SparkSpec {
     val runs = (0 until 2).map { _ =>
       EmbeddingPipeline.search(store, catalog, q, e, k = 5,
           withTies = true)
-        .select("product_code").as[String].collect().toSet
+        .select("product_code", "rank").as[(String, Int)].collect().toSet
     }
     assert(runs.head.size == 7, runs.head.toString)
     assert(runs.head == runs(1))
+    // `rank` is SQL rank(): the tie group shares rank 4
+    assert(runs.head.toSeq.map(_._2).sorted == Seq(1, 1, 1, 4, 4, 4, 4))
     // and the plain mode still returns exactly k (ambiguous members,
     // bounded count — the serving contract)
     val plain = EmbeddingPipeline.search(store, catalog, q, e, k = 5)
