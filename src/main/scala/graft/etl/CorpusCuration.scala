@@ -92,17 +92,7 @@ object CorpusCuration {
       else raw
 
     // stage 1+2: the in-row gates (one projection, two filters)
-    val gated = base
-      .withColumn("__tk", tokens(col(textCol)))
-      .withColumn("__n", size(col("__tk")).cast("long"))
-      .withColumn("__uniq",
-        size(array_distinct(col("__tk"))).cast("double") / col("__n"))
-      .withColumn("__g2", shingles(col("__tk"), 2))
-      .withColumn("__dup2",
-        when(size(col("__g2")) > 0,
-          (size(col("__g2")) - size(array_distinct(col("__g2"))))
-            .cast("double") / size(col("__g2"))).otherwise(0.0))
-    val quality = gated
+    val quality = gateColumns(base, textCol)
       .filter(col("__n") >= cfg.minTokens &&
         col("__uniq") >= cfg.minUniqRatio)
       .select(col(idCol), col(textCol), col("__dup2")).persist()
@@ -451,7 +441,17 @@ object CorpusCuration {
     * what pins the two forms against drift. */
   private def gateStage(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config): DataFrame =
-    docs.select(col(idCol), col(textCol))
+    gateColumns(docs.select(col(idCol), col(textCol)), textCol)
+      .filter(col("__n") >= cfg.minTokens &&
+        col("__uniq") >= cfg.minUniqRatio &&
+        col("__dup2") <= cfg.maxDup2Frac)
+      .select(col(idCol), col(textCol))
+
+  /** The in-row gate columns (`__n` tokens, `__uniq` distinct-token
+    * ratio, `__dup2` duplicate-bigram fraction, plus their `__tk`/`__g2`
+    * intermediates) that [[curate]] and [[gateStage]] filter on. */
+  private def gateColumns(docs: DataFrame, textCol: String): DataFrame =
+    docs
       .withColumn("__tk", tokens(col(textCol)))
       .withColumn("__n", size(col("__tk")).cast("long"))
       .withColumn("__uniq",
@@ -461,10 +461,6 @@ object CorpusCuration {
         when(size(col("__g2")) > 0,
           (size(col("__g2")) - size(array_distinct(col("__g2"))))
             .cast("double") / size(col("__g2"))).otherwise(0.0))
-      .filter(col("__n") >= cfg.minTokens &&
-        col("__uniq") >= cfg.minUniqRatio &&
-        col("__dup2") <= cfg.maxDup2Frac)
-      .select(col(idCol), col(textCol))
 
   /** The eval-span dictionary (`h`), shared by [[curate]] and
     * [[fitIndexes]]. */

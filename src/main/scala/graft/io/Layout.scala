@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-layout utilities for the 100 TB posture — the concerns that
@@ -78,9 +78,65 @@ object Layout {
       .mode(SaveMode.Overwrite).parquet(outPath)
   }
 
+  // ------------------------------------------------ standing indexes
+
+  /** The partitioned-index core: the ONE write, pruned read and
+    * parameter sidecar behind all five standing-index layouts —
+    * MinHash bands ([[graft.ops.TextDedupIndex]]), pHash bands
+    * ([[graft.multimodal.VideoFrameIndex]]), IVF cells
+    * ([[graft.vector.VectorSearch.writeIvfIndexed]],
+    * [[graft.ops.VectorDedupIndex]]), IVFPQ cells
+    * ([[graft.vector.ProductQuantizer.writeIvfPq]]) and LSH buckets
+    * ([[graft.vector.VectorSearch.writeLshIndexed]]). Each index owns
+    * only its key derivation (which partition columns a row gets), its
+    * verification, and its public signatures; the layout contract
+    * lives here, once:
+    *
+    *  - **One file per directory per write.** [[writePartitioned]]
+    *    hash-clusters on the partition columns before `partitionBy`,
+    *    so each partition value lands in exactly one write task: a
+    *    build or an admit leaves at most one new file per directory it
+    *    touches, and [[compactPartitioned]] brings a directory back to
+    *    one file after many admits. Without the clustering every input
+    *    task writes into every directory (measured: 32 tasks × 256
+    *    directories = 8k small files, and a 40-directory probe paid
+    *    ~1,300 file opens for ~60k rows).
+    *  - **Probe keys bounded by the partition count.** A probe
+    *    collects the distinct partition-key tuples of its (small)
+    *    batch — at most the layout's partition count
+    *    (bands × [[GroupMod]], cells, buckets), independent of corpus
+    *    AND batch size — and [[prunedRead]] pushes them as a filter on
+    *    the partition columns, so only those directories are read
+    *    (`PartitionFilters` in the executed plan, pinned per index).
+    *    Band layouts bound the count by grouping the band key:
+    *    `bgroup = bkey mod GroupMod` instead of one directory per key.
+    *  - **The sidecar.** Key-derivation parameters that are part of
+    *    the index, not of the caller ([[graft.multimodal
+    *    .VideoFrameIndex]]'s `bands`, [[graft.ops.TextDedupIndex]]'s
+    *    `k`/`rowsPerBand`, both with `groupMod`), are recorded by the
+    *    build in [[MetaFile]], carried over by [[compactPartitioned]],
+    *    and checked by every admit and probe ([[requireIndexMeta]]): a
+    *    batch keyed with other parameters would join to (near-)nothing
+    *    and read as "no duplicates" — the silent-wrong-answer class.
+    *    An index written without a sidecar stays readable, unchecked.
+    *    IVF centroids and LSH planes are caller-held models, persisted
+    *    by the caller next to the path as with any ANN index. */
+  val MetaFile = "_graft_index_meta.json"
+
+  /** Band-key grouping modulus of the two band layouts — see the
+    * contract above. */
+  val GroupMod = 64
+
+  /** Partition columns of the two band layouts. */
+  val BandCols = Seq("band", "bgroup")
+
+  /** Band rows (with `bkey`) plus their `bgroup` partition column. */
+  def withBandGroup(bands: DataFrame): DataFrame =
+    bands.withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
+
   /** Hash-cluster `df` on `partCols` for a `partitionBy` write with an
-    * EXPLICIT shuffle-partition count — the shared clustering step of
-    * every standing-index write/admit/compact.
+    * EXPLICIT shuffle-partition count — the clustering step of
+    * [[writePartitioned]].
     *
     * Why explicit (r18, guide §2.6 idle capacity): a bare
     * `repartition(cols)` is subject to AQE partition coalescing, and
@@ -102,16 +158,33 @@ object Layout {
     df.repartition(n, partCols.map(col): _*)
   }
 
+  /** Write `df` as a standing index `partitionBy(partCols)` — the one
+    * write of every build (`Overwrite`), admit (`Append`) and
+    * compaction. Clusters first ([[clusterForPartitionedWrite]]),
+    * optionally co-sorts rows within each file on `sortCols` and caps
+    * rows per file (`maxRecordsPerFile`, 0 = no cap), and on
+    * `Overwrite` records a non-empty `params` in the [[MetaFile]]
+    * sidecar. */
+  def writePartitioned(df: DataFrame, path: String, partCols: Seq[String],
+      mode: SaveMode = SaveMode.Overwrite,
+      params: Map[String, Long] = Map.empty, sortCols: Seq[String] = Nil,
+      maxRecordsPerFile: Long = 0L): Unit = {
+    clusterForPartitionedWrite(df, partCols)
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy(partCols: _*).mode(mode).parquet(path)
+    if (mode == SaveMode.Overwrite && params.nonEmpty)
+      writeIndexMeta(df.sparkSession, path, params)
+  }
+
   /** [[compact]] for a `partitionBy(partCols)` layout, PRESERVING the
-    * layout — the maintenance half of nightly index appends
-    * ([[graft.ops.VectorDedupIndex.admitBatch]] /
-    * [[graft.ops.TextDedupIndex.admitBatch]] leave one file per
-    * partition value per night; a year of appends is 365 footer reads
-    * per directory). Hash-clustering ON the partition columns puts
-    * each partition value in exactly one task, so the rewrite emits
-    * exactly one file per partition directory (`maxRecordsPerFile`
-    * splits only a genuinely oversized one). `sortCols` co-sorts rows
-    * within each file for tight row-group stats.
+    * layout and its sidecar — the maintenance half of nightly index
+    * admits, which leave one file per touched partition value per
+    * night (a year of appends is 365 footer reads per directory).
+    * Goes through [[writePartitioned]], so the rewrite emits exactly
+    * one file per partition directory (`maxRecordsPerFile` splits only
+    * a genuinely oversized one); `sortCols` co-sorts rows within each
+    * file for tight row-group stats.
     *
     * Writes to `outPath` — never in place (Spark cannot safely
     * overwrite its own input); the caller swaps directories after
@@ -122,15 +195,84 @@ object Layout {
   def compactPartitioned(spark: SparkSession, inPath: String,
       outPath: String, partCols: Seq[String],
       sortCols: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 1000000L): Unit = {
-    val df = spark.read.parquet(inPath)
-    val clustered = clusterForPartitionedWrite(df, partCols)
-    val sorted =
-      if (sortCols.isEmpty) clustered
-      else clustered.sortWithinPartitions(sortCols.map(col): _*)
-    sorted.write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partCols: _*)
-      .mode(SaveMode.Overwrite).parquet(outPath)
+      maxRecordsPerFile: Long = 1000000L): Unit =
+    writePartitioned(spark.read.parquet(inPath), outPath, partCols,
+      params = readIndexMeta(spark, inPath).getOrElse(Map.empty),
+      sortCols = sortCols, maxRecordsPerFile = maxRecordsPerFile)
+
+  /** The index at `path` read with only the partitions `probe` keys
+    * into: the distinct `partCols` tuples of `probe` (a small batch —
+    * the collect is bounded by the layout's partition count) become a
+    * partition filter ([[keepPartitions]]). `None` when the probe has
+    * no keys — an empty batch probes nothing. */
+  def prunedRead(spark: SparkSession, path: String, probe: DataFrame,
+      partCols: Seq[String]): Option[DataFrame] = {
+    val keys = probe.select(partCols.map(col): _*).distinct().collect()
+    if (keys.isEmpty) None
+    else Some(keepPartitions(spark.read.parquet(path), partCols,
+      keys.toSeq.map(_.toSeq)))
+  }
+
+  /** Keep only the rows of `index` whose `partCols` tuple is one of
+    * `keys` (an IN list over the column, or over the struct of the
+    * columns). Each key literal is cast to its column's type (partition
+    * discovery reads small integer keys back as INT), so the predicate
+    * compares the bare partition columns and plans as
+    * `PartitionFilters`; a key that does not fit the column's type
+    * matches nothing. */
+  def keepPartitions(index: DataFrame, partCols: Seq[String],
+      keys: Seq[Seq[Any]]): DataFrame = {
+    def tuple(cs: Seq[Column]) = if (cs.size == 1) cs.head else struct(cs: _*)
+    index.filter(tuple(partCols.map(col)).isin(keys.map(k => tuple(
+      partCols.zip(k).map { case (c, v) =>
+        lit(v).try_cast(index.schema(c).dataType).as(c) })): _*))
+  }
+
+  private implicit val jsonFormats: org.json4s.Formats =
+    org.json4s.DefaultFormats
+
+  private def metaPath(path: String) =
+    new org.apache.hadoop.fs.Path(path, MetaFile)
+
+  private def writeIndexMeta(spark: SparkSession, path: String,
+      params: Map[String, Long]): Unit = {
+    val p = metaPath(path)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(org.json4s.jackson.Serialization.write(params)
+      .getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The parameters recorded in an index's [[MetaFile]] sidecar, or
+    * `None` for an index written without one. The leading underscore
+    * keeps the sidecar invisible to parquet directory scans, so it
+    * lives inside the index directory itself. */
+  def readIndexMeta(spark: SparkSession, path: String)
+      : Option[Map[String, Long]] = {
+    val p = metaPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option.when(fs.exists(p)) {
+      val in = fs.open(p)
+      try org.json4s.jackson.JsonMethods.parse(in)
+        .extract[Map[String, Long]]
+      finally in.close()
+    }
+  }
+
+  /** Fail unless every `params` entry the index recorded equals the
+    * caller's value — called by every admit and probe of a layout with
+    * a sidecar, so a mismatched caller fails loudly instead of reading
+    * as "no duplicates". `legacy` stands in for the sidecar of an
+    * index written before it existed (empty: unchecked). */
+  def requireIndexMeta(spark: SparkSession, path: String,
+      params: Map[String, Long], op: String,
+      legacy: => Map[String, Long] = Map.empty): Unit = {
+    val built = readIndexMeta(spark, path).getOrElse(legacy)
+    params.foreach { case (k, v) => built.get(k).foreach { b =>
+      require(b == v, s"index at $path was built with $k=$b but $op " +
+        s"was called with $k=$v — keys derived with other parameters " +
+        "would join to (near-)nothing and read as 'no duplicates'")
+    } }
   }
 }

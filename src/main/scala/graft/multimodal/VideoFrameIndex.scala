@@ -1,7 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.io.Layout
 
 /** Persisted pHash-band index for INCREMENTAL video near-dup — the
   * third standing index next to [[graft.ops.TextDedupIndex]] (MinHash
@@ -14,39 +16,25 @@ import org.apache.spark.sql.functions._
   * [[Multimodal.containerFrames]] → [[PHash.phash64]] upstream; only
   * 64-bit hashes ever reach the index, never rasters.
   *
-  * Layout contract (mirrors TextDedupIndex): band rows are written
-  * `partitionBy(band, bgroup)` where `bgroup = phash-band-key mod
-  * [[GroupMod]]` — one directory per raw 16-bit key would mean 256k
-  * directories of tiny files; grouping caps it at bands × GroupMod
-  * while a probe still prunes to only the groups its batch hashes
-  * into. The probe collects the batch's (band, bgroup) set
-  * driver-side (bounded by bands × GroupMod, independent of batch AND
-  * corpus size), pushes it as a partition filter (PartitionFilters —
-  * spec-pinned), equi-joins surviving index rows on the exact
-  * (band, bkey), and Hamming-verifies. Recall contract is
+  * A band layout under the [[graft.io.Layout]] standing-index
+  * contract (one file per directory per write, probe keys bounded by
+  * the partition count, parameter sidecar): band rows are partitioned
+  * on (band, bgroup); the probe equi-joins the pruned index rows on
+  * the exact (band, bkey) and Hamming-verifies. Recall contract is
   * [[Multimodal.videoPairsFromFrameHashes]]'s: guaranteed for
   * Hamming ≤ bands−1, best-effort LSH above.
   *
   * The banding parameter is PART OF THE INDEX, not of the probe: an
   * index written with bands=8 carries 8-bit keys, and probing it with
   * 16-bit bands=4 keys would join to (near-)nothing and read as "no
-  * duplicates" — the silent-wrong-answer class. So [[writeIndex]]
-  * persists `bands` in a `_graft_index_meta.json` sidecar and every
-  * reader ([[probePairs]], [[admitBatch]], [[nightlyIngest]])
+  * duplicates". So [[writeIndex]] records `bands` in the sidecar and
+  * every reader ([[probePairs]], [[admitBatch]], [[nightlyIngest]])
   * require-checks its caller's value against it (ADVICE r17). Indexes
   * predating the sidecar derive bands from the `band=` partition
   * directories (every frame explodes into all bands, so a non-empty
   * index has all of them).
   */
 object VideoFrameIndex {
-
-  val GroupMod = 64
-
-  /** Sidecar recording the banding the index was built with. The
-    * leading underscore keeps it invisible to parquet directory
-    * scans (Spark/Hadoop skip `_`/`.` files), so it can live inside
-    * the index directory itself. */
-  val MetaFile = "_graft_index_meta.json"
 
   /** One row per (frame, band): the frame's 64/bands-bit slice keyed
     * for exact-equality blocking — the same banding
@@ -78,93 +66,53 @@ object VideoFrameIndex {
         col("blk.bkey").as("bkey"): _*)
   }
 
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, MetaFile)
-
-  private def writeMeta(spark: SparkSession, path: String,
-      bands: Int): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"bands":$bands,"groupMod":$GroupMod}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def meta(bands: Int) =
+    Map("bands" -> bands.toLong, "groupMod" -> Layout.GroupMod.toLong)
 
   /** The banding an existing index was built with: the sidecar when
     * present, else (pre-sidecar indexes) `max(band)+1` from the
     * partition directory names. Fails loudly on an empty/unreadable
     * index — "can't tell the banding" must never degrade into a
     * silently-empty probe. */
-  def indexBands(spark: SparkSession, indexPath: String): Int = {
-    val p = metaPath(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      val doc = org.json4s.jackson.JsonMethods.parse(txt)
-      doc \ "bands" match {
-        case org.json4s.JInt(b) => b.toInt
-        case _ => throw new IllegalArgumentException(
-          s"$p exists but has no integer 'bands' field: $txt")
-      }
-    } else {
-      val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("band=")).map(_.stripPrefix("band=").toInt)
-      require(dirs.nonEmpty, s"no $MetaFile and no band= partition " +
-        s"directories under $indexPath — not a VideoFrameIndex")
-      dirs.max + 1
-    }
+  def indexBands(spark: SparkSession, indexPath: String): Int =
+    Layout.readIndexMeta(spark, indexPath).map(_("bands").toInt)
+      .getOrElse(dirBands(spark, indexPath))
+
+  private def dirBands(spark: SparkSession, indexPath: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val dirs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("band=")).map(_.stripPrefix("band=").toInt)
+    require(dirs.nonEmpty, s"no ${Layout.MetaFile} and no band= " +
+      s"partition directories under $indexPath — not a VideoFrameIndex")
+    dirs.max + 1
   }
 
   private def requireBands(spark: SparkSession, indexPath: String,
-      bands: Int, op: String): Unit = {
-    val built = indexBands(spark, indexPath)
-    require(built == bands,
-      s"index at $indexPath was built with bands=$built but $op was " +
-        s"called with bands=$bands — mismatched band keys " +
-        s"(${64 / built}-bit vs ${64 / bands}-bit) would join to " +
-        "(near-)nothing and read as 'no duplicates'")
-  }
+      bands: Int, op: String): Unit =
+    Layout.requireIndexMeta(spark, indexPath, meta(bands), op,
+      Map("bands" -> dirBands(spark, indexPath).toLong))
 
-  /** Build + persist the corpus index. One corpus scan; the
-    * hash-cluster on (band, bgroup) is the only shuffle and leaves
-    * exactly ONE file per partition directory — without it every
-    * input task writes into every directory (measured: 32 tasks ×
-    * 256 dirs = 8k small files, and a 40-directory probe paid ~1,300
-    * file opens for ~60k rows). Persists `bands` in the [[MetaFile]]
-    * sidecar — see the class doc. */
-  def writeIndex(frames: DataFrame, path: String, bands: Int = 4): Unit = {
-    bandRows(frames, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
-      .mode("overwrite").parquet(path)
-    writeMeta(frames.sparkSession, path, bands)
-  }
+  private def indexRows(frames: DataFrame, bands: Int): DataFrame =
+    Layout.withBandGroup(bandRows(frames, bands))
+
+  /** Build + persist the corpus index. One corpus scan; the write's
+    * clustering is the only shuffle. Records `bands` in the sidecar —
+    * see the class doc. */
+  def writeIndex(frames: DataFrame, path: String, bands: Int = 4): Unit =
+    Layout.writePartitioned(indexRows(frames, bands), path,
+      Layout.BandCols, params = meta(bands))
 
   /** Append an accepted batch's band rows — the nightly admit half.
     * Hashing is deterministic and row-local, so admitted rows are
     * indistinguishable from build-time rows (spec pins admit ≡
-    * rebuild). Hash-clustering on (band, bgroup) leaves exactly ONE
-    * new file per touched partition directory per admit; run
-    * [[compactIndex]] on the usual cadence. Fails loudly when the
-    * caller's `bands` differs from the index's. */
+    * rebuild); run [[compactIndex]] on the usual cadence. Fails loudly
+    * when the caller's `bands` differs from the index's. */
   def admitBatch(frames: DataFrame, indexPath: String,
       bands: Int = 4): Unit = {
     requireBands(frames.sparkSession, indexPath, bands, "admitBatch")
-    bandRows(frames, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
-      .mode("append").parquet(indexPath)
+    Layout.writePartitioned(indexRows(frames, bands), indexPath,
+      Layout.BandCols, SaveMode.Append)
   }
 
   /** Rewrite the index with one bkey-sorted file per (band, bgroup)
@@ -172,12 +120,9 @@ object VideoFrameIndex {
     * to `outPath` (never in place); swap after validating. The
     * banding sidecar travels with the rewrite. */
   def compactIndex(spark: SparkSession, indexPath: String,
-      outPath: String): Unit = {
-    val bands = indexBands(spark, indexPath)
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
-      Seq("band", "bgroup"), sortCols = Seq("bkey"))
-    writeMeta(spark, outPath, bands)
-  }
+      outPath: String): Unit =
+    Layout.compactPartitioned(spark, indexPath, outPath,
+      Layout.BandCols, sortCols = Seq("bkey"))
 
   /** Probe the persisted index with a new batch of frame hashes,
     * reading ONLY the index partitions the batch hashes into.
@@ -200,9 +145,9 @@ object VideoFrameIndex {
     * bucketCap × |batch|).
     *
     * The batch is small next to the corpus by the incremental
-    * contract; its (band, bgroup) set is collected driver-side —
-    * bounded by bands × GroupMod regardless of batch size. Fails
-    * loudly when the caller's `bands` differs from the index's. */
+    * contract; only the index partitions it hashes into are read
+    * ([[graft.io.Layout.prunedRead]]). Fails loudly when the caller's
+    * `bands` differs from the index's. */
   def probePairs(spark: SparkSession, indexPath: String,
       newFrames: DataFrame, hammingMax: Int = 10,
       bands: Int = 4, bucketCap: Int = 10000): (DataFrame, DataFrame) = {
@@ -232,11 +177,9 @@ object VideoFrameIndex {
     val newU = newFrames.groupBy("video", "phash")
       .agg(count(lit(1)).as("nnf"))
       .localCheckpoint()
-    val nb = bandRowsKeeping(newU, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-    val groups = nb.select("band", "bgroup").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    if (groups.isEmpty) {
+    val nb = Layout.withBandGroup(bandRowsKeeping(newU, bands))
+    val index = Layout.prunedRead(spark, indexPath, nb, Layout.BandCols)
+    if (index.isEmpty) {
       // an empty batch probes nothing — empty frames, not a crash
       val pairs = spark.emptyDataFrame.select(
         lit("").as("corpus_video"), lit("").as("new_video"),
@@ -247,17 +190,11 @@ object VideoFrameIndex {
         lit(0L).as("bucket_size")).limit(0)
       (pairs, dropped)
     } else {
-      // OR-of-conjunctions over the partition columns — prunes at
-      // plan time (PartitionFilters), asserted in VideoFrameIndexSpec
-      val prune = groups.map { case (b, g) =>
-        col("band") === b && col("bgroup") === g
-      }.reduce(_ || _)
       // collapse pruned corpus rows to distinct (bucket, video, hash)
       // with frame counts — the weighted cap keeps the same buckets
       // and the same (band, bkey, bucket_size) dropped report as the
       // raw-row capBuckets did (whole buckets, summed multiplicities)
-      val pruned = spark.read.parquet(indexPath)
-        .filter(prune)
+      val pruned = index.get
         .select(col("video").as("corpus_video"),
           col("phash").as("corpus_ph"),
           col("band").cast("int").as("band"), col("bkey"))

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.io.Layout
 
 import graft.functions.TextOps.{md5Long60, md5Long60Jvm, shingles, tokens}
 
@@ -9,21 +11,15 @@ import graft.functions.TextOps.{md5Long60, md5Long60Jvm, shingles, tokens}
   * production nightly-ingest flow: dedup a small new batch against a
   * 100 TB corpus without rescanning the corpus.
   *
-  * Layout contract (mirrors VectorSearch.writeLshIndexed / the IVF
-  * cell layout): band rows are written `partitionBy(band, bgroup)`
-  * where `bgroup = bkey mod GroupMod` — the full 60-bit band key would
-  * make one directory per bucket (millions of tiny files); grouping
-  * keeps the partition count at nBands × GroupMod while still letting
-  * a probe prune to only the groups its batch hashes into. The probe
-  * collects the batch's (band, bgroup) set driver-side (bounded by
-  * nBands × GroupMod, independent of corpus size), pushes it as a
-  * partition filter, and equi-joins the surviving index rows on the
-  * exact (band, bkey). Candidates then verify downstream (Jaccard on
-  * shingle sets — same as the batch path d04).
+  * A band layout under the [[graft.io.Layout]] standing-index
+  * contract (one file per directory per write, probe keys bounded by
+  * the partition count, parameter sidecar): band rows are partitioned
+  * on (band, bgroup), and `k`/`rowsPerBand` are recorded at build and
+  * checked by every admit and probe. The probe equi-joins the pruned
+  * index rows on the exact (band, bkey); candidates then verify
+  * downstream (Jaccard on shingle sets — same as the batch path d04).
   */
 object TextDedupIndex {
-
-  val GroupMod = 64
 
   /** LSH band rows (doc_id, band, bkey) for a document set: distinct
     * 3-shingles → K salted minima in ONE groupBy (the d02 recipe,
@@ -52,14 +48,22 @@ object TextDedupIndex {
         col("x.bkey").as("bkey"))
   }
 
-  /** Build + persist the corpus index. One corpus scan; the write is
-    * the only shuffle (partitionBy directories). */
+  /** The banding parameters the index records and its callers must
+    * match. */
+  private def meta(k: Int, rowsPerBand: Int) = Map("k" -> k.toLong,
+    "rowsPerBand" -> rowsPerBand.toLong, "groupMod" -> Layout.GroupMod.toLong)
+
+  private def write(docs: DataFrame, path: String, idCol: String,
+      textCol: String, k: Int, rowsPerBand: Int, mode: SaveMode): Unit =
+    Layout.writePartitioned(
+      Layout.withBandGroup(bandRows(docs, idCol, textCol, k, rowsPerBand)),
+      path, Layout.BandCols, mode, meta(k, rowsPerBand))
+
+  /** Build + persist the corpus index. One corpus scan; the write's
+    * clustering is the only shuffle after the signature aggregate. */
   def writeIndex(docs: DataFrame, path: String, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, rowsPerBand: Int = 2): Unit =
-    bandRows(docs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .write.partitionBy("band", "bgroup")
-      .mode("overwrite").parquet(path)
+    write(docs, path, idCol, textCol, k, rowsPerBand, SaveMode.Overwrite)
 
   /** Append an accepted batch's band rows into the persisted index —
     * the vector twin is [[VectorDedupIndex.admitBatch]], same nightly
@@ -67,19 +71,16 @@ object TextDedupIndex {
     * so tomorrow's batch dedups against tonight's. Hashing is
     * deterministic and row-local, so admitted rows are
     * indistinguishable from build-time rows (spec pins N admit cycles
-    * ≡ one full rebuild). Hash-clustering on (band, bgroup) leaves
-    * exactly ONE new file per touched partition directory per admit;
-    * run [[compactIndex]] on the cadence that keeps files-per-
-    * directory bounded. */
+    * ≡ one full rebuild); run [[compactIndex]] on the cadence that
+    * keeps files-per-directory bounded. Fails loudly when `k` or
+    * `rowsPerBand` differ from the index's. */
   def admitBatch(docs: DataFrame, indexPath: String,
       idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 8, rowsPerBand: Int = 2): Unit =
-    bandRows(docs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
-      .mode("append").parquet(indexPath)
+      k: Int = 8, rowsPerBand: Int = 2): Unit = {
+    Layout.requireIndexMeta(docs.sparkSession, indexPath,
+      meta(k, rowsPerBand), "admitBatch")
+    write(docs, indexPath, idCol, textCol, k, rowsPerBand, SaveMode.Append)
+  }
 
   /** Rewrite the index with one bkey-sorted file per (band, bgroup)
     * directory — the small-file maintenance pass for nightly
@@ -87,41 +88,34 @@ object TextDedupIndex {
     * swap after validating. */
   def compactIndex(spark: SparkSession, indexPath: String,
       outPath: String): Unit =
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
-      Seq("band", "bgroup"), sortCols = Seq("bkey"))
+    Layout.compactPartitioned(spark, indexPath, outPath,
+      Layout.BandCols, sortCols = Seq("bkey"))
 
   /** Candidate (corpus_id, new_id) pairs for a new batch against the
     * persisted index, reading ONLY the index partitions the batch
-    * hashes into. The batch is assumed small next to the corpus (the
-    * incremental contract); its band set is collected driver-side —
-    * bounded by nBands × GroupMod regardless of batch size. */
+    * hashes into ([[graft.io.Layout.prunedRead]]). The batch is
+    * assumed small next to the corpus (the incremental contract).
+    * Fails loudly when `k` or `rowsPerBand` differ from the index's. */
   def probeCandidates(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, rowsPerBand: Int = 2)
       : DataFrame = {
+    Layout.requireIndexMeta(spark, indexPath, meta(k, rowsPerBand),
+      "probeCandidates")
     // NOT cached: the batch is micro-batch-sized by the incremental
-    // contract, so re-shingling it once for the `groups` collect and
+    // contract, so re-shingling it once for the pruning collect and
     // once inside the returned (lazy) join costs next to nothing —
     // while a per-batch `.cache()` in the long-lived nightly session
     // this is built for accumulates blocks that nothing unpersists.
-    val nb = bandRows(newDocs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-    val groups = nb.select("band", "bgroup").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    // an empty micro-batch (or one whose docs are all shorter than a
-    // shingle) has nothing to probe — return an empty pair frame
-    // instead of crashing the caller's streaming loop
-    if (groups.isEmpty)
-      newDocs.sparkSession.emptyDataFrame
+    val nb = Layout.withBandGroup(
+      bandRows(newDocs, idCol, textCol, k, rowsPerBand))
+    Layout.prunedRead(spark, indexPath, nb, Layout.BandCols) match {
+      // an empty micro-batch (or one whose docs are all shorter than a
+      // shingle) has nothing to probe — return an empty pair frame
+      // instead of crashing the caller's streaming loop
+      case None => newDocs.sparkSession.emptyDataFrame
         .select(lit(0L).as("corpus_id"), lit(0L).as("new_id"))
-    else {
-      // OR-of-conjunctions over the partition columns — prunes at plan
-      // time (PartitionFilters), asserted in TextDedupIndexSpec
-      val prune = groups.map { case (b, g) =>
-        col("band") === b && col("bgroup") === g
-      }.reduce(_ || _)
-      spark.read.parquet(indexPath)
-        .filter(prune)
+      case Some(index) => index
         .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
         .join(nb.select(col("doc_id").as("new_id"), col("band"),
           col("bkey")), Seq("band", "bkey"))

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Layout
 import graft.vector.VectorSearch
 
 /** Persisted IVF index for INCREMENTAL embedding dedup — the vector
@@ -11,18 +12,18 @@ import graft.vector.VectorSearch
   * probe a small new batch of embeddings against a 100 TB corpus
   * WITHOUT rescanning the corpus.
   *
-  * Layout contract (composes [[VectorSearch.buildIvfWith]] /
-  * [[VectorSearch.writeIvfIndexed]]): the corpus is written
-  * `partitionBy(cellCol)` under its nearest-centroid cell. The probe
-  * assigns the batch to cells with the SAME literal-argmin expression
-  * (map-side, fully codegen — the centroids the index was built with
-  * are the caller's responsibility to persist alongside the path, as
-  * with any ANN index), collects the batch's distinct cell set
-  * driver-side — bounded by the centroid count, independent of both
-  * corpus and batch size — and pushes it as a partition filter, so
-  * only the probed cell directories are read (PartitionFilters,
-  * pinned in VectorDedupIndexSpec). Cosine verification then runs
-  * only on (corpus row in probed cell) × (batch row in that cell).
+  * An IVF cell layout under the [[graft.io.Layout]] standing-index
+  * contract (one file per directory per write, probe keys bounded by
+  * the partition count), composing [[VectorSearch.buildIvfWith]] /
+  * [[VectorSearch.writeIvfIndexed]]: each corpus row is partitioned on
+  * its nearest-centroid cell. The probe assigns the batch to cells
+  * with the SAME literal-argmin expression (map-side, fully codegen —
+  * the centroids the index was built with are the caller's
+  * responsibility to persist alongside the path, as with any ANN
+  * index) and reads only the probed cell directories
+  * (PartitionFilters, pinned in VectorDedupIndexSpec). Cosine
+  * verification then runs only on (corpus row in probed cell) ×
+  * (batch row in that cell).
   *
   * Recall contract: identical to the batch form — a near-dup pair
   * straddling a cell boundary is missed (the standard blocked-dedup
@@ -81,8 +82,7 @@ object VectorDedupIndex {
       .toSeq
 
   /** Build + persist the cell-partitioned corpus index. One corpus
-    * scan; the only shuffle is the partitionBy write's cell
-    * clustering. */
+    * scan; the only shuffle is the write's cell clustering. */
   def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Seq[Double])], path: String,
       cellCol: String = "ivf_cell"): Unit =
@@ -94,22 +94,18 @@ object VectorDedupIndex {
     * half of the nightly loop ([[writeIndex]] once, then probe +
     * admit forever). Rows are assigned with the SAME matrix-literal
     * argmin as the original build (the caller passes the same
-    * persisted centroids), hash-clustered on the cell so the append
-    * leaves exactly ONE new file per touched cell directory, and
-    * written `mode(append)` — existing files are never rewritten, so
-    * a crashed admit is re-runnable after deleting the partial files.
-    * Column order matches [[writeIndex]]'s layout (id, vec + the
-    * partition column). */
+    * persisted centroids) and appended — existing files are never
+    * rewritten, so a crashed admit is re-runnable after deleting the
+    * partial files. Column order matches [[writeIndex]]'s layout (id,
+    * vec + the partition column). */
   def admitBatch(batch: DataFrame, centroids: Seq[(Long, Seq[Double])],
       indexPath: String, idCol: String, vecCol: String,
       cellCol: String = "ivf_cell"): Unit =
-    VectorSearch.assignCells(
+    Layout.writePartitioned(VectorSearch.assignCells(
         batch.select(col(idCol).cast("long").as("id"),
           col(vecCol).cast("array<double>").as("vec")),
-        "vec", centroids)
-      .withColumnRenamed("cell", cellCol)
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_, Seq(cellCol)))
-      .write.partitionBy(cellCol).mode("append").parquet(indexPath)
+        "vec", centroids).withColumnRenamed("cell", cellCol),
+      indexPath, Seq(cellCol), SaveMode.Append)
 
   /** Rewrite the index with one id-sorted file per cell — run on the
     * cadence that keeps [[cellOccupancy]].n_files bounded under
@@ -117,7 +113,7 @@ object VectorDedupIndex {
     * place); swap directories after validating. */
   def compactIndex(spark: SparkSession, indexPath: String,
       outPath: String, cellCol: String = "ivf_cell"): Unit =
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
+    Layout.compactPartitioned(spark, indexPath, outPath,
       Seq(cellCol), sortCols = Seq("id"))
 
   /** (cell, n_rows, n_files) — the maintenance dashboard: n_files
@@ -263,29 +259,26 @@ object VectorDedupIndex {
         col("cell"))
       .withColumn("new_ss",
         call_function("graft_dot", col("new_vec"), col("new_vec")))
-    val cells = nb.select("cell").distinct()
-      .collect().map(_.getLong(0)) // bounded by |centroids|
-    if (cells.isEmpty)
-      // an empty micro-batch probes nothing — empty pairs, not a crash
-      spark.emptyDataFrame.select(
-        lit(0L).as("corpus_id"), lit(0L).as("new_id"),
-        lit(0L).as("cell"), lit(0d).as("cos")).limit(0)
-    else {
-      // partition filter: prunes at plan time (PartitionFilters). The
-      // partition column reads back as int/string per discovery — cast
-      // to long AFTER the filter so the pruning literal types match.
-      val corpus = spark.read.parquet(indexPath)
-        .filter(col(cellCol).isin(cells: _*))
-        .select(col("id").as("corpus_id"), col("vec"),
-          col(cellCol).cast("long").as("cell"))
-        .withColumn("ss", call_function("graft_dot", col("vec"), col("vec")))
-      corpus.join(broadcast(nb), Seq("cell"))
-        .filter(col("corpus_id") =!= col("new_id"))
-        .withColumn("cos",
-          call_function("graft_dot", col("vec"), col("new_vec")) /
-            (sqrt(col("ss")) * sqrt(col("new_ss"))))
-        .filter(col("cos") >= tau)
-        .select(col("corpus_id"), col("new_id"), col("cell"), col("cos"))
+    Layout.prunedRead(spark, indexPath, nb.select(col("cell").as(cellCol)),
+        Seq(cellCol)) match {
+      case None =>
+        // an empty micro-batch probes nothing — empty pairs, not a crash
+        spark.emptyDataFrame.select(
+          lit(0L).as("corpus_id"), lit(0L).as("new_id"),
+          lit(0L).as("cell"), lit(0d).as("cos")).limit(0)
+      case Some(index) =>
+        // the partition column reads back as int/string per discovery
+        // — cast to long AFTER the pruning filter
+        index.select(col("id").as("corpus_id"), col("vec"),
+            col(cellCol).cast("long").as("cell"))
+          .withColumn("ss", call_function("graft_dot", col("vec"), col("vec")))
+          .join(broadcast(nb), Seq("cell"))
+          .filter(col("corpus_id") =!= col("new_id"))
+          .withColumn("cos",
+            call_function("graft_dot", col("vec"), col("new_vec")) /
+              (sqrt(col("ss")) * sqrt(col("new_ss"))))
+          .filter(col("cos") >= tau)
+          .select(col("corpus_id"), col("new_id"), col("cell"), col("cos"))
     }
   }
 }

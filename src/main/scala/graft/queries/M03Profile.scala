@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Phase-level profile of the m03_video_admit_probe lifecycle arm —
   * r18 measurement harness (guide §1: isolate the expensive query,
   * attribute time operator by operator before changing anything).
-  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.M03Profile"
+  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.queries.M03Profile"
   */
 object M03Profile {
   def main(args: Array[String]): Unit = {
@@ -14,6 +14,7 @@ object M03Profile {
       Runtime.getRuntime.availableProcessors().toString)
     val s = graft.GraftSession.builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    import graft.io.Layout
     import graft.multimodal.VideoFrameIndex
 
     def t[A](label: String)(f: => A): A = {
@@ -30,9 +31,9 @@ object M03Profile {
       val idx = java.nio.file.Files.createTempDirectory("m03p_idx").toString
       val slice0 = frames.filter(col("vnum") % 3 === 0).drop("vnum")
       t("count")(System.err.println("  rows=" + slice0.count()))
-      t("write-noop")(VideoFrameIndex.bandRows(slice0)
-        .withColumn("bgroup", pmod(col("bkey"), lit(VideoFrameIndex.GroupMod)))
-        .repartition(col("band"), col("bgroup"))
+      t("write-noop")(Layout.clusterForPartitionedWrite(
+          Layout.withBandGroup(VideoFrameIndex.bandRows(slice0)),
+          Layout.BandCols)
         .write.format("noop").mode("overwrite").save())
       t("write")(VideoFrameIndex.writeIndex(slice0, idx))
       t("admit1")(VideoFrameIndex.admitBatch(

@@ -260,16 +260,16 @@ object ProductQuantizer {
     encode(index.assigned, vecCol, model, codeCol)
       .select(col("id"), col("cell"), col(codeCol))
 
-  /** Persist the IVFPQ index: (id, pq_codes) `partitionBy(cell)` —
-    * the FAISS IVFPQ layout as a lake table. Composes the two 100 TB
+  /** Persist the IVFPQ index: (id, pq_codes) partitioned on `cell` —
+    * the FAISS IVFPQ layout as a lake table, written through the
+    * [[graft.io.Layout]] standing-index core. Composes the two 100 TB
     * properties in ONE artifact: probes read `nprobe` DIRECTORIES
     * ([[searchIvfPq]]'s static cell filter → parquet PartitionFilters)
-    * and each row costs m bytes (codes, no vectors). Same layout
-    * contract as [[VectorSearch.writeIvfIndexed]]. */
+    * and each row costs m bytes (codes, no vectors). */
   def writeIvfPq(index: VectorSearch.IvfIndex, vecCol: String,
       model: PqModel, path: String, codeCol: String = "pq_codes"): Unit =
-    encodeIvf(index, vecCol, model, codeCol)
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
+    graft.io.Layout.writePartitioned(encodeIvf(index, vecCol, model,
+      codeCol), path, Seq("cell"))
 
   /** Read a [[writeIvfPq]] layout back for [[searchIvfPq]]. */
   def readIvfPq(spark: org.apache.spark.sql.SparkSession, path: String)
@@ -307,15 +307,8 @@ object ProductQuantizer {
     val probed: Seq[Long] = qrows.toSeq
       .flatMap(r => graft.plans.KnnIvfCatalog.probeCells(
         meta, r.getSeq[Double](1))).distinct
-    // literals must match the column's type — a widening cast around
-    // the partition column would defeat partition pruning (parquet
-    // partition discovery infers INT for small cell ids)
-    val cellLits: Seq[Any] =
-      encodedCells.schema("cell").dataType match {
-        case org.apache.spark.sql.types.IntegerType => probed.map(_.toInt)
-        case _ => probed
-      }
-    val prunedCells = encodedCells.filter(col("cell").isInCollection(cellLits))
+    val prunedCells = graft.io.Layout.keepPartitions(encodedCells,
+      Seq("cell"), probed.map(Seq(_)))
     val tablesLit = typedLit(qrows.map(r =>
       model.lookupTable(r.getSeq[Double](1).toArray).toSeq).toSeq)
     val qidxLit = typedLit(qrows.map(_.getLong(0)).zipWithIndex.toMap)

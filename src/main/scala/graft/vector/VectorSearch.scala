@@ -1,7 +1,9 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+
+import graft.io.Layout
 
 /** Library-level similarity-search API (the reference's
   * `generate_embeddings.py` search path, V5/V6, re-expressed as plans):
@@ -18,8 +20,8 @@ import org.apache.spark.sql.functions._
   * product, and never a per-query single-task sort. `IvfIndex` embeds
   * the (tiny) centroid set as a *literal array expression*, so cluster
   * assignment is a pure map-side argmin — no crossJoin, no shuffle, no
-  * window — and probes read only `nprobe` cells; written
-  * `partitionBy("cell")` that becomes real partition pruning.
+  * window — and probes read only `nprobe` cells; persisted through
+  * [[writeIvfIndexed]] that becomes real partition pruning.
   */
 object VectorSearch {
 
@@ -166,19 +168,18 @@ object VectorSearch {
     require(centroids.nonEmpty, "centroids must be non-empty")
     val ids = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    val index = IvfIndex(null, centroids)
-    index.copy(assigned = graft.io.Layout.clusterForPartitionedWrite(
-      assignCells(ids, "vec", centroids), Seq("cell")))
+    IvfIndex(assignCells(ids, "vec", centroids), centroids)
   }
 
-  /** Persist the IVF-assigned corpus `partitionBy(cell)` — the layout
-    * the optimizer-level prune ([[graft.plans.IvfPruneRule]]) turns
-    * into real partition pruning. The cell column name doubles as the
-    * registry key, so pick a distinctive one. */
+  /** Persist the IVF-assigned corpus partitioned on its cell — the
+    * layout the optimizer-level prune ([[graft.plans.IvfPruneRule]])
+    * turns into real partition pruning; written through the
+    * [[graft.io.Layout]] standing-index core. The cell column name
+    * doubles as the registry key, so pick a distinctive one. */
   def writeIvfIndexed(index: IvfIndex, path: String,
       cellCol: String = "ivf_cell"): Unit =
-    index.assigned.withColumnRenamed("cell", cellCol)
-      .write.partitionBy(cellCol).mode("overwrite").parquet(path)
+    Layout.writePartitioned(index.assigned.withColumnRenamed("cell", cellCol),
+      path, Seq(cellCol))
 
   /** Read an IVF-partitioned corpus back AND register its centroids
     * for optimizer-level cell pruning: any subsequent
@@ -245,55 +246,58 @@ object VectorSearch {
       own.bitwiseXOR(lit(1L << b))): _*)
   }
 
-  /** Persist the LSH-bucketed corpus `partitionBy(bucket)` — the same
-    * layout contract as [[writeIvfIndexed]]: probes then become REAL
+  private def lshRows(df: DataFrame, idCol: String, vecCol: String,
+      planes: Seq[Seq[Double]], bucketCol: String): DataFrame =
+    df.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("vec"))
+      .withColumn(bucketCol, lshBucket(col("vec"), planes))
+
+  /** Queries exploded across their probe `bucket`s. */
+  private def lshQueries(queries: DataFrame, qidCol: String,
+      qvecCol: String, planes: Seq[Seq[Double]],
+      multiprobe: Boolean): DataFrame =
+    queries.select(col(qidCol).as("query_id"),
+      col(qvecCol).cast("array<double>").as("qvec"))
+      .withColumn("bucket",
+        explode(lshProbes(col("qvec"), planes, multiprobe)))
+
+  /** Persist the LSH-bucketed corpus partitioned on its bucket through
+    * the [[graft.io.Layout]] standing-index core — the same layout
+    * contract as [[writeIvfIndexed]]: probes then become REAL
     * partition pruning on read (asserted in VectorSearchSpec). */
   def writeLshIndexed(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], path: String,
       bucketCol: String = "lsh_bucket"): Unit =
-    corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .withColumn(bucketCol, lshBucket(col("vec"), planes))
-      .write.partitionBy(bucketCol).mode("overwrite").parquet(path)
+    Layout.writePartitioned(lshRows(corpus, idCol, vecCol, planes,
+      bucketCol), path, Seq(bucketCol))
 
   /** Append a batch into a persisted LSH index — [[writeLshIndexed]]'s
     * nightly other half, completing the admit contract across all
     * three persisted layouts ([[graft.ops.VectorDedupIndex.admitBatch]]
     * on IVF cells, [[graft.ops.TextDedupIndex.admitBatch]] on MinHash
     * bands, this on sign buckets): bucket map-side with the SAME
-    * plane literals, hash-cluster so each admit leaves exactly one
-    * new file per touched bucket directory, `mode(append)`. Bucketing
-    * is row-local and deterministic, so admitted rows are
-    * indistinguishable from build-time rows — probes see them
-    * immediately (spec pins admit ≡ rebuild, search-for-search);
-    * compact with [[graft.io.Layout.compactPartitioned]] on the usual
-    * cadence. */
+    * plane literals and append. Bucketing is row-local and
+    * deterministic, so admitted rows are indistinguishable from
+    * build-time rows — probes see them immediately (spec pins admit ≡
+    * rebuild, search-for-search); compact with
+    * [[graft.io.Layout.compactPartitioned]] on the usual cadence. */
   def admitLshIndexed(batch: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Double]], path: String,
       bucketCol: String = "lsh_bucket"): Unit =
-    batch.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .withColumn(bucketCol, lshBucket(col("vec"), planes))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq(bucketCol)))
-      .write.partitionBy(bucketCol).mode("append").parquet(path)
+    Layout.writePartitioned(lshRows(batch, idCol, vecCol, planes,
+      bucketCol), path, Seq(bucketCol), SaveMode.Append)
 
-  /** Probe a persisted LSH index: the query set's probe buckets are
-    * computed driver-side (queries are small by contract) and pushed
-    * as a partition filter, so only the probed bucket directories are
-    * read; exact top-k within them. */
+  /** Probe a persisted LSH index: only the bucket directories the
+    * query set probes are read ([[graft.io.Layout.prunedRead]];
+    * queries are small by contract); exact top-k within them. */
   def searchLshIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, qidCol: String, qvecCol: String,
       planes: Seq[Seq[Double]], k: Int, multiprobe: Boolean = true,
       bucketCol: String = "lsh_bucket"): DataFrame = {
-    val q = queries.select(col(qidCol).as("query_id"),
-      col(qvecCol).cast("array<double>").as("qvec"))
-      .withColumn("bucket",
-        explode(lshProbes(col("qvec"), planes, multiprobe)))
-    val probeBuckets = q.select("bucket").distinct()
-      .collect().map(_.getLong(0))
-    val corpus = spark.read.parquet(path)
-      .filter(col(bucketCol).isin(probeBuckets: _*))
+    val q = lshQueries(queries, qidCol, qvecCol, planes, multiprobe)
+    val corpus = Layout.prunedRead(spark, path,
+        q.select(col("bucket").as(bucketCol)), Seq(bucketCol))
+      .getOrElse(spark.read.parquet(path).limit(0))
       .withColumnRenamed(bucketCol, "bucket")
     rankTopK(
       corpus.join(broadcast(q), Seq("bucket"))
@@ -308,13 +312,8 @@ object VectorSearch {
       queries: DataFrame, qidCol: String, qvecCol: String,
       planes: Seq[Seq[Double]], k: Int, multiprobe: Boolean = true)
       : DataFrame = {
-    val tagged = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("bucket", lshBucket(col("vec"), planes))
-    val q = queries.select(col(qidCol).as("query_id"),
-      col(qvecCol).cast("array<double>").as("qvec"))
-      .withColumn("bucket",
-        explode(lshProbes(col("qvec"), planes, multiprobe)))
+    val tagged = lshRows(corpus, idCol, vecCol, planes, "bucket")
+    val q = lshQueries(queries, qidCol, qvecCol, planes, multiprobe)
     rankTopK(
       tagged.join(broadcast(q), Seq("bucket"))
         .withColumn("dist", l2(col("vec"), col("qvec"))),

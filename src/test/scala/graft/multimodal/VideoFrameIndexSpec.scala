@@ -151,7 +151,7 @@ class VideoFrameIndexSpec extends SparkSpec {
     VideoFrameIndex.writeIndex(corpus, path, bands = 8)
     // simulate an index written before the sidecar existed
     java.nio.file.Files.delete(
-      java.nio.file.Paths.get(path, VideoFrameIndex.MetaFile))
+      java.nio.file.Paths.get(path, graft.io.Layout.MetaFile))
     assert(VideoFrameIndex.indexBands(spark, path) === 8)
     val got = VideoFrameIndex
       .probePairs(spark, path, batch, hammingMax = 6, bands = 8)._1

@@ -150,7 +150,34 @@ class TextDedupIndexSpec extends SparkSpec {
     assert(bandDirs.length == 4) // k=8, rowsPerBand=2
     bandDirs.foreach { d =>
       val groups = d.listFiles().count(_.getName.startsWith("bgroup="))
-      assert(groups <= TextDedupIndex.GroupMod, d.toString)
+      assert(groups <= graft.io.Layout.GroupMod, d.toString)
     }
+  }
+
+  test("banding travels with the index: a k/rowsPerBand mismatch " +
+      "fails loudly; a pre-sidecar index stays readable unchecked") {
+    val path = java.nio.file.Files
+      .createTempDirectory("lsh_meta").toString
+    TextDedupIndex.writeIndex(corpus, path)
+    assert(graft.io.Layout.readIndexMeta(spark, path) ===
+      Some(Map("k" -> 8L, "rowsPerBand" -> 2L, "groupMod" -> 64L)))
+    // 4-hash band keys against an index of 2-hash band keys join to
+    // nothing — must throw, not return zero candidates
+    val e = intercept[IllegalArgumentException] {
+      TextDedupIndex.probeCandidates(spark, path, batch, rowsPerBand = 4)
+    }
+    assert(e.getMessage.contains("rowsPerBand=2") &&
+      e.getMessage.contains("rowsPerBand=4"), e.getMessage)
+    val a = intercept[IllegalArgumentException] {
+      TextDedupIndex.admitBatch(batch, path, k = 16)
+    }
+    assert(a.getMessage.contains("k=8") && a.getMessage.contains("k=16"),
+      a.getMessage)
+    assert(TextDedupIndex.probeCandidates(spark, path, batch).count() > 0)
+    // an index written before the sidecar existed is not checked
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(path, graft.io.Layout.MetaFile))
+    assert(TextDedupIndex
+      .probeCandidates(spark, path, batch, rowsPerBand = 4).count() == 0)
   }
 }
