@@ -75,8 +75,11 @@ object Examples {
         col("vec_id"))
       .limit(3)
     knn.select("vec_id").show()
-    println("knn plan: " + (if (knn.queryExecution.executedPlan.toString
-      .contains("KnnTopKGlobal")) "KnnTopK rewrite" else "stock"))
+    val knnPlan = knn.queryExecution.executedPlan.toString
+    println("knn plan: " + (if (knnPlan.contains("KnnTopKGlobal") &&
+      !knnPlan.contains("KnnTopKLocal") &&
+      !knnPlan.contains("Exchange SinglePartition")) "KnnTopK rewrite (one exec)"
+      else "stock"))
 
     // --- training-data prep (round 5): pack, dedupe, decontaminate ---
     val withTok = docs.select(col("doc_id"),

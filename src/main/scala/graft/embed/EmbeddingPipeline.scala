@@ -85,12 +85,19 @@ object EmbeddingPipeline {
     * written declaratively — distance to the query literal projected
     * off the store, `orderBy(dist, product_code).limit(k)` — so
     * [[graft.plans.KnnTopKRewrite]] plans it as per-partition bounded
-    * heaps merged on one partition. `rank` is `row_number()` over the
-    * same order and runs on that merged, already-sorted partition;
-    * the hits then left-join the catalog (a hit with no catalog row
-    * keeps null catalog columns). Rows with a null embedding are not
-    * searchable. Plain mode returns at most k rows, ranked 1..k, and
-    * scans `store` once.
+    * heaps merged on one partition, inside one exec. `rank` is
+    * `row_number()` over the same order and runs on that merged,
+    * already-sorted partition; the hits then left-join the catalog (a
+    * hit with no catalog row keeps null catalog columns). Rows with a
+    * null embedding are not searchable. Plain mode returns at most k
+    * rows, ranked 1..k, and scans `store` once.
+    *
+    * Serving: pass a cached (persisted and materialized) `store` and
+    * `catalog`. The catalog's broadcast is then built by the first
+    * query and kept until the catalog is unpersisted
+    * ([[org.apache.spark.sql.graft.BroadcastReuse]]), so every later
+    * plain-mode query runs as one Spark job. An uncached catalog is
+    * re-read and re-broadcast by every query.
     *
     * `withTies = true` switches the contract from "some k rows in
     * distance order" to SQL's `rank() <= k` (top-k WITH TIES): every

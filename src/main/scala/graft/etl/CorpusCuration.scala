@@ -117,13 +117,8 @@ object CorpusCuration {
     // stage 4 (optional): eval-set substring scrub — [checkpoint seam]
     val scrubbed = evalDocs match {
       case Some(ev) =>
-        val dict = ev
-          .select(explode(array_distinct(transform(
-            shingles(tokens(col(textCol)), cfg.scrubSpanTokens),
-            g => graft.functions.TextOps.md5Long60(g)))).as("h"))
-          .distinct()
-        RepeatedSpans
-          .strip(deboiler, dict, idCol, textCol, cfg.scrubSpanTokens)
+        RepeatedSpans.strip(deboiler, evalDictOf(ev, textCol, cfg), idCol,
+            textCol, cfg.scrubSpanTokens)
           .filter(col(textCol) =!= "").persist()
       case None => deboiler
     }

@@ -884,5 +884,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // registered-index cell pruning on top of the KnnTopK rewrite
     ext.injectOptimizerRule(graft.plans.IvfPruneRule)
     ext.injectPlannerStrategy(graft.plans.KnnTopKStrategy)
+    // a broadcast of cached data is built once and reused across queries
+    // until that data is unpersisted (see BroadcastReuse)
+    ext.injectQueryStagePrepRule(org.apache.spark.sql.graft.BroadcastReuseRule)
   }
 }

@@ -5,9 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Descending, Expression, IntegerLiteral, InterpretedOrdering, Literal, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Limit, LogicalPlan, Project, Sort, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{ShuffledRowRDD, SparkPlan, SparkStrategy, UnaryExecNode, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics, SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.types.DoubleType
 
 import graft.expr.{CosineSimilarity, DotProduct, L2Distance}
@@ -31,10 +33,14 @@ import graft.expr.{CosineSimilarity, DotProduct, L2Distance}
   * O(d + log k) per row. Tiebreak keys are only evaluated on distance
   * ties.
   *
-  * Scale shape is identical to TakeOrderedAndProject: per-partition
-  * bounded heaps (map-side, no materialized sort), then an AllTuples
-  * exchange carrying at most `partitions × k` rows into the final
-  * k-merge. Nothing is ever globally sorted.
+  * Scale shape is TakeOrderedAndProject's: per-partition bounded heaps
+  * (map-side, no materialized sort), then a shuffle carrying at most
+  * `partitions × k` rows into the final k-merge on one partition.
+  * Nothing is ever globally sorted. The shuffle is internal to the one
+  * exec — the planner adds no exchange, so under AQE a query ending in
+  * a top-k is one job, not a shuffle stage plus a result stage — and
+  * it is skipped when the input has one partition (the local heap is
+  * the answer). Zero input partitions yield one empty partition.
   *
   * Session flags: `spark.graft.knnTopK.enabled` (default true),
   * `spark.graft.knnTopK.maxK` (default 10000 — above that a heap per
@@ -101,48 +107,49 @@ case class KnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** Plans [[KnnTopK]] as a local/global [[KnnTopKExec]] pair; the global
-  * side requires AllTuples, so EnsureRequirements inserts the standard
-  * single-partition exchange between them. */
+/** Plans [[KnnTopK]] as one [[KnnTopKExec]]. */
 case class KnnTopKStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case KnnTopK(k, order, child) =>
-      val local = KnnTopKExec(k, order, global = false, planLater(child))
-      KnnTopKExec(k, order, global = true, local) :: Nil
+    case KnnTopK(k, order, child) => KnnTopKExec(k, order, planLater(child)) :: Nil
     case _ => Nil
   }
 }
 
-/** Bounded-heap top-k by a once-evaluated double key.
+/** Bounded-heap top-k by a once-evaluated double key, output on one
+  * partition in final sorted order.
   *
-  * Each instance streams its input through a size-k binary heap keyed
-  * on the cached primary double (direction + null ordering honored);
-  * rows are only copied when they enter the heap. Secondary sort keys
-  * go through an [[InterpretedOrdering]] and are consulted ONLY on
-  * primary-key ties. Output is emitted in final sorted order.
+  * Each input partition streams through a size-k binary heap keyed on
+  * the cached primary double (direction + null ordering honored); rows
+  * are only copied when they enter the heap. Secondary sort keys go
+  * through an [[InterpretedOrdering]] and are consulted ONLY on
+  * primary-key ties. Over more than one partition the ≤ partitions × k
+  * survivors shuffle to one partition and merge through the same heap
+  * (the shape of Spark's `TakeOrderedAndProjectExec.doExecute`).
   */
-case class KnnTopKExec(limit: Int, order: Seq[SortOrder], global: Boolean,
-    child: SparkPlan) extends UnaryExecNode {
+case class KnnTopKExec(limit: Int, order: Seq[SortOrder], child: SparkPlan)
+    extends UnaryExecNode {
 
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  private lazy val readMetrics =
+    SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
+  private lazy val writeMetrics =
+    SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
+  override lazy val metrics: Map[String, SQLMetric] =
+    readMetrics ++ writeMetrics + ("numOutputRows" ->
+      SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override def output: Seq[Attribute] = child.output
   override def outputOrdering: Seq[SortOrder] = order
-  override def outputPartitioning: Partitioning =
-    if (global) SinglePartition else child.outputPartitioning
-  override def requiredChildDistribution: Seq[Distribution] =
-    if (global) AllTuples :: Nil else UnspecifiedDistribution :: Nil
-  override def nodeName: String =
-    if (global) "KnnTopKGlobal" else "KnnTopKLocal"
+  override def outputPartitioning: Partitioning = SinglePartition
+  // the name plan assertions and the benchmark's plan census match on
+  override def nodeName: String = "KnnTopKGlobal"
 
   protected override def doExecute(): RDD[InternalRow] = {
     val k = limit
     val ord = order
     val childOutput = child.output
     val numOutputRows = longMetric("numOutputRows")
-    child.execute().mapPartitions { iter =>
+    // the k best rows of one partition, best first
+    val topK = (iter: Iterator[InternalRow]) => {
       val head = ord.head
       val boundHead = BindReferences.bindReference(head.child, childOutput)
       // +1 on ascending-better, -1 on descending-better, applied to the
@@ -206,9 +213,19 @@ case class KnnTopKExec(limit: Int, order: Seq[SortOrder], global: Boolean,
       var i = 0
       while (heap.size > 0) { out(i) = heap.poll(); i += 1 }
       // heap drains worst-first; reverse for ascending output order
-      numOutputRows += out.length
       out.reverseIterator.map(_.row)
     }
+    val input = child.execute()
+    val merged = input.getNumPartitions match {
+      case 0 => sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      case 1 => input.mapPartitions(topK)
+      case _ =>
+        new ShuffledRowRDD(ShuffleExchangeExec.prepareShuffleDependency(
+            input.mapPartitions(topK), childOutput, SinglePartition,
+            new UnsafeRowSerializer(childOutput.size), writeMetrics),
+          readMetrics).mapPartitions(topK)
+    }
+    merged.mapPartitions(_.map { r => numOutputRows += 1; r })
   }
 
   override protected def withNewChildInternal(c: SparkPlan): KnnTopKExec =

@@ -286,7 +286,7 @@ object VectorSuite extends QuerySuite {
   /** v08 — the declarative pgvector idiom `ORDER BY l2_distance(v, q)
     * LIMIT k` (ref `generate_embeddings.py:418-452`), left for the
     * [[graft.plans.KnnTopKRewrite]] optimizer rule to take over: the
-    * executed plan is a KnnTopKLocal/Global pair (PlanSpec-asserted),
+    * executed plan is one KnnTopK exec (PlanSpec-asserted),
     * not a Sort — distances evaluated once per row into bounded heaps.
     * Quantized vectors keep the distance sums exact cross-engine. */
   private val v08 = GraftQuery(

@@ -4,14 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{SparkPlan, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkSpec
 import graft.plans.KnnTopKExec
 
 /** [[EmbeddingPipeline.search]]'s contract: plain mode is the pgvector
-  * `ORDER BY embedding <-> q LIMIT k` idiom planned as the KnnTopK
-  * operator pair over ONE store scan, ranked on the merged partition,
+  * `ORDER BY embedding <-> q LIMIT k` idiom planned as one KnnTopK
+  * exec over ONE store scan, ranked on the merged partition,
   * then left-joined to the catalog; results equal a plain-Scala brute
   * force, null embeddings are not searchable, and k bounds the row
   * count even when product codes repeat in the store. */
@@ -61,8 +62,9 @@ class SearchPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
   }
 
-  test("plain mode: KnnTopK pair, one store scan, no grouped aggregate " +
-      "or nested-loop join, rank on the merged partition") {
+  test("plain mode: one KnnTopK exec, one store scan, no shuffle " +
+      "exchange, grouped aggregate or nested-loop join, rank on the " +
+      "merged partition") {
     val rows = storeRows(200)
     val store = storeOf(rows, 3).persist()
     try {
@@ -71,18 +73,18 @@ class SearchPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         catalogOf(rows.map(_._1)), query, embedder, k = 5)
       val plan = nodes(hits)
       val names = plan.map(_.nodeName)
-      assert(names.contains("KnnTopKGlobal"), names)
-      assert(names.contains("KnnTopKLocal"), names)
+      assert(names.count(_ == "KnnTopKGlobal") == 1, names)
+      assert(!names.contains("KnnTopKLocal"), names)
+      // the merge to one partition is internal to the exec
+      assert(!plan.exists(_.isInstanceOf[ShuffleExchangeExec]), names)
       assert(!names.exists(_.startsWith("ObjectHashAggregate")), names)
       assert(!names.exists(_.startsWith("BroadcastNestedLoopJoin")), names)
       assert(plan.count(_.isInstanceOf[InMemoryTableScanExec]) == 1, names)
       // row_number reads KnnTopKGlobal's sorted single partition as is
       assert(!plan.exists(_.isInstanceOf[SortExec]), names)
       val windows = plan.collect { case w: WindowExec => w }
-      assert(windows.size == 1 && (windows.head.child match {
-        case k: KnnTopKExec => k.global
-        case _ => false
-      }), names)
+      assert(windows.size == 1 &&
+        windows.head.child.isInstanceOf[KnnTopKExec], names)
     } finally store.unpersist(blocking = true)
   }
 

@@ -1,17 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.embed.{EmbeddingPipeline, HashingEmbedder}
 
 /** The whole-operator kNN rewrite: rule fires on the declarative
-  * pattern, the physical plan carries the local/global exec pair with
-  * the single-partition exchange between them, and the results are
-  * row-identical to Spark's un-rewritten Sort+Limit on every edge the
-  * operator claims to handle (desc similarity, nulls, ties, k > n,
-  * multi-partition inputs). */
-class KnnTopKSpec extends SparkSpec {
+  * pattern, the physical plan carries ONE top-k exec with its merge to
+  * a single partition inside it (no planned exchange), and the results
+  * are row-identical to Spark's un-rewritten Sort+Limit on every edge
+  * the operator claims to handle (desc similarity, nulls, ties, k > n,
+  * multi-partition, one-partition and zero-partition inputs). */
+class KnnTopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def corpus: DataFrame = {
     import spark.implicits._
@@ -37,13 +41,72 @@ class KnnTopKSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  test("rule rewrites orderBy(l2).limit(k) into the KnnTopK exec pair") {
+  /** The one KnnTopKExec of an executed plan. */
+  private def knnExec(df: DataFrame): KnnTopKExec = {
+    df.collect()
+    val execs = collect(df.queryExecution.executedPlan) {
+      case k: KnnTopKExec => k
+    }
+    assert(execs.size == 1, df.queryExecution.executedPlan)
+    execs.head
+  }
+
+  /** Shuffles in the lineage the top-k adds to its child's. */
+  private def addedShuffles(exec: KnnTopKExec): Int = {
+    def shuffles(rdd: RDD[_]) =
+      "ShuffledRowRDD\\[".r.findAllMatchIn(rdd.toDebugString).size
+    shuffles(exec.execute()) - shuffles(exec.child.execute())
+  }
+
+  test("rule rewrites orderBy(l2).limit(k) into one KnnTopK exec") {
     val df = l2q(corpus).orderBy(col("dist"), col("id")).limit(10)
     val p = executed(df)
     assert(p.contains("KnnTopKGlobal"), p)
-    assert(p.contains("KnnTopKLocal"), p)
-    assert(p.contains("Exchange SinglePartition"), p)
+    assert(!p.contains("KnnTopKLocal"), p)
+    assert(!p.contains("Exchange SinglePartition"), p)
     assert(!p.contains("TakeOrderedAndProject"), p)
+    // 7 input partitions: the local heaps merge through an internal
+    // shuffle onto the one output partition
+    val exec = knnExec(df)
+    assert(exec.child.execute().getNumPartitions == 7)
+    assert(exec.execute().getNumPartitions == 1)
+    assert(addedShuffles(exec) == 1)
+  }
+
+  test("one input partition: the local heap is the answer, no shuffle") {
+    val build = () => l2q(corpus.coalesce(1))
+      .orderBy(col("dist"), col("id")).limit(12)
+    val df = build()
+    val exec = knnExec(df)
+    assert(exec.child.execute().getNumPartitions == 1)
+    assert(exec.execute().getNumPartitions == 1)
+    assert(addedShuffles(exec) == 0)
+    val stock = withRewrite(on = false) { build().collect() }
+    assert(df.collect().toSeq == stock.toSeq)
+  }
+
+  test("zero input partitions: 0 rows on one partition, no exception") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("vec", ArrayType(DoubleType))))
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    val df = l2q(empty).orderBy(col("dist"), col("id")).limit(5)
+    val exec = knnExec(df)
+    assert(exec.child.execute().getNumPartitions == 0)
+    assert(exec.execute().getNumPartitions == 1)
+    assert(df.collect().isEmpty)
+  }
+
+  test("an empty store searches to 0 rows") {
+    val schema = StructType(Seq(StructField("product_code", StringType),
+      StructField("embedding", ArrayType(FloatType))))
+    val store = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    import spark.implicits._
+    val catalog = Seq(("P1", "one")).toDF("product_code", "product_name")
+    val hits = EmbeddingPipeline.search(store, catalog, "any query",
+      HashingEmbedder(8), k = 3)
+    assert(hits.collect().isEmpty)
   }
 
   test("projection AFTER the limit (the x04 bench shape) still rewrites") {

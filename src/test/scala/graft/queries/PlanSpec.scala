@@ -157,9 +157,10 @@ class PlanSpec extends SparkSpec {
       .findFirstIn(p.toLowerCase).isDefined, p)
   }
 
-  test("v08 executes through the KnnTopK pair, not a global sort") {
+  test("v08 executes through one KnnTopK exec, not a global sort") {
     val p = plan("v08_topk_rewrite")
-    assert(p.contains("KnnTopKGlobal") && p.contains("KnnTopKLocal"), p)
+    assert(p.contains("KnnTopKGlobal") && !p.contains("KnnTopKLocal"), p)
+    assert(!p.contains("Exchange SinglePartition"), p)
     assert(!p.contains("TakeOrderedAndProject"), p)
   }
 
