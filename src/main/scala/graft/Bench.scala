@@ -26,10 +26,9 @@ import org.apache.spark.sql.SparkSession
   * the harness keeps only the LAST ~2000 chars of stdout, and the full
   * per-query maps are several KB, so the JSON line start was always
   * truncated away. stdout gets ONE compact line (< 1 KB): the engine
-  * total, the total including the deliberately-stock A/B baselines
-  * (x01 lambda-fold, x05 stock top-k, x13 range-join as-of), and a
-  * headline subset of per-query steady times. The complete
-  * per-iteration record goes to BENCH_FULL.json.
+  * total over every timed arm and a headline subset of per-query
+  * steady times. The complete per-iteration record goes to
+  * BENCH_FULL.json.
   */
 object Bench {
 
@@ -45,14 +44,6 @@ object Bench {
     "v08_topk_rewrite", "v11_lsh_ann", "s02_hll_distinct",
     "s04_cms_freq", "s08_pack_bins", "p03_curation_funnel",
     "x02_knn_codegen", "x03_knn_ivf")
-
-  /** Deliberately-unoptimized comparison arms of the A/B pairs
-    * (x01 vs x02, x05 vs x04, x13 vs x12, x19 vs t13, x20 vs t04).
-    * They exist to show the win, and belong in the artifact, but not
-    * in the engine's headline total. */
-  private[graft] val AbBaselines =
-    Set("x01_knn_lambda", "x05_topk_stock", "x13_asof_rangejoin",
-      "x19_repetition_exploded", "x20_shingles_hof", "x34_video_repair")
 
   // ---- telemetry probes (deltas computed around each iteration) ----
 
@@ -337,7 +328,7 @@ object Bench {
       .findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0.1")
     // ONE compact line, printed last so it survives tail truncation
     println(BenchReport.headlineJson(
-      results, iters, sfNum, Headline, AbBaselines, detailFile,
+      results, iters, sfNum, Headline, detailFile,
       baseline = baseline, baselineStatus = baselineStatus))
   }
 
@@ -499,8 +490,9 @@ object Bench {
           }
           -2.0
         } else result
-      // conf hygiene: A/B builders (x04/x05 kNN rewrite, x09/x10 bloom
-      // join) pin session flags; reset so none leaks into later queries
+      // conf hygiene: A/B builders (x09/x10 bloom join, x22/x23 skew
+      // join, x27 split size) pin session flags; reset so none leaks
+      // into later queries
       graft.queries.BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
       val (gcMs1, gcN1) = gcStats()
       val cpu1 = processCpuMs()

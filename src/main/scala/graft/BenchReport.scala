@@ -340,18 +340,15 @@ object BenchReport {
 
   /** The one compact stdout line (< 1 KB — the harness keeps only a
     * ~2000-char stdout tail). `headline` picks the per-family subset;
-    * `abBaselines` are deliberately-stock comparison arms excluded
-    * from the engine total. */
+    * the engine total sums every arm's steady time. */
   def headlineJson(results: Seq[QueryResult], iters: Int, sfNum: String,
-      headline: Seq[String], abBaselines: Set[String],
-      detailFile: String = "BENCH_FULL.json",
+      headline: Seq[String], detailFile: String = "BENCH_FULL.json",
       hostCores: Int = Runtime.getRuntime.availableProcessors(),
       baseline: Option[Map[String, Double]] = None,
       baselineStatus: String = "off:not_reported"): String = {
     val steady = results.map(q => q.name -> steadyOf(q.times)).toMap
-    def totalOf(m: Map[String, Double]) = m.values.map(_.max(0.0)).sum
     def r3(d: Double) = f"$d%.3f"
-    val engineTotal = totalOf(steady.filterNot(kv => abBaselines(kv._1)))
+    val engineTotal = steady.values.map(_.max(0.0)).sum
     val head = headline.flatMap(h => steady.get(h).map(h -> _))
     val (extSecTotal, _) = extCpuTotals(results)
     obj(Seq(
@@ -382,7 +379,6 @@ object BenchReport {
       // run — the evidence line for "regressed flags with clean
       // within-run signals" (near 0 ⇒ host quiet, suspect the pin)
       "ext_cpu_sec" -> jsNum(math.rint(extSecTotal * 10) / 10),
-      "total_with_ab_baselines" -> r3(totalOf(steady)),
       "detail" -> jsStr(detailFile),
       "queries" -> obj(head.map { case (k, v) => k -> r3(v) })))
   }

@@ -47,10 +47,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap
 
-  /** Bench-only arms (A/B baselines, engine-internal sketches, k-means
-    * IVF): timed by [[Bench]] and plan-asserted in specs, but NOT part
-    * of the correctness record — they either duplicate an oracled
-    * twin's output by construction or have no cross-engine oracle. */
+  /** Bench-only arms (flag A/B pairs, engine-internal sketches, k-means
+    * IVF, lifecycle arms): timed by [[Bench]] and plan-asserted in
+    * specs, but NOT part of the correctness record — they either
+    * duplicate a twin's output by construction or have no cross-engine
+    * oracle. */
   def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
     BenchSuite.benchOnly.map(q => q.name -> q.run).toMap
 

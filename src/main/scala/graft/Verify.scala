@@ -58,8 +58,8 @@ object Verify {
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
       }
-      // conf hygiene: builders may pin session flags (x04/x05 and
-      // x09/x10 A/Bs, v08) — reset so one query's flag never leaks
+      // conf hygiene: builders may pin session flags (the x09/x10 and
+      // x22/x23 A/Bs, x27) — reset so one query's flag never leaks
       // into the next
       finally graft.queries.BenchSuite.PinnedConfKeys
         .foreach(spark.conf.unset)

@@ -119,109 +119,4 @@ object GroupedTopK {
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
     (key, id) => f(key, id)
   }
-
-  /** Unsigned lexicographic byte compare — identical to Spark's
-    * UTF8String binary ordering AND DuckDB's collation-free string
-    * compare, which is why the STRING-item aggregate below carries ids
-    * as UTF-8 bytes: a Java `String.compareTo` (UTF-16 code units)
-    * would order astral-plane characters differently from both
-    * engines' window forms. */
-  private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  /** Grouped top-k with a STRING item (top URLs per domain, top
-    * bigrams per language): same partial/final bounded-heap shape as
-    * [[TopKAggregator]], buffer = parallel (keys, utf8-byte ids)
-    * arrays sorted ascending by (key, id-bytes), length ≤ k. */
-  final class TopKBytesAggregator(k: Int)
-      extends Aggregator[(Long, Array[Byte]),
-        (Array[Long], Array[Array[Byte]]), Seq[(Long, Array[Byte])]] {
-    require(k >= 1, s"topK: k must be >= 1, got $k")
-
-    private type Buf = (Array[Long], Array[Array[Byte]])
-
-    override def zero: Buf =
-      (Array.emptyLongArray, Array.empty[Array[Byte]])
-
-    private def insert(buf: Buf, key: Long, id: Array[Byte]): Buf = {
-      val (ks, ids) = buf
-      val n = ks.length
-      if (n == k) {
-        val c = java.lang.Long.compare(key, ks(n - 1))
-        if (c > 0 || (c == 0 && cmpBytes(id, ids(n - 1)) >= 0)) return buf
-      }
-      var lo = 0
-      var hi = n
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        val c = java.lang.Long.compare(ks(mid), key)
-        if (c < 0 || (c == 0 && cmpBytes(ids(mid), id) <= 0)) lo = mid + 1
-        else hi = mid
-      }
-      val outN = math.min(n + 1, k)
-      val ok = new Array[Long](outN)
-      val oi = new Array[Array[Byte]](outN)
-      System.arraycopy(ks, 0, ok, 0, lo)
-      System.arraycopy(ids, 0, oi, 0, lo)
-      ok(lo) = key
-      oi(lo) = id
-      val tail = outN - lo - 1
-      if (tail > 0) {
-        System.arraycopy(ks, lo, ok, lo + 1, tail)
-        System.arraycopy(ids, lo, oi, lo + 1, tail)
-      }
-      (ok, oi)
-    }
-
-    override def reduce(b: Buf, in: (Long, Array[Byte])): Buf =
-      insert(b, in._1, in._2)
-
-    override def merge(a: Buf, b: Buf): Buf = {
-      if (b._1.isEmpty) return a
-      if (a._1.isEmpty) return b
-      val na = a._1.length
-      val nb = b._1.length
-      val outN = math.min(na + nb, k)
-      val ok = new Array[Long](outN)
-      val oi = new Array[Array[Byte]](outN)
-      var i = 0
-      var j = 0
-      var o = 0
-      while (o < outN) {
-        val takeA = j >= nb || (i < na && {
-          val c = java.lang.Long.compare(a._1(i), b._1(j))
-          c < 0 || (c == 0 && cmpBytes(a._2(i), b._2(j)) <= 0)
-        })
-        if (takeA) { ok(o) = a._1(i); oi(o) = a._2(i); i += 1 }
-        else { ok(o) = b._1(j); oi(o) = b._2(j); j += 1 }
-        o += 1
-      }
-      (ok, oi)
-    }
-
-    override def finish(b: Buf): Seq[(Long, Array[Byte])] =
-      Seq.tabulate(b._1.length)(i => (b._1(i), b._2(i)))
-
-    override def bufferEncoder: Encoder[Buf] =
-      ExpressionEncoder[(Array[Long], Array[Array[Byte]])]()
-    override def outputEncoder: Encoder[Seq[(Long, Array[Byte])]] =
-      ExpressionEncoder[Seq[(Long, Array[Byte])]]()
-  }
-
-  /** Column-API entry for the string-item form: pass the id through
-    * `encode(id, 'UTF-8')`, decode on output — see
-    * [[graft.ops.Ops.topKPerGroupAggStr]]. */
-  def topKBytes(k: Int): (Column, Column) => Column = {
-    val f = udaf(new TopKBytesAggregator(k),
-      Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    (key, id) => f(key, id)
-  }
 }

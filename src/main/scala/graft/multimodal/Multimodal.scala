@@ -303,7 +303,7 @@ object Multimodal {
     // countDistinct(frame) = Σ nf over distinct matched hashes.
     // (Requires the documented input contract: one row per
     // (video, frame_idx).) Measured at sf1: the m02 8-band arm's join
-    // shrinks ~12× and x34's corpus re-pair ~8×.
+    // shrinks ~12× and the full-corpus re-pair ~8×.
     val uniq = hashed.groupBy("video", "phash")
       .agg(count(lit(1)).as("nf"))
     // banding shared with the standing index so the batch path and

@@ -11,26 +11,16 @@ import org.apache.spark.sql.expressions.Window
 object Ops {
 
   /** Deterministic keep-first dedup (D1/W3; pandas
-    * `drop_duplicates(keep='first')`): one shuffle on the dedup key,
-    * explicit total order, no global sort. */
-  def dedupKeepFirst(df: DataFrame, keys: Seq[String],
-      orderBy: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Keep-first dedup as an AGGREGATE — same semantics as
-    * [[dedupKeepFirst]] for ASCENDING order columns, but with map-side
-    * partial aggregation: `min(struct(orderCols ++ rest))` compares
-    * lexicographically, so each input partition collapses to one
-    * candidate row per key before the exchange, where the window form
-    * shuffles and sorts EVERY row. The remaining payload columns sit
-    * after the order columns in the struct, so order ties still resolve
-    * totally (deterministic output even when `orderCols` alone is not a
-    * total order — the window form is nondeterministic there).
-    * Output columns keep the input order. Nulls sort first, matching
-    * the window form's ascending null ordering. */
+    * `drop_duplicates(keep='first')`) as an AGGREGATE: per key, the row
+    * whose ASCENDING `orderCols` sort first. `min(struct(orderCols ++
+    * rest))` compares lexicographically, so Spark plans a map-side
+    * partial aggregate — each input partition collapses to one
+    * candidate row per key before the exchange, where a
+    * `row_number()` window would shuffle and sort EVERY row. The
+    * remaining payload columns sit after the order columns in the
+    * struct, so order ties still resolve totally (deterministic output
+    * even when `orderCols` alone is not a total order). Output columns
+    * keep the input order. Nulls sort first. */
   def dedupKeepFirstAgg(df: DataFrame, keys: Seq[String],
       orderCols: Seq[String]): DataFrame = {
     val rest = df.columns.filterNot(c =>
@@ -44,33 +34,19 @@ object Ops {
   }
 
   /** Per-group top-k (generalized O1): partitioned window, never a
-    * global sort; ties broken by the caller's order columns. */
+    * global sort; ties broken by the caller's order columns. For
+    * `k` under `spark.sql.optimizer.windowGroupLimitThreshold` (1000)
+    * Spark's InferWindowGroupLimit plans a partial WindowGroupLimit
+    * below the exchange, so each map task ships at most k rows per
+    * group even when a handful of groups would otherwise funnel the
+    * whole input through a handful of tasks (PlanSpec pins the prune
+    * on x07, t04 and s11). Keep the filter directly on `rankCol`: an
+    * expression over the rank before the filter blocks the rule. */
   def topKPerGroup(df: DataFrame, partitionCols: Seq[String],
       orderBy: Seq[Column], k: Int, rankCol: String = "rank"): DataFrame = {
     val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderBy: _*)
     df.withColumn(rankCol, row_number().over(w))
       .filter(col(rankCol) <= k)
-  }
-
-  /** Per-group top-k for LOW-CARDINALITY groups (a handful of
-    * languages/categories over a 100 TB corpus): the plain partitioned
-    * window funnels each group through ONE task, so parallelism equals
-    * group count. Two levels instead: rows are hashed into `buckets`
-    * sub-groups, each (group, bucket) takes a local top-k (parallelism
-    * = groups × buckets), and the final window ranks only the ≤ k ×
-    * buckets survivors per group. Identical output to [[topKPerGroup]]
-    * whenever `orderBy` is a total order within the group (each global
-    * top-k row is by definition in its bucket's top-k). */
-  def topKPerGroupScalable(df: DataFrame, partitionCols: Seq[String],
-      orderBy: Seq[Column], k: Int, rankCol: String = "rank",
-      buckets: Int = 64): DataFrame = {
-    val pre = df.withColumn("__b",
-      pmod(hash(df.columns.map(col): _*), lit(buckets)))
-    val w1 = Window.partitionBy((partitionCols :+ "__b").map(col): _*)
-      .orderBy(orderBy: _*)
-    val pruned = pre.withColumn("__r1", row_number().over(w1))
-      .filter(col("__r1") <= k).drop("__r1", "__b")
-    topKPerGroup(pruned, partitionCols, orderBy, k, rankCol)
   }
 
   /** Per-group top-k as a mergeable AGGREGATE
@@ -108,32 +84,6 @@ object Ops {
     grouped.select(groupCols.map(col) ++ Seq(
       outKey.as(keyName),
       col("__e").getField("_2").as(idName),
-      (col("__pos") + 1).cast("int").as(rankCol)): _*)
-  }
-
-  /** [[topKPerGroupAgg]] with a STRING item column (top bigrams per
-    * language, top URLs per domain): the id rides as UTF-8 bytes so
-    * tie ordering is the binary string order both engines' window
-    * forms use. Same map-side bounded-heap scale shape. */
-  def topKPerGroupAggStr(df: DataFrame, groupCols: Seq[String],
-      key: Column, id: Column, k: Int,
-      keyName: String = "key", idName: String = "id",
-      rankCol: String = "rank", descending: Boolean = false): DataFrame = {
-    val keyL = key.cast("long")
-    val encKey = if (descending) bitwise_not(keyL) else keyL
-    val topk = graft.functions.GroupedTopK.topKBytes(k)
-    val grouped = df
-      .filter(key.isNotNull && id.isNotNull)
-      .groupBy(groupCols.map(col): _*)
-      .agg(topk(encKey, encode(id, "UTF-8")).as("__topk"))
-      .select(groupCols.map(col) :+
-        posexplode(col("__topk")).as(Seq("__pos", "__e")): _*)
-    val outKey =
-      if (descending) bitwise_not(col("__e").getField("_1"))
-      else col("__e").getField("_1")
-    grouped.select(groupCols.map(col) ++ Seq(
-      outKey.as(keyName),
-      decode(col("__e").getField("_2"), "UTF-8").as(idName),
       (col("__pos") + 1).cast("int").as(rankCol)): _*)
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Repetition-based quality gates (Gopher §A1.1-style repetitious-text
@@ -17,10 +17,9 @@ import org.apache.spark.sql.functions._
   * corpus scale the previous explode→groupBy form shuffled the
   * tokenized corpus (larger than the corpus itself) twice; this form
   * shuffles nothing and pipelines with whatever scan/filter surrounds
-  * it. The sort+`aggregate`-fold composition is kept as
-  * [[signalsFold]] (the pure-DataFrame ladder rung) and the exploded
-  * form as [[signalsExploded]] for the measured A/B (bench arm x19).
-  * Fractions are ONE double division of two exact longs, so the
+  * it. The exploded form is kept as [[signalsExploded]], the
+  * relational reference RepetitionGatesSpec checks [[signals]]
+  * against. Fractions are ONE double division of two exact longs, so the
   * numbers (and the threshold flags) are bit-reproducible across
   * engines (oracled as t13). */
 object RepetitionGates {
@@ -30,30 +29,6 @@ object RepetitionGates {
       topUnigram: Double = 0.30,
       topBigram: Double = 0.18,
       dupBigram: Double = 0.40)
-
-  /** Run-length stats of `arr` after an in-row sort: struct(mx = the
-    * longest run = the top item's multiplicity, dup = total mass in
-    * runs longer than 1 = items occurring more than once). Null-safe
-    * compare so null elements group like a groupBy null group. */
-  private def runStats(arr: Column): Column = {
-    def closed(acc: Column) =
-      acc.getField("dup") +
-        when(acc.getField("run") > 1, acc.getField("run")).otherwise(0L)
-    aggregate(
-      array_sort(arr),
-      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"),
-        lit(0L).as("mx"), lit(0L).as("dup")),
-      (acc, x) =>
-        when(acc.getField("run") > 0 && (x <=> acc.getField("prev")),
-          struct(x.as("prev"), (acc.getField("run") + 1).as("run"),
-            greatest(acc.getField("mx"), acc.getField("run") + 1).as("mx"),
-            acc.getField("dup").as("dup")))
-        .otherwise(
-          struct(x.as("prev"), lit(1L).as("run"),
-            greatest(acc.getField("mx"), lit(1L)).as("mx"),
-            closed(acc).as("dup"))),
-      acc => struct(acc.getField("mx").as("mx"), closed(acc).as("dup")))
-  }
 
   private def fractions(stats: DataFrame, idCol: String, t: Thresholds) =
     stats
@@ -96,33 +71,11 @@ object RepetitionGates {
     fractions(stats, idCol, t)
   }
 
-  /** The pure-DataFrame zero-shuffle form: sort the token (and
-    * bigram) array in-row, fold run-length stats with `aggregate`.
-    * Same plan shape as [[signals]] (exchange-free projection) but
-    * the higher-order fold is CodegenFallback — kept to document the
-    * compose-first ladder rung below the codegen expression. */
-  def signalsFold(df: DataFrame, idCol: String, toksCol: String,
-      t: Thresholds = Thresholds()): DataFrame = {
-    val bi = graft.functions.TextOps.shingles(col("__ws"), 2)
-    val stats = df
-      .select(col(idCol).as("__id"), col(toksCol).as("__ws"))
-      .filter(size(col("__ws")) >= 2)
-      .select(col("__id"),
-        size(col("__ws")).cast("long").as("n_uni"),
-        runStats(col("__ws")).as("us"),
-        (size(col("__ws")) - 1).cast("long").as("n_bi"),
-        runStats(bi).as("bs"))
-      .select(col("__id"),
-        col("us.mx").as("top_uni"), col("n_uni"),
-        col("bs.mx").as("top_bi"), col("n_bi"),
-        col("bs.dup").as("dup_bi"))
-    fractions(stats, idCol, t)
-  }
-
-  /** The pre-round-11 explode→groupBy form (shuffles key on the
-    * high-cardinality id×token, so it also scales — but it moves the
-    * whole tokenized corpus through two exchanges where [[signals]]
-    * moves nothing). Kept for the measured A/B; x19 pins the margin. */
+  /** The explode→groupBy form (shuffles key on the high-cardinality
+    * id×token, so it also scales — but it moves the whole tokenized
+    * corpus through two exchanges where [[signals]] moves nothing).
+    * Kept as the relational reference the spec checks [[signals]]
+    * against. */
   def signalsExploded(df: DataFrame, idCol: String, toksCol: String,
       t: Thresholds = Thresholds()): DataFrame = {
     val toks = df.select(col(idCol).as("__id"), col(toksCol).as("ws"))

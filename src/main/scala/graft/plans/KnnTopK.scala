@@ -42,9 +42,11 @@ import graft.expr.{CosineSimilarity, DotProduct, L2Distance}
   * it is skipped when the input has one partition (the local heap is
   * the answer). Zero input partitions yield one empty partition.
   *
-  * Session flags: `spark.graft.knnTopK.enabled` (default true),
-  * `spark.graft.knnTopK.maxK` (default 10000 — above that a heap per
-  * partition stops being obviously right; fall through to Spark).
+  * Session flags: `spark.graft.knnTopK.maxK` (default 10000 — above
+  * that a heap per partition stops being obviously right; fall through
+  * to Spark) and `spark.graft.knnTopK.enabled` (default true). Nothing
+  * in the library or the registry sets the latter; it is the switch
+  * KnnTopKSpec flips to get the stock plan as its reference.
   */
 case class KnnTopK(limit: Int, order: Seq[SortOrder], child: LogicalPlan)
     extends UnaryNode {

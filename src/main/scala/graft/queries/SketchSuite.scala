@@ -468,9 +468,10 @@ object SketchSuite extends QuerySuite {
     * audiences (the Apache-DataSketches theta use case: estimate
     * |A ∩ B| for every pair of segments from fixed-size sketches,
     * never from the raw sets). Per type, the sketch is the K smallest
-    * distinct user-id hashes (two-level ranked — the low-cardinality
-    * type key never funnels the deduped hash set through |types|
-    * tasks); per pair, θ = the union sketch's K-th minimum and the
+    * distinct user-id hashes (a per-type window whose partial
+    * WindowGroupLimit prunes map-side — the low-cardinality type key
+    * never funnels the deduped hash set through |types| tasks); per
+    * pair, θ = the union sketch's K-th minimum and the
     * estimate is |common hashes < θ| × 2^32 / θ — integer arithmetic
     * to a single final division, so both engines agree bitwise. All
     * post-sketch frames are |types|²×K rows: tiny, like every sketch
@@ -484,7 +485,7 @@ object SketchSuite extends QuerySuite {
           .select(col("event_type"),
             graft.functions.TextOps.md5Long32(col("user_id")).as("h"))
           .distinct()
-        val sk = graft.ops.Ops.topKPerGroupScalable(hashed,
+        val sk = graft.ops.Ops.topKPerGroup(hashed,
           Seq("event_type"), Seq(col("h").asc), K, "rn").drop("rn")
         val types = sk.select(col("event_type")).distinct()
         val pairs = types.select(col("event_type").as("ta"))

@@ -123,15 +123,16 @@ object TextSuite extends QuerySuite {
           explode(shingles(tokens(col("text")), 2)).as("bigram"))
         .groupBy("lang", "bigram")
         .agg(count(lit(1)).as("cnt"))
-      // two-level top-k: |langs| is tiny, so a single per-lang window
-      // would bound parallelism by the language count at any scale.
-      // Measured choice vs Ops.topKPerGroupAggStr (the grouped
-      // bounded-heap aggregate): the input here is the ALREADY-REDUCED
-      // (lang, bigram) vocabulary, where the Tungsten window sort beats
-      // the string-item udaf's per-row decode (1.6 s vs 2.3 s at
+      // |langs| is tiny, so the per-lang window would bound parallelism
+      // by the language count — but Spark plans a partial
+      // WindowGroupLimit below the exchange (PlanSpec), so each map task
+      // ships ≤ 5 rows per language. Measured choice vs a grouped
+      // bounded-heap string aggregate: the input here is the
+      // ALREADY-REDUCED (lang, bigram) vocabulary, where the Tungsten
+      // window sort beat the udaf's per-row decode (1.6 s vs 2.3 s at
       // sf0.1); the aggregate form wins when the ranked input is
-      // raw-corpus-scale (see c10, and x11 vs x07/x08 for long items)
-      graft.ops.Ops.topKPerGroupScalable(counted, Seq("lang"),
+      // raw-corpus-scale (see c10, and x11 vs x07 for long items)
+      graft.ops.Ops.topKPerGroup(counted, Seq("lang"),
           Seq(col("cnt").desc, col("bigram").asc), 5, "rnk")
         .withColumn("rnk", col("rnk").cast("long"))
     },

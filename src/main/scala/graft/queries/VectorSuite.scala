@@ -292,9 +292,6 @@ object VectorSuite extends QuerySuite {
   private val v08 = GraftQuery(
     "v08_topk_rewrite",
     (s, dir) => {
-      // self-contained: the rewrite must drive this query even if a
-      // sibling bench query toggled the session flag off
-      s.conf.set("spark.graft.knnTopK.enabled", "true")
       val corpus = emb(s, dir)
         .select(col("vec_id"), col("qv").cast("array<double>").as("qvd"))
       val qvec: Seq[Double] = corpus.filter(col("vec_id") === 0)
@@ -740,8 +737,8 @@ object VectorSuite extends QuerySuite {
   private val v14 = GraftQuery(
     "v14_blocked_neardup",
     (s, dir) => {
-      // codegen integer distance/dot throughout (the x01-vs-x02
-      // lesson: the zip_with lambda fold is ~10x the flat generated
+      // codegen integer distance/dot throughout (the zip_with lambda
+      // fold measured ~10x the flat generated
       // loop on a pair-heavy plan), and each vector's sum-of-squares
       // is computed ONCE at assignment, not once per pair
       val cents = emb(s, dir).filter(col("vec_id") < 8)

@@ -66,7 +66,7 @@ class BenchReportSpec extends AnyFunSuite {
     val doc = JsonMethods.parse(fullJson(2, "d", "32", rs))
     assert((doc \ "ext_cpu_sec_total") == JDouble(2.5))
     assert((doc \ "ext_cores_max") == JDouble(2.0))
-    val line = JsonMethods.parse(headlineJson(rs, 2, "0.1", Nil, Set()))
+    val line = JsonMethods.parse(headlineJson(rs, 2, "0.1", Nil))
     assert((line \ "ext_cpu_sec") == JDouble(2.5))
     // -1 "unsupported" sentinels contribute nothing, not garbage
     val (tot0, mx0) = extCpuTotals(results)
@@ -80,16 +80,17 @@ class BenchReportSpec extends AnyFunSuite {
     assert((doc \ "detail" \ "q_fast" \ "tainted") == JBool(false))
   }
 
-  test("headline line is compact, excludes A/B baselines from the " +
-      "engine total, and counts failures/taints") {
+  test("headline line is compact, totals every arm, and counts " +
+      "failures/taints") {
     val line = headlineJson(results :+
-        QueryResult("x_ab_baseline", Seq(iter(100.0))),
-      3, "0.1", Seq("q_fast", "q_flaky"), Set("x_ab_baseline"))
+        QueryResult("x_arm", Seq(iter(100.0))),
+      3, "0.1", Seq("q_fast", "q_flaky"))
     assert(line.length < 1000, s"headline line too long: ${line.length}")
     val doc = JsonMethods.parse(line)
-    // 0.5 + 2.0 + 0 + 0.3 (q_after_zombie counted; negatives clamp 0)
-    assert((doc \ "value") == JDouble(2.8))
-    assert((doc \ "total_with_ab_baselines") == JDouble(102.8))
+    // 0.5 + 2.0 + 0 + 0.3 + 100 (q_after_zombie counted; negatives
+    // clamp 0)
+    assert((doc \ "value") == JDouble(102.8))
+    assert((doc \ "total_with_ab_baselines") == JNothing)
     assert((doc \ "failed") == JInt(0))
     assert((doc \ "timed_out") == JInt(1))
     assert((doc \ "tainted") == JInt(2))
@@ -156,7 +157,7 @@ class BenchReportSpec extends AnyFunSuite {
     assert(gs.map(g => g \ "forked") == List(JBool(true), JBool(false)))
     assert(gs.map(g => g \ "warmup") == List(JString("q_clean"), JNull))
     val line = JsonMethods.parse(headlineJson(rs, 2, "0.1", Nil,
-      Set.empty, hostCores = 32))
+      hostCores = 32))
     assert((line \ "contended") == JInt(1))
   }
 
@@ -236,7 +237,7 @@ class BenchReportSpec extends AnyFunSuite {
     assert((doc \ "detail" \ "q_unpinned" \ "regressed_vs_baseline")
       == JBool(false))
     val line = JsonMethods.parse(headlineJson(rs, 3, "0.1", Nil,
-      Set.empty, hostCores = 32, baseline = pins))
+      hostCores = 32, baseline = pins))
     assert((line \ "regressed") == JInt(1))
   }
 
@@ -250,7 +251,7 @@ class BenchReportSpec extends AnyFunSuite {
     // fixture fingerprint recorded (-1 here: "d" is not a real dir)
     assert((doc \ "env" \ "fixture_bytes") == JInt(-1))
     val line = JsonMethods.parse(headlineJson(rs, 1, "0.1", Nil,
-      Set.empty, baselineStatus =
+      baselineStatus =
         "off:pins were measured at bench_heap_mb=8192"))
     assert((line \ "pins") ==
       JString("off:pins were measured at bench_heap_mb=8192"))
@@ -317,13 +318,5 @@ class BenchReportSpec extends AnyFunSuite {
     val num = JsonMethods.parse(fullJson(1, "d", "32",
       Seq(QueryResult("q", Seq(iter(1.0))))))
     assert((num \ "cpus") == JInt(32))
-  }
-
-  test("AbBaselines name every stock arm and nothing else: all are " +
-      "registered bench-only queries (typo guard)") {
-    val benchOnly = SparkEntry.benchOnlyQueries.keySet
-    val unknown = Bench.AbBaselines -- benchOnly
-    assert(unknown.isEmpty,
-      s"AbBaselines not in the bench-only registry: $unknown")
   }
 }

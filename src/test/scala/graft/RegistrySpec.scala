@@ -36,9 +36,9 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("the registry is at its committed size (catches silent drops)") {
-    assert(SparkEntry.queries.size === 175,
+    assert(SparkEntry.queries.size === 174,
       s"oracle surface moved: ${SparkEntry.queries.size} (update the docs!)")
-    assert(SparkEntry.benchOnlyQueries.size === 31,
+    assert(SparkEntry.benchOnlyQueries.size === 25,
       s"bench arms moved: ${SparkEntry.benchOnlyQueries.size}")
   }
 }

@@ -8,11 +8,18 @@ class OpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("dedupKeepFirst keeps the row that sorts first per key") {
-    val df = Seq(("a", 2, "second"), ("a", 1, "first"), ("b", 9, "only"))
-      .toDF("k", "ord", "tag")
-    val out = Ops.dedupKeepFirst(df, Seq("k"), Seq(col("ord")))
-      .select("k", "tag").as[(String, String)].collect().toMap
-    assert(out == Map("a" -> "first", "b" -> "only"))
+    // "n": a NULL order value sorts first. "c": 60 rows tie on ord, so
+    // the payload (tag) breaks the tie — the same row at any partitioning
+    val rows = Seq(("a", Some(2), "second"), ("a", Some(1), "first"),
+      ("b", Some(9), "only"), ("n", Some(1), "one"), ("n", None, "null")) ++
+      (0 until 60).map(i => ("c", Some(0), s"t${(i * 37) % 60}"))
+    def kept(parts: Int) = Ops.dedupKeepFirstAgg(
+      rows.toDF("k", "ord", "tag").repartition(parts), Seq("k"), Seq("ord"))
+    val one = kept(1)
+    assert(one.columns.toSeq == Seq("k", "ord", "tag"))
+    assert(one.select("k", "tag").as[(String, String)].collect().toMap ==
+      Map("a" -> "first", "b" -> "only", "n" -> "null", "c" -> "t0"))
+    assert(kept(7).collect().toSet == one.collect().toSet)
   }
 
   test("topKPerGroup returns k ranked rows per group") {
@@ -21,22 +28,6 @@ class OpsSpec extends SparkSpec {
     assert(out.count() == 6)
     assert(out.filter($"g" === 0).select("v").as[Int].collect().sorted
       .toSeq == Seq(16, 18, 20))
-  }
-
-  test("topKPerGroupScalable agrees with the single-window form") {
-    // unique v per (g, v) makes the order total, so the two-level
-    // prune must reproduce the direct window exactly — ranks included
-    val df = (1 to 500).map(i => (i % 5, i * 7 % 501, s"t$i"))
-      .toDF("g", "v", "tag")
-    val direct = Ops.topKPerGroup(df, Seq("g"),
-      Seq(col("v").desc, col("tag").asc), 4)
-      .select("g", "v", "tag", "rank").as[(Int, Int, String, Int)]
-      .collect().toSet
-    val scalable = Ops.topKPerGroupScalable(df, Seq("g"),
-      Seq(col("v").desc, col("tag").asc), 4, buckets = 8)
-      .select("g", "v", "tag", "rank").as[(Int, Int, String, Int)]
-      .collect().toSet
-    assert(scalable == direct)
   }
 
   test("topKPerGroupAgg agrees with the window form, both directions") {
@@ -70,28 +61,6 @@ class OpsSpec extends SparkSpec {
         "v", "id", "rank", descending = true)
       .as[(Int, Long, Long, Int)].collect().toSet
     assert(desc == Set((0, 3L, 3L, 1), (0, -5L, 1L, 2), (1, 7L, 5L, 1)))
-  }
-
-  test("topKPerGroupAggStr agrees with the window form, binary tie order") {
-    // items share counts so ties force the string comparator — include
-    // an astral-plane char (🂡 U+1F0A1) where UTF-16 code-unit order
-    // and UTF-8 binary order disagree vs '�': binary order must win
-    val df = Seq(
-      (0, 5L, "apple"), (0, 5L, "zebra"), (0, 5L, "�-repl"),
-      (0, 5L, new String(Character.toChars(0x1F0A1)) + "-card"),
-      (0, 9L, "top"), (1, 3L, "only")).toDF("g", "cnt", "item")
-    for (desc <- Seq(false, true)) {
-      val order = if (desc) Seq(col("cnt").desc, col("item").asc)
-        else Seq(col("cnt").asc, col("item").asc)
-      val windowed = Ops.topKPerGroup(df, Seq("g"), order, 3)
-        .select("g", "cnt", "item", "rank").as[(Int, Long, String, Int)]
-        .collect().toSet
-      val agg = Ops.topKPerGroupAggStr(df, Seq("g"), col("cnt"),
-          col("item"), 3, "cnt", "item", "rank", descending = desc)
-        .select("g", "cnt", "item", "rank").as[(Int, Long, String, Int)]
-        .collect().toSet
-      assert(agg == windowed, s"descending=$desc")
-    }
   }
 
   test("upsertByKey replaces same-key rows, keeps the rest, rejects drift") {

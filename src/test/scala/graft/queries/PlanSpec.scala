@@ -98,15 +98,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("x07's window form keeps stock partial WindowGroupLimit pruning") {
-    // the A/B window arm relies on Spark's InferWindowGroupLimit for
-    // its map-side prune (the reason it isn't catastrophic at 3
-    // groups); note the rule is BLOCKED by any expression over the
-    // rank column (e.g. the .cast(long) the oracle registry applies
-    // BEFORE filtering) — which is why the kNN family ranks through
-    // the GroupedTopK aggregate instead of relying on it
-    val p = plan("x07_topk_direct")
-    assert(p.contains("WindowGroupLimit"),
-      s"x07 lost the stock partial group-limit prune:\n$p")
+    // the low-cardinality top-k arms rely on Spark's
+    // InferWindowGroupLimit for their map-side prune (the reason a
+    // 3-group window isn't catastrophic): a Partial WindowGroupLimit
+    // must sit below the exchange, the Final one above it. The rule is
+    // BLOCKED by any expression over the rank column before the filter
+    // (e.g. a .cast(long) applied BEFORE filtering) — which is why the
+    // kNN family ranks through the GroupedTopK aggregate instead
+    for (q <- Seq("x07_topk_direct", "t04_top_bigrams", "s11_kmv_overlap")) {
+      val p = plan(q)
+      val lines = p.linesIterator.toSeq
+      val partial = lines.indexWhere(l =>
+        l.contains("WindowGroupLimit") && l.contains("Partial"))
+      val exchange = lines.lastIndexWhere(l => l.contains("Exchange"),
+        math.max(partial, 0))
+      val fin = lines.lastIndexWhere(l =>
+        l.contains("WindowGroupLimit") && l.contains("Final"),
+        math.max(exchange, 0))
+      assert(partial >= 0 && exchange >= 0 && fin >= 0,
+        s"$q lost the stock partial group-limit prune:\n$p")
+    }
   }
 
   test("r04 keep-first dedup aggregates partially — no window sort") {
