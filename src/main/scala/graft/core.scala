@@ -101,40 +101,11 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // r18 join-strategy audit (guide §3.1) — BOTH knobs measured,
-      // both kept at stock; the env overrides remain for deployments:
-      //  - preferSortMergeJoin=false (plan-time SHJ) regressed the
-      //    corpus-vs-corpus joins in x26 ~1.4× (big per-partition
-      //    builds, 2-4× GC) and won nothing the broadcast planner
-      //    wasn't already taking — estimates pick SHJ exactly where
-      //    it's risky;
-      //  - maxShuffledHashJoinLocalMapThreshold=64m (the AQE runtime
-      //    rewrite) showed NO measurable effect in a clean alternating
-      //    A/B (d08/d12/j01 at sf1, 2 rounds each): AQE's own
-      //    partition coalescing targets advisoryPartitionSizeInBytes
-      //    (64 MB), so post-shuffle partitions sit AT the threshold
-      //    and the rewrite rarely fires; the one earlier run that
-      //    suggested a 2× win was a contended-host artifact. Raising
-      //    the threshold well above the advisory size is the knob a
-      //    deployment would turn — with its own memory headroom, not
-      //    ours to default.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "0"))
+      // join strategy, parquet codec and output committer stay at
+      // Spark's stock values: the r18/r19 A/Bs kept stock
+      // (OPTIMIZATION_r18.md, OPTIMIZATION_r19.md; GraftSessionSpec
+      // pins the four effective values)
       .config("spark.sql.session.timeZone", "UTC")
-      // r19 parquet-codec knob (guide §6): A/B'd zstd vs the snappy
-      // default on the write-heavy standing-index arms — see
-      // OPTIMIZATION_r19.md for the measured table; the default stays
-      // whatever the A/B justified, deployments override by env.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
-      // r19 committer knob (guide §6 small files): v1's job commit
-      // walks every partition directory SERIALLY on the driver —
-      // measured against v2 on the 256-directory standing-index
-      // writes; see OPTIMIZATION_r19.md before changing the default.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_FOC_VERSION", "1"))
       // grouped top-k (GroupedTopK) plans as ObjectHashAggregate; the
       // stock 128-key fallback would sort a partition's input by group
       // key once a scan sees >128 query ids. Buffers are ≤ 2k longs, so

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps.{shingles, tokens}
-import graft.ops.{Boilerplate, Packing, RepeatedSpans}
+import graft.ops.{Boilerplate, Dsir, Ops, Packing, RepeatedSpans}
 
 /** The full training-corpus curation lifecycle as ONE library call —
   * the composition a user of this engine actually runs nightly, each
@@ -12,9 +12,9 @@ import graft.ops.{Boilerplate, Packing, RepeatedSpans}
   *
   *   input → quality gate (t01's signals) → repetition gate (t09's
   *   duplicate 2-grams) → cross-doc boilerplate strip (t16) →
-  *   eval-set substring scrub (d15, optional) → exact dedup
-  *   keep-first (d01/r04) → deterministic epoch shuffle +
-  *   token-balanced shards (c14)
+  *   eval-set substring scrub (d15, optional) → DSIR selection
+  *   (optional) → exact dedup keep-first (d01/r04) → deterministic
+  *   epoch shuffle + token-balanced shards (c14)
   *
   * plus the per-stage (docs, tokens) drop report a pipeline owner
   * watches (p03's funnel, extended to the text-TRANSFORMING stages a
@@ -22,11 +22,13 @@ import graft.ops.{Boilerplate, Packing, RepeatedSpans}
   * change under strip/scrub).
   *
   * Scale shape: every stage is the already-audited plan of its oracle
-  * twin — nothing here introduces a new shuffle pattern. Intermediate
-  * stages are persisted so the report and the final corpus evaluate
-  * each stage once; call `release()` when done (a 100 TB run would
-  * checkpoint stages to the lake instead — swap persist for a writer
-  * at the marked seam).
+  * twin — nothing here introduces a new shuffle pattern. The funnel
+  * is ONE ordered stage list that both [[curate]] and
+  * [[curateIncremental]] fold over, so the batch and nightly forms
+  * cannot drift apart; they differ only in where the corpus-global
+  * models come from. [[curate]] persists every stage so the report
+  * and the final corpus evaluate each stage once; call `release()`
+  * when done.
   */
 object CorpusCuration {
 
@@ -54,6 +56,52 @@ object CorpusCuration {
     when(col(textCol) === "", 0L)
       .otherwise(size(tokens(col(textCol))).cast("long"))
 
+  /** One funnel stage: its report ordinal, its gate name and the step
+    * from its input survivors to its output survivors. */
+  private final case class Stage(ord: Int, gate: String,
+      step: DataFrame => DataFrame)
+
+  /** The in-row gates (stages 1+2). Filters only, so [[fitIndexes]],
+    * [[refreshIndexes]] and [[maybeRefresh]] fold them without the
+    * rest of the funnel. */
+  private def gates(textCol: String, cfg: Config): Seq[Stage] = {
+    val tk = tokens(col(textCol))
+    val n = size(tk).cast("long")
+    Seq(
+      Stage(1, "quality", _.filter(n >= cfg.minTokens &&
+        size(array_distinct(tk)).cast("double") / n >= cfg.minUniqRatio)),
+      Stage(2, "repetition", _.filter(
+        call_function("graft_dup_frac", tk, lit(2)) <= cfg.maxDup2Frac)))
+  }
+
+  /** The whole funnel, in order. The corpus-global models are
+    * functions of the stage's input: [[curate]] fits them inline over
+    * the survivors, [[curateIncremental]] hands in the standing
+    * [[Indexes]]. The last stage keeps its `__h` content hash, the key
+    * the incremental form anti-joins the seen-hash index on. */
+  private def funnel(idCol: String, textCol: String, cfg: Config,
+      boilerplate: DataFrame => DataFrame, evalDict: Option[DataFrame],
+      dsir: Option[DataFrame => Dsir.DsirModel]): Seq[Stage] = {
+    def nonEmpty(df: DataFrame) = df.filter(col(textCol) =!= "")
+    gates(textCol, cfg) ++ Seq(
+      Some(Stage(3, "boilerplate", df => nonEmpty(Boilerplate.stripWith(
+        df, boilerplate(df), idCol, textCol, cfg.boilerplateSegTokens)))),
+      evalDict.map(d => Stage(4, "decontaminate", df => nonEmpty(
+        RepeatedSpans.strip(df, d, idCol, textCol, cfg.scrubSpanTokens)))),
+      dsir.map(fit => Stage(5, "dsir_select", df => df.join(
+        Dsir.score(fit(df), df, Seq(idCol), textCol)
+          .filter(col("selected")).select(col(idCol)), Seq(idCol)))),
+      Some(Stage(6, "exact_dedup", df => Ops.dedupKeepFirstAgg(
+        df.withColumn("__h", md5(col(textCol).cast("binary"))),
+        keys = Seq("__h"), orderCols = Seq(idCol))))).flatten
+  }
+
+  /** `docs` through the two gates, unpersisted. */
+  private def gated(docs: DataFrame, idCol: String, textCol: String,
+      cfg: Config): DataFrame =
+    gates(textCol, cfg).foldLeft(docs.select(col(idCol), col(textCol)))(
+      (df, st) => st.step(df))
+
   /** `dsirTarget`: when set, an importance-selection stage runs after
     * the scrub — a [[graft.ops.Dsir]] model is fit on the
     * scrub-survivors with this predicate marking the target slice,
@@ -65,7 +113,6 @@ object CorpusCuration {
       dsirTarget: Option[org.apache.spark.sql.Column] = None,
       cfg: Config = Config()): Result = {
     val spark = docs.sparkSession
-    import spark.implicits._
 
     // guide §2 (scale-adaptive partitioning, r19): the funnel is six
     // map-heavy stages (tokenize gates, segmentation, strip, scrub,
@@ -91,90 +138,47 @@ object CorpusCuration {
       if (raw.rdd.getNumPartitions < target) raw.repartition(target)
       else raw
 
-    // stage 1+2: the in-row gates (one projection, two filters)
-    val quality = gateColumns(base, textCol)
-      .filter(col("__n") >= cfg.minTokens &&
-        col("__uniq") >= cfg.minUniqRatio)
-      .select(col(idCol), col(textCol), col("__dup2")).persist()
-    val repetition = quality
-      .filter(col("__dup2") <= cfg.maxDup2Frac)
-      .select(col(idCol), col(textCol)).persist()
+    // Models fit inline on each stage's survivors. The DSIR target
+    // predicate evaluates over the ORIGINAL docs frame (so it may
+    // reference metadata columns the funnel pared away); membership
+    // rides an id join back onto the survivors.
+    val stages = funnel(idCol, textCol, cfg,
+      boilerplate = Boilerplate.topSegments(_, idCol, textCol,
+        cfg.boilerplateSegTokens, cfg.boilerplateTopK),
+      evalDict = evalDocs.map(evalDictOf(_, textCol, cfg)),
+      dsir = dsirTarget.map(t => (df: DataFrame) => Dsir.fit(
+        df.join(docs.filter(t).select(col(idCol), lit(true).as("__t")),
+            Seq(idCol), "left")
+          .withColumn("__t", coalesce(col("__t"), lit(false))),
+        col("__t"), textCol, cfg.dsirBuckets)))
 
-    // stage 3: cross-doc boilerplate strip; fully-boilerplate docs
-    // drop. NOTE (r19, measured): persisting the segmentation here
-    // (it feeds both the dictionary build and the removal join — see
-    // Boilerplate.segmentsOf/stripSegments) was A/B'd at sf1 and came
-    // out NEUTRAL (10.08 s with vs 9.85 s without, same targeted
-    // conditions): materializing ~100 exploded segment rows per doc
-    // to storage costs about what the saved tokenize pass costs —
-    // guide §5's caching caveat. Kept unpersisted for simplicity;
-    // same for pre-tokenizing the scrub input.
-    val deboiler = Boilerplate
-      .strip(repetition, idCol, textCol,
-        cfg.boilerplateSegTokens, cfg.boilerplateTopK)
-      .filter(col(textCol) =!= "").persist()
+    // Every stage is persisted so the report and the final corpus
+    // evaluate each stage once. NOTE (r19, measured): also persisting
+    // the boilerplate segmentation (it feeds both the dictionary build
+    // and the removal) was A/B'd at sf1 and came out NEUTRAL (10.08 s
+    // with vs 9.85 s without): materializing ~100 exploded segment
+    // rows per doc costs about what the saved tokenize pass costs.
+    // Same for pre-tokenizing the scrub input.
+    val persisted = stages.scanLeft(base) { (df, st) =>
+      st.step(df).select(col(idCol), col(textCol)).persist()
+    }.tail
+    val deduped = persisted.last
 
-    // stage 4 (optional): eval-set substring scrub — [checkpoint seam]
-    val scrubbed = evalDocs match {
-      case Some(ev) =>
-        RepeatedSpans.strip(deboiler, evalDictOf(ev, textCol, cfg), idCol,
-            textCol, cfg.scrubSpanTokens)
-          .filter(col(textCol) =!= "").persist()
-      case None => deboiler
-    }
-
-    // stage 4.5 (optional): DSIR importance selection against the
-    // caller's target slice — fit on survivors, keep target-like
-    // docs. The predicate evaluates over the ORIGINAL docs frame (so
-    // it may reference metadata columns the funnel pared away);
-    // membership rides an id join back onto the survivors.
-    val selected = dsirTarget match {
-      case Some(t) =>
-        val flagged = scrubbed.join(
-          docs.filter(t).select(col(idCol), lit(true).as("__t")),
-          Seq(idCol), "left")
-          .withColumn("__t", coalesce(col("__t"), lit(false)))
-        val model = graft.ops.Dsir.fit(flagged, col("__t"), textCol,
-          cfg.dsirBuckets)
-        scrubbed.join(
-          graft.ops.Dsir.score(model, scrubbed, Seq(idCol), textCol)
-            .filter(col("selected")).select(col(idCol)),
-          Seq(idCol)).persist()
-      case None => scrubbed
-    }
-
-    // stage 5: exact content dedup, keep-first by id
-    val deduped = graft.ops.Ops.dedupKeepFirstAgg(
-      selected.withColumn("__h", md5(col(textCol).cast("binary"))),
-      keys = Seq("__h"), orderCols = Seq(idCol))
-      .drop("__h").persist()
-
-    // stage 6: deterministic epoch shuffle + token-balanced shards
+    // then: deterministic epoch shuffle + token-balanced shards
     val corpus = Packing.epochShards(
       deduped.withColumn("n_tokens", tokCount(textCol)),
       idCol, "n_tokens", cfg.nShards, cfg.epochSeed)
 
-    def stat(name: String, ord: Int, df: DataFrame): DataFrame =
+    def stat(ord: Int, gate: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(tokCount(textCol)), lit(0L)).as("n_tokens_total"))
-        .select(lit(ord.toLong).as("stage"), lit(name).as("gate"),
+        .select(lit(ord.toLong).as("stage"), lit(gate).as("gate"),
           col("n_docs"), col("n_tokens_total"))
-    val stages = Seq(
-      stat("input", 0, docs.select(col(idCol), col(textCol))),
-      stat("quality", 1, quality),
-      stat("repetition", 2, repetition),
-      stat("boilerplate", 3, deboiler)) ++
-      (if (evalDocs.isDefined)
-        Seq(stat("decontaminate", 4, scrubbed)) else Nil) ++
-      (if (dsirTarget.isDefined)
-        Seq(stat("dsir_select", 5, selected)) else Nil) ++
-      Seq(stat("exact_dedup", 6, deduped))
-    val report = stages.reduce(_ unionByName _)
+    val report = (stat(0, "input", raw) +:
+        stages.zip(persisted).map { case (st, df) => stat(st.ord, st.gate, df) })
+      .reduce(_ unionByName _)
 
-    Result(corpus, report,
-      Seq(quality, repetition, deboiler, deduped) ++
-        (if (evalDocs.isDefined) Seq(scrubbed) else Nil) ++
-        (if (dsirTarget.isDefined) Seq(selected) else Nil))
+    Result(corpus, report, persisted)
   }
 
   // ------------------------------------------------- incremental form
@@ -213,10 +217,9 @@ object CorpusCuration {
       textCol: String, evalDocs: Option[DataFrame] = None,
       dsir: Option[graft.ops.Dsir.DsirModel] = None,
       cfg: Config = Config()): Indexes = {
-    val repetitionSurvivors = gateStage(docs, idCol, textCol, cfg)
     Indexes(
-      boilerplate = graft.ops.Boilerplate.topSegments(
-        repetitionSurvivors, idCol, textCol,
+      boilerplate = Boilerplate.topSegments(
+        gated(docs, idCol, textCol, cfg), idCol, textCol,
         cfg.boilerplateSegTokens, cfg.boilerplateTopK),
       evalDict = evalDocs.map(evalDictOf(_, textCol, cfg)),
       dsir = dsir,
@@ -257,8 +260,8 @@ object CorpusCuration {
       dsir: Option[graft.ops.Dsir.DsirModel] = None,
       cfg: Config = Config()): Indexes =
     idx.copy(
-      boilerplate = graft.ops.Boilerplate.topSegments(
-        gateStage(accumulated, idCol, textCol, cfg), idCol, textCol,
+      boilerplate = Boilerplate.topSegments(
+        gated(accumulated, idCol, textCol, cfg), idCol, textCol,
         cfg.boilerplateSegTokens, cfg.boilerplateTopK),
       dsir = dsir.orElse(idx.dsir))
 
@@ -299,7 +302,7 @@ object CorpusCuration {
     *    rate falls below `decayRatio` × the corpus rate (and the
     *    corpus rate is non-trivial, `minRefRate` — a corpus with no
     *    boilerplate must not trip on noise), the dictionary no longer
-    *    covers what is arriving. Measured with the same gateStage +
+    *    covers what is arriving. Measured with the same gate stages +
     *    stripWith the funnel itself runs — the alarm IS the funnel's
     *    own stage, so it can never drift from what curation would do.
     *  - **Length drift.** [[graft.ops.Drift.tvd]] over doc length
@@ -340,15 +343,15 @@ object CorpusCuration {
     // dictionary / chars in, both post-gates — the char count
     // distinguishes "nothing stripped" from "nothing arrived"
     def stripRate(docs: DataFrame): (Double, Long) = {
-      val gated = gateStage(docs, idCol, textCol, cfg)
+      val survivors = gated(docs, idCol, textCol, cfg)
       def chars(df: DataFrame): Long = df
         .agg(coalesce(sum(length(col(textCol)).cast("long")), lit(0L)))
         .head().getLong(0)
-      val raw = chars(gated)
+      val raw = chars(survivors)
       if (raw == 0L) (0.0, 0L)
       else {
-        val kept = chars(graft.ops.Boilerplate.stripWith(
-          gated, idx.boilerplate, idCol, textCol,
+        val kept = chars(Boilerplate.stripWith(
+          survivors, idx.boilerplate, idCol, textCol,
           cfg.boilerplateSegTokens))
         (1.0 - kept.toDouble / raw, raw)
       }
@@ -379,7 +382,8 @@ object CorpusCuration {
   }
 
   /** One slice through the funnel against the standing indexes —
-    * identical stage semantics to [[curate]], zero corpus scans:
+    * the same stage list [[curate]] folds, unpersisted, with the
+    * standing models in place of inline fits, so zero corpus scans:
     * in-row gates → boilerplate strip against the FIXED dictionary →
     * eval scrub → optional DSIR score → within-slice keep-first dedup
     * → anti-join the seen-hash index. Returns the accepted docs and
@@ -397,29 +401,14 @@ object CorpusCuration {
 
   def curateIncremental(slice: DataFrame, idx: Indexes, idCol: String,
       textCol: String, cfg: Config = Config()): IncrementalResult = {
-    val repetition = gateStage(slice, idCol, textCol, cfg)
-    val deboiler = graft.ops.Boilerplate
-      .stripWith(repetition, idx.boilerplate, idCol, textCol,
-        cfg.boilerplateSegTokens)
-      .filter(col(textCol) =!= "")
-    val scrubbed = idx.evalDict match {
-      case Some(dict) => RepeatedSpans
-        .strip(deboiler, dict, idCol, textCol, cfg.scrubSpanTokens)
-        .filter(col(textCol) =!= "")
-      case None => deboiler
-    }
-    val selected = idx.dsir match {
-      case Some(model) => scrubbed.join(
-        graft.ops.Dsir.score(model, scrubbed, Seq(idCol), textCol)
-          .filter(col("selected")).select(col(idCol)),
-        Seq(idCol))
-      case None => scrubbed
-    }
-    // within-slice keep-first, then the index anti-join — the only
-    // touch of standing state, an equi-join on the hash
-    val accepted = graft.ops.Ops.dedupKeepFirstAgg(
-        selected.withColumn("__h", md5(col(textCol).cast("binary"))),
-        keys = Seq("__h"), orderCols = Seq(idCol))
+    val stages = funnel(idCol, textCol, cfg,
+      boilerplate = _ => idx.boilerplate, evalDict = idx.evalDict,
+      dsir = idx.dsir.map(m => (_: DataFrame) => m))
+    // within-slice keep-first is the last stage; then the index
+    // anti-join — the only touch of standing state, an equi-join on
+    // the hash
+    val accepted = stages
+      .foldLeft(slice.select(col(idCol), col(textCol)))((df, st) => st.step(df))
       .join(idx.seenHashes, Seq("__h"), "left_anti")
     IncrementalResult(
       curated = accepted.drop("__h")
@@ -427,35 +416,6 @@ object CorpusCuration {
       updated = idx.copy(seenHashes = idx.seenHashes
         .union(accepted.select(col("__h"))).distinct()))
   }
-
-  /** Stages 1+2 of the funnel fused into one pass (in-row quality +
-    * repetition gates). [[curate]] keeps the two stages separate
-    * because its drop report needs each stage's survivor stats; the
-    * filters here are the same predicates in the same order, and the
-    * batch-vs-incremental equality spec (CurateIncrementalSpec) is
-    * what pins the two forms against drift. */
-  private def gateStage(docs: DataFrame, idCol: String, textCol: String,
-      cfg: Config): DataFrame =
-    gateColumns(docs.select(col(idCol), col(textCol)), textCol)
-      .filter(col("__n") >= cfg.minTokens &&
-        col("__uniq") >= cfg.minUniqRatio &&
-        col("__dup2") <= cfg.maxDup2Frac)
-      .select(col(idCol), col(textCol))
-
-  /** The in-row gate columns (`__n` tokens, `__uniq` distinct-token
-    * ratio, `__dup2` duplicate-bigram fraction, plus their `__tk`/`__g2`
-    * intermediates) that [[curate]] and [[gateStage]] filter on. */
-  private def gateColumns(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .withColumn("__tk", tokens(col(textCol)))
-      .withColumn("__n", size(col("__tk")).cast("long"))
-      .withColumn("__uniq",
-        size(array_distinct(col("__tk"))).cast("double") / col("__n"))
-      .withColumn("__g2", shingles(col("__tk"), 2))
-      .withColumn("__dup2",
-        when(size(col("__g2")) > 0,
-          (size(col("__g2")) - size(array_distinct(col("__g2"))))
-            .cast("double") / size(col("__g2"))).otherwise(0.0))
 
   /** The eval-span dictionary (`h`), shared by [[curate]] and
     * [[fitIndexes]]. */

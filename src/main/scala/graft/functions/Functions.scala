@@ -67,12 +67,6 @@ object TextOps {
         i => array_join(slice(toks, i, lit(n)), " ")))
       .otherwise(array().cast("array<string>"))
 
-  /** The i-th MinHash "hash function" applied to one shingle: the base
-    * 60-bit hash XOR a salt derived from i (both < 2^60, so the XOR
-    * stays positive). */
-  def saltedHash(shingle: Column, saltIdx: Column): Column =
-    md5Long60(shingle).bitwiseXOR(md5Long60(saltIdx))
-
   /** Driver-side twin of [[md5Long60]] — same value as the engine
     * computes, used to pre-fold constant salts into literals so the
     * per-row plan hashes each shingle once instead of once per hash
@@ -136,12 +130,6 @@ object VectorOps {
   /** Exact integer sum of squares. */
   def sumSqQ(a: Column): Column = dotQ(a, a)
 
-  /** L2 distance from quantized vectors: exact integer sum-of-squared-
-    * diffs, then one deterministic sqrt + rescale. */
-  def l2DistQ(a: Column, b: Column, scale: Double = 1e6): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (s, x) => s + x).cast("double")) / scale
-
   /** Cosine similarity from quantized vectors (scale cancels). */
   def cosineQ(a: Column, b: Column): Column =
     dotQ(a, b).cast("double") /
@@ -160,11 +148,4 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** L2-normalize (ref `generate_embeddings.py:267`); zero-vector guard
-    * mirrors the reference's zero-fallback. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0d, a).otherwise(transform(a, x => x / n))
-  }
 }

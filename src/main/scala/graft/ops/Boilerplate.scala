@@ -28,15 +28,7 @@ import graft.functions.TextOps.{shinglesEvery, tokens}
 object Boilerplate {
 
   /** The non-overlapping segment rows of `docs` — (idCol, seg_idx,
-    * segment). Public (r19) so a pipeline that consumes the
-    * segmentation TWICE ([[strip]] = dictionary build + removal) can
-    * compute it once and persist at its own seam
-    * ([[graft.etl.CorpusCuration.curate]]) instead of re-tokenizing
-    * the corpus per consumer. */
-  def segmentsOf(docs: DataFrame, idCol: String, textCol: String,
-      segTokens: Int): DataFrame =
-    segments(docs, idCol, textCol, segTokens)
-
+    * segment). */
   private def segments(docs: DataFrame, idCol: String, textCol: String,
       segTokens: Int): DataFrame =
     // r19 (guide §4): build ONLY the non-overlapping windows (step =
@@ -54,13 +46,7 @@ object Boilerplate {
     * is configured with. */
   def topSegments(docs: DataFrame, idCol: String, textCol: String,
       segTokens: Int = 2, topK: Int = 20): DataFrame =
-    topSegmentsFrom(segments(docs, idCol, textCol, segTokens),
-      idCol, topK)
-
-  /** [[topSegments]] from a pre-computed [[segmentsOf]] frame. */
-  def topSegmentsFrom(segs: DataFrame, idCol: String,
-      topK: Int = 20): DataFrame =
-    segs.groupBy("segment")
+    segments(docs, idCol, textCol, segTokens).groupBy("segment")
       .agg(countDistinct(col(idCol)).as("dfd"))
       .orderBy(col("dfd").desc, col("segment")).limit(topK)
 

@@ -37,14 +37,9 @@ object PiiScrub {
       regexp_replace(acc, p, r)
     }
 
-  /** Per-type match count columns (computed on the ORIGINAL text, so
-    * counts are order-independent), named `n_<type>`. */
-  def countColumns(text: Column): Seq[Column] =
-    patterns.map { case (name, p, _) =>
-      regexp_count(text, lit(p)).cast("long").as(s"n_$name")
-    }
-
-  /** df + `<textCol>_redacted` + per-type `n_<type>` counts. */
+  /** df + `<textCol>_redacted` + per-type `n_<type>` match counts
+    * (computed on the ORIGINAL text, so counts are
+    * order-independent). */
   def scrub(df: DataFrame, textCol: String): DataFrame =
     patterns.foldLeft(df) { case (d, (name, p, _)) =>
       d.withColumn(s"n_$name",

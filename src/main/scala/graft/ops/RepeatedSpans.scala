@@ -42,19 +42,8 @@ object RepeatedSpans {
     * Documents with nothing flagged pass through untouched (left
     * join). Output: (idCol, textCol) with the cleaned text. */
   def strip(docs: DataFrame, spanDict: DataFrame, idCol: String,
-      textCol: String, n: Int = 8): DataFrame =
-    stripTokens(
-      docs.select(col(idCol), tokens(col(textCol)).as("tk")),
-      spanDict, idCol, textCol, n)
-
-  /** [[strip]] from a pre-tokenized frame (idCol, tk: array<string>)
-    * — the token array is consumed TWICE (span flagging + the masked
-    * reassembly join-back), so a pipeline that persists `toksDf` at
-    * its own seam ([[graft.etl.CorpusCuration.curate]]) tokenizes the
-    * corpus once instead of once per consumer. */
-  def stripTokens(toksDf: DataFrame, spanDict: DataFrame, idCol: String,
       textCol: String, n: Int = 8): DataFrame = {
-    val toks = toksDf.select(col(idCol), col("tk"))
+    val toks = docs.select(col(idCol), tokens(col(textCol)).as("tk"))
     // span-start positions whose hash is in the dictionary
     val flagged = toks
       .select(col(idCol),

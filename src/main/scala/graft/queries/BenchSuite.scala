@@ -414,7 +414,7 @@ object BenchSuite extends QuerySuite {
     * state it holds. Inheriting the batch default (= cores = 32) made
     * x21 pay 128 store commits per batch for 14 MB of total state —
     * profiled at 8.9 s, of which the join itself was ~1.3 s
-    * (`tools/StreamProfile`, PERFORMANCE.md "x21 profile"). Stateful
+    * (PERFORMANCE.md "x21 profile"). Stateful
     * streaming partitions must be sized to STATE VOLUME (target tens
     * of MB per partition), not to core count; 8 partitions hold to
     * sf1 (~140 MB state → ~17 MB each) and cut x21 3.2×. Override with
@@ -505,7 +505,7 @@ object BenchSuite extends QuerySuite {
     // r18: the terminal no-data micro-batch re-pays every state-store
     // instance's commit once more purely to EVICT state — for an INNER
     // interval join it emits nothing (inner joins emit in their data
-    // batch; the StreamProfile r14 table measured this batch at ~40%
+    // batch; the r14 x21 profile (PERFORMANCE.md) measured it at ~40%
     // of the post-fix wall). x17's flatMapGroupsWithState timeouts and
     // x18's append-mode window flush EMIT on that batch, so only x21
     // turns it off; output is unchanged (spec-pinned vs the batch

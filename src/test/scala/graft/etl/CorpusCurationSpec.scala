@@ -89,9 +89,15 @@ class CorpusCurationSpec extends SparkSpec {
       full.filter(col("doc_id") % 23 =!= 0), "doc_id", "text",
       evalDocs = Some(eval),
       dsirTarget = Some(col("lang") === "en")) // metadata-column predicate
+    // the report carries every stage, ordinal and gate name in
+    // pipeline order
+    assert(r.report.orderBy("stage").collect()
+      .map(x => x.getLong(0) -> x.getString(1)).toSeq === Seq(
+        0L -> "input", 1L -> "quality", 2L -> "repetition",
+        3L -> "boilerplate", 4L -> "decontaminate", 5L -> "dsir_select",
+        6L -> "exact_dedup"))
     val rep = r.report.collect()
       .map(x => x.getString(1) -> x.getLong(2)).toMap
-    assert(rep.contains("dsir_select"))
     assert(rep("dsir_select") < rep("decontaminate"),
       "DSIR selection must drop something on this corpus")
     assert(rep("dsir_select") > 0)

@@ -25,17 +25,30 @@ class CurateIncrementalSpec extends SparkSpec {
   private def doc(id: Long, body: String): (Long, String) =
     (id, s"$H $body")
 
+  // adversarial bodies: combining marks (NFD) and right-to-left
+  // tokens, and doubled spaces that split into empty tokens
+  private val Marks = "cafe\u0301 nai\u0308ve \u05e9\u05dc\u05d5\u05dd " +
+    "\u0645\u0631\u062d\u0628\u0627 \u05e2\u05d5\u05dc\u05dd x\u0323"
+  private val Spaced = "one  two three  four"
+
   /** Standing corpus: distinct bodies, one within-corpus duplicate,
     * one gate-reject (repetition), plus the shared header on every
     * doc. Bodies are 6 tokens (8 with header — above minTokens, even
-    * count so no trailing-token drop ambiguity across dup pairs). */
+    * count so no trailing-token drop ambiguity across dup pairs).
+    * Plus the adversarial rows: combining-mark/RTL and empty-token
+    * bodies that survive, a NULL-text and an empty-text doc that the
+    * quality gate drops. */
   private def corpus: DataFrame = Seq(
     doc(0L, "alpha beta gamma delta epsilon zeta"),
     doc(1L, "eta theta iota kappa lambda mu"),
     doc(2L, "nu xi omicron pi rho sigma"),
     doc(3L, "alpha beta gamma delta epsilon zeta"), // dup of 0 → dropped
     (4L, s"$H $H $H"), // repetition-gated (dup-bigram mass)
-    doc(5L, "tau upsilon phi chi psi omega")
+    doc(5L, "tau upsilon phi chi psi omega"),
+    doc(6L, Marks),
+    doc(7L, Spaced),
+    (8L, null: String), // NULL text → quality-gated
+    (9L, "") // empty text → quality-gated
   ).toDF("doc_id", "text")
 
   /** Eval set: shares a 5-token span with slice doc 102. */
@@ -48,14 +61,25 @@ class CurateIncrementalSpec extends SparkSpec {
     doc(101L, "eta theta iota kappa lambda mu"), // dup of corpus 1
     doc(102L, "clean secret bench span one two three four five tail x"),
     doc(103L, "s1 novel body second cc dd"),
-    doc(104L, "s1 novel body second cc dd") // within-slice dup of 103
+    doc(104L, "s1 novel body second cc dd"), // within-slice dup of 103
+    // passes the quality gate (4 of 8 tokens distinct), fails the
+    // repetition gate (3 of 7 bigrams repeat)
+    doc(105L, "ab cd ab cd ab cd"),
+    (106L, null: String),
+    (107L, "")
   ).toDF("doc_id", "text")
 
   private def slice2: DataFrame = Seq(
     doc(200L, "s2 novel body first ee ff"),
     doc(201L, "s1 novel body first aa bb"), // dup of slice1's 100
     (202L, "too short"), // quality-gated
-    doc(203L, "s2 novel body second gg hh")
+    doc(203L, "s2 novel body second gg hh"),
+    // the NFC (precomposed) spelling of corpus doc 6: a different
+    // byte string, so exact dedup keeps both
+    doc(204L, java.text.Normalizer.normalize(Marks,
+      java.text.Normalizer.Form.NFC)),
+    doc(205L, "uno  dos tres  cuatro"),
+    doc(206L, Spaced) // dup of corpus 7
   ).toDF("doc_id", "text")
 
   private def survivors(df: DataFrame): Map[Long, String] =
@@ -103,6 +127,11 @@ class CurateIncrementalSpec extends SparkSpec {
     assert(!got.contains(3L) && !got.contains(101L) &&
       !got.contains(104L) && !got.contains(201L), "dups must drop")
     assert(!got.contains(4L) && !got.contains(202L), "gates must drop")
+    assert(Seq(8L, 9L, 105L, 106L, 107L, 206L).forall(!got.contains(_)),
+      s"null/empty text, repetition reject and dup must drop: ${got.keySet}")
+    assert(Seq(6L, 7L, 204L, 205L).forall(got.contains),
+      s"adversarial novel docs must survive: ${got.keySet}")
+    assert(got(7L).contains("  "), "empty tokens must survive the strip")
     assert(got.contains(102L) &&
       !got(102L).contains("secret bench span"), "eval span must scrub")
     assert(got.keySet.intersect(Set(0L, 1L, 2L, 5L, 100L, 103L,

@@ -10,11 +10,13 @@ class StringExpressionsSpec extends SparkSpec {
 
   test("graft_dup_frac equals the relational shingle/distinct form") {
     // real corpus text plus adversarial edges: shorter than n, exactly
-    // n, all-identical tokens, interior repeats
+    // n, all-identical tokens, interior repeats, and doubled/leading/
+    // trailing spaces (the split yields empty tokens)
     val real = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("text"))
     val edges = Seq("a", "a b", "a b c", "a a a a a",
-      "x y x y x y", "p q r p q r s").toDF("text")
+      "x y x y x y", "p q r p q r s", "a  b a  b", "a  b a  b a  b",
+      "  ", "x  x  x", " lead and trail ", "", "a   a   a").toDF("text")
     val docs = real.unionByName(edges)
       .select(tokens(col("text")).as("toks"))
     for (k <- Seq(2, 3)) {
