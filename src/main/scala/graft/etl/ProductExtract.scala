@@ -512,12 +512,6 @@ object ProductExtract {
 
   // ---- the Spark operator ----
 
-  /** Parse a frame of fetched pages into product rows. Input columns:
-    * `urlCol` (the product page URL), `htmlCol` (raw HTML), optionally
-    * `categoryUrlCol` (the listing page the crawl found it on — feeds
-    * the meta path's category; defaults to the product URL). One
-    * map-side pass, no shuffle; corrupt/unextractable pages are
-    * dropped (use [[productsFromHtmlSplit]] to keep them). */
   /** Eagerly parse every configured selector so a config typo or an
     * out-of-subset selector fails LOUDLY on the driver before any row
     * runs. Without this, extractRow's per-row quarantine converts a
@@ -535,6 +529,12 @@ object ProductExtract {
       .foreach(Html.Selector.parse)
   }
 
+  /** Parse a frame of fetched pages into product rows. Input columns:
+    * `urlCol` (the product page URL), `htmlCol` (raw HTML), optionally
+    * `categoryUrlCol` (the listing page the crawl found it on — feeds
+    * the meta path's category; defaults to the product URL). One
+    * map-side pass, no shuffle; corrupt/unextractable pages are
+    * dropped (use [[productsFromHtmlSplit]] to keep them). */
   def productsFromHtml(pages: DataFrame, site: SiteConfig,
       urlCol: String = "url", htmlCol: String = "html",
       categoryUrlCol: Option[String] = None): Dataset[ProductInfo] = {

@@ -401,21 +401,12 @@ case class PqAdcLit(codes: Expression, qidx: Expression, tables: Expression)
     copy(codes = f, qidx = s, tables = t)
 }
 
-/** PQ encode: nearest-centroid code per subspace. `left` is the vector
-  * (array<double>), `right` the codebooks (array<array<array<double>>>,
-  * [m][ncent][dsub]) — in practice a plan LITERAL, so the generated
-  * code reads it from the references array, never from the row. One
-  * flat triple loop replaces the m × ncent `struct(sqdist, idx)`
-  * argmin composition, whose ~2k-node expression tree cost tens of
-  * seconds of codegen at m=32/ncent=64. Ties (equal squared distance)
-  * keep the lowest centroid index — matching the driver-side
-  * `PqModel.encodeOne` exactly (same sequential double sums). */
 /** Index of the nearest centroid (squared L2; ties → lowest index)
   * over a centroid MATRIX literal — the scalable cluster-assignment
   * primitive (IVF build, vector-dedup probe, SemanticDecontam at
-  * large k). Why an expression and not composition: the
-  * per-centroid struct-literal argmin (`IvfIndex.cellCandidates`)
-  * builds an nCells×dim-node expression TREE whose generated code
+  * large k). Why an expression and not composition: a per-centroid
+  * struct-literal argmin (one `struct(l2, cell)` per centroid) builds
+  * an nCells×dim-node expression TREE whose generated code
   * degenerates past a few dozen cells (measured: 160 cells × 64 dims
   * stalled a 2M-row assignment for 20+ min), and the join+aggregate
   * form OOMs carrying vectors as group keys through a sort-fallback
@@ -492,14 +483,14 @@ case class NearestCentroid(left: Expression, right: Expression)
   * ties → lowest index) — [[NearestCentroid]]'s multiprobe sibling,
   * the recall knob for blocked vector dedup
   * ([[graft.ops.VectorDedupIndex.probePairs]]' nprobe) and IVF probe
-  * cell selection at large centroid counts (the struct-literal
-  * `array_sort(cellCandidates)` form builds the same degenerate
-  * k×dim expression tree as the argmin it replaced). One flat loop
-  * with an n-slot insertion (n is small — 2..8 in practice), O(k·(d +
-  * n)) per row, no tree growth, zero shuffle. Ordering matches
-  * `array_sort` over (distance, cell-id) structs exactly: insertion
-  * is stable on equal distances, and the matrix rows are id-sorted by
-  * the caller. */
+  * cell selection at large centroid counts (an `array_sort` over
+  * per-centroid structs builds the same degenerate k×dim expression
+  * tree as the argmin it replaced). One flat loop with an n-slot
+  * insertion (n is small — 2..8 in practice), O(k·(d + n)) per row,
+  * no tree growth, zero shuffle. Insertion is stable on equal
+  * distances, so with the id-sorted matrix rows of
+  * [[graft.vector.VectorSearch]]'s cell model ties go to the lowest
+  * cell id; driver-side probes constant-fold this same expression. */
 case class NearestCentroidK(first: Expression, second: Expression,
     third: Expression)
     extends TernaryExpression with ImplicitCastInputTypes {
@@ -595,6 +586,15 @@ case class NearestCentroidK(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 }
 
+/** PQ encode: nearest-centroid code per subspace. `left` is the vector
+  * (array<double>), `right` the codebooks (array<array<array<double>>>,
+  * [m][ncent][dsub]) — in practice a plan LITERAL, so the generated
+  * code reads it from the references array, never from the row. One
+  * flat triple loop replaces the m × ncent `struct(sqdist, idx)`
+  * argmin composition, whose ~2k-node expression tree cost tens of
+  * seconds of codegen at m=32/ncent=64. Ties (equal squared distance)
+  * keep the lowest centroid index — matching the driver-side
+  * `PqModel.encodeOne` exactly (same sequential double sums). */
 case class PqEncode(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType),

@@ -60,26 +60,20 @@ import graft.vector.VectorSearch
   */
 object VectorDedupIndex {
 
-  /** Deterministic seed centroids — the v14/v06 convention with a
-    * duplicate guard: the nCells lowest-id DISTINCT corpus vectors.
-    * The guard matters: on a corpus with exact duplicates (the very
-    * thing a dedup index exists for) the naive lowest-N-ids can all
-    * be copies of one vector, which degenerates every cell to the
-    * same centroid and collapses the whole corpus into one cell —
-    * measured: a replica-heavy bench corpus produced 412M candidate
-    * pairs in ONE unsplittable cell (single-threaded verify) vs 26M
-    * across 16 real cells. Costs one distinct-vector aggregate at
-    * build time; production uses [[graft.vector.Kmeans.fit]] output
-    * instead. */
+  /** Deterministic seed centroids — the nCells lowest-id DISTINCT
+    * corpus vectors, the seeding rule every IVF build shares
+    * ([[VectorSearch.seedCells]]). The distinct guard matters: on a
+    * corpus with exact duplicates (the very thing a dedup index exists
+    * for) the naive lowest-N-ids can all be copies of one vector, which
+    * collapses the whole corpus into one cell — measured: a
+    * replica-heavy bench corpus produced 412M candidate pairs in ONE
+    * unsplittable cell (single-threaded verify) vs 26M across 16 real
+    * cells. A corpus with fewer than nCells distinct vectors yields
+    * fewer than nCells centroids. Production uses
+    * [[graft.vector.Kmeans.fit]] output instead. */
   def seedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int): Seq[(Long, Seq[Double])] =
-    corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .groupBy("vec").agg(min(col("id")).as("id"))
-      .orderBy("id").limit(nCells)
-      .collect()
-      .map(r => (r.getAs[Long]("id"), r.getSeq[Double](0)))
-      .toSeq
+    VectorSearch.seedCells(corpus, idCol, vecCol, nCells)
 
   /** Build + persist the cell-partitioned corpus index. One corpus
     * scan; the only shuffle is the write's cell clustering. */
@@ -162,11 +156,12 @@ object VectorDedupIndex {
     *    moved, in units of the index's own dispersion.
     *
     * On trip: [[graft.vector.Kmeans.fit]] on the index content (its
-    * deterministic lowest-k-id seeding — fit twice, get the same model
-    * bit-for-bit, so a rebuild here equals a from-scratch rebuild on
-    * the same content, probe-for-probe; pinned in the spec), then
-    * [[writeIndex]] to `outPath` — never in place; the caller swaps
-    * directories after validating, mirroring [[compactIndex]].
+    * deterministic lowest-id distinct seeding — fit twice, get the
+    * same model bit-for-bit, so a rebuild here equals a from-scratch
+    * rebuild on the same content, probe-for-probe; pinned in the
+    * spec), then [[writeIndex]] to `outPath` — never in place; the
+    * caller swaps directories after validating, mirroring
+    * [[compactIndex]].
     * Untripped: a pure measurement — nothing is read beyond the two
     * audit scans, nothing written.
     *

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.expr.L2Distance
+import graft.vector.VectorSearch
 
 /** IVF cell pruning for the declarative kNN idiom — the second half of
   * the SURVEY §7.4 strategy: once [[KnnTopKRewrite]] has turned
@@ -27,7 +28,11 @@ import graft.expr.L2Distance
   *
   * Mechanics: the probe cells are computed DRIVER-side from the sort
   * key's literal query vector against the registered centroids (tiny,
-  * by construction), and injected as `Filter(cell IN (...))` directly
+  * by construction) by constant-folding the IVF cell model's own
+  * nearest-cell kernel ([[VectorSearch.probeCellsOf]]: squared L2,
+  * ties to the lowest cell id) — so the pruned cells are exactly the
+  * cells the build assigned rows by and `searchIvf` probes, ulp ties
+  * included. They are injected as `Filter(cell IN (...))` directly
   * above the KnnTopK child. Catalyst's own PushDownPredicates then
   * carries the filter to the scan, where a `partitionBy(cell)` layout
   * turns it into real partition pruning — at 100 TB the query reads
@@ -50,33 +55,6 @@ object KnnIvfCatalog {
 
   def unregister(cellCol: String): Unit = registry.remove(cellCol)
   def lookup(cellCol: String): Option[IvfMeta] = registry.get(cellCol)
-
-  /** The query's nprobe nearest cells, computed driver-side. A
-    * dimension mismatch between query and centroids means the plan is
-    * being pruned with the WRONG index — fail loudly rather than
-    * truncate the distance loop and return silently wrong cells.
-    *
-    * Ordering term is sqrt(ss) — the SAME value the expression forms
-    * (graft_l2_distance / IvfIndex.cellCandidates) sort by. Sorting
-    * raw squared sums here would be monotone-equivalent EXCEPT when
-    * sqrt collapses two squared distances a few ulps apart into equal
-    * doubles: the expression then falls to its cell-id tiebreak while
-    * a squared-sum sort still ranks them strictly, and a divergent
-    * cell set at the nprobe cutoff silently drops probed candidates. */
-  def probeCells(meta: IvfMeta, q: Seq[Double]): Seq[Long] =
-    meta.centroids
-      .map { case (cell, c) =>
-        require(c.length == q.length,
-          s"IVF centroid dim ${c.length} != query dim ${q.length} — " +
-            "the registered index does not match this corpus/query")
-        var ss = 0.0
-        var i = 0
-        while (i < c.length) { val d = c(i) - q(i); ss += d * d; i += 1 }
-        (math.sqrt(ss), cell)
-      }
-      .sortBy(identity)
-      .take(meta.nprobe)
-      .map(_._2)
 }
 
 case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -147,7 +125,8 @@ case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
               }.flatten
             case _ => None
           })
-        lits <- cellLiterals(cellAttr, probeCells(meta, q))
+        lits <- cellLiterals(cellAttr,
+          VectorSearch.probeCellsOf(q, meta.centroids, meta.nprobe))
       } yield k.copy(child = Filter(In(cellAttr, lits), child))
       pruned.getOrElse(k)
   }

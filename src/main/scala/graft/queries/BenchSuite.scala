@@ -136,10 +136,16 @@ object BenchSuite extends QuerySuite {
     * nCells scales with the corpus (VERDICT r16 item 1 — the fixed 16
     * produced the only unexplained superlinear sf1 slope, 16.2× for
     * 10× rows): a real IVF index targets a per-cell row budget, not a
-    * cell count, so probe cost = nprobe × cellSize stays flat as the
-    * corpus grows and the cell-partitioned probe keeps ≥ host-core
-    * parallelism instead of capping at 16 busy partitions. Same
-    * ~12.5k-row cell budget as x32's standing index. */
+    * cell count, so the rows a probe scores (nprobe × cellSize) stay
+    * flat as the corpus grows. Same ~12.5k-row cell budget as x32's
+    * standing index. The cell count bounds the rows scored, not the
+    * tasks: the in-memory index is not cell-partitioned, so the
+    * broadcast probe join streams every cached partition. Seeds are
+    * the lowest-id DISTINCT vectors; before that rule was shared, the
+    * lowest 16 ids of this replica-inflated corpus were copies of one
+    * vector and the index had ONE occupied cell, so the committed
+    * x03/x15 pins scored the whole corpus (PERFORMANCE.md, "IVF cells
+    * on the replica-inflated corpus"). */
   private val ivfMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), VectorSearch.IvfIndex]
   private val x03 = GraftQuery(
@@ -189,7 +195,10 @@ object BenchSuite extends QuerySuite {
     * corpus AND each scanned row costs m byte-code lookups. The only
     * shape where neither the scan set nor the bytes-per-row grows
     * with the corpus. Approximations compose (ProductQuantizerSpec
-    * pins all-cells parity with the flat ADC scan + pruned recall). */
+    * pins all-cells parity with the flat ADC scan + pruned recall).
+    * The nprobe/nCells fraction holds at sf0.1 only since seeds are
+    * distinct vectors: the committed x15 pins, like x03's, were
+    * measured on a one-cell index. */
   private val ivfPqMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String),
       (VectorSearch.IvfIndex, ProductQuantizer.PqModel, DataFrame)]
@@ -760,10 +769,14 @@ object BenchSuite extends QuerySuite {
     * (VERDICT r13 stretch 8): 3 Lloyd rounds instead of seed vectors,
     * same 128 cells, same τ. The Cauchy–Schwarz cap prunes a cell
     * when (dot(e,cent)/|e| + rad)/minNorm < τ — tighter cells ⇒
-    * smaller rad ⇒ fewer probed cells, so x31 − x29 quantifies the
+    * smaller rad ⇒ fewer probed cells, so x31 − x29 reads the
     * scaladoc's "pays exactly when the corpus clusters" claim on this
     * fixture (training cost excluded: centroids memoized, as in
-    * production where the model is a standing artifact). */
+    * production where the model is a standing artifact). That reading
+    * holds only since `Kmeans.fit` seeds with distinct vectors: the
+    * committed x31 pins come from a fit that left 4 of its 128 cells
+    * occupied (PERFORMANCE.md, "IVF cells on the replica-inflated
+    * corpus"). */
   private val sdKmMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
   private val x31 = GraftQuery("x31_decontam_trained",

@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * cross-engine-exact form.
   *
   * Determinism (the property rand-init floating k-means lacks): seeds
-  * are the lowest-k ids; per-cell sums run over vectors QUANTIZED to
-  * longs (`round(x·quantScale)`), so the shuffle-order-dependent
+  * are the k lowest-id distinct vectors ([[VectorSearch.seedCells]] —
+  * a corpus with fewer than k distinct vectors fits fewer than k
+  * cells); per-cell sums run over vectors QUANTIZED to longs
+  * (`round(x·quantScale)`), so the shuffle-order-dependent
   * float-sum problem disappears — the centroid is `(Σqv/scale)/n`,
   * identical under any partitioning; assignment distances are
   * per-row map-side folds (fixed evaluation order). Fit twice, get
@@ -20,10 +22,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): each round is ONE broadcast-argmin corpus
   * scan (no shuffle for assignment — the centroids ride as literals,
-  * exactly [[VectorSearch.IvfIndex.nearestCell]]) plus ONE
-  * partial-combining groupBy to k·dim sum rows; only that k·dim
-  * model frame is collected per round. Empty cells keep their
-  * previous centroid (documented FAISS behavior) rather than dying.
+  * exactly [[VectorSearch.assignCells]], the cell model every IVF
+  * build and probe uses) plus ONE partial-combining groupBy to k·dim
+  * sum rows; only that k·dim model frame is collected per round.
+  * Empty cells keep their previous centroid (documented FAISS
+  * behavior) rather than dying.
   */
 object Kmeans {
 
@@ -34,9 +37,7 @@ object Kmeans {
     require(k > 0 && iters >= 0, s"need k>0, iters>=0; got $k, $iters")
     val ids = corpus.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    var cents: Seq[(Long, Seq[Double])] = ids
-      .orderBy("id").limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    var cents = VectorSearch.seedCells(ids, "id", "vec", k)
     require(cents.nonEmpty, "corpus must be non-empty (no seed vectors)")
     val dim = cents.head._2.length
     // floor(x+0.5), NOT round(): same determinism guarantee but a pure
@@ -52,11 +53,9 @@ object Kmeans {
       .persist()
     try {
       for (_ <- 1 to iters) {
-        val index = VectorSearch.IvfIndex(null, cents)
         // k·dim rows to the driver — bounded by the MODEL size, never
         // the corpus (64 cells × 768 dims = 49k longs)
-        val sums = qv
-          .withColumn("cell", index.nearestCell(col("vec")))
+        val sums = VectorSearch.assignCells(qv, "vec", cents)
           .select(col("cell"), posexplode(col("qv")))
           .groupBy("cell", "pos")
           .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))

@@ -121,21 +121,17 @@ object ProductQuantizer {
   }
 
   /** Deterministic per-subspace Lloyd/k-means:
-    * init = the first `ncent` DISTINCT subvectors in sample order;
+    * init = the first `ncent` DISTINCT subvectors in sample order (the
+    * IVF seeding rule, [[VectorSearch.lowestDistinct]]);
     * `iters` assignment/update rounds with lowest-index tie-breaks and
     * empty clusters keeping their centroid. Pure function of the
     * sample — retraining on the same corpus reproduces the codebooks
     * bit-for-bit. */
   private def kmeans(sub: Array[Array[Double]], ncent: Int, iters: Int)
       : Array[Array[Double]] = {
-    val init = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Double]]
-    var i = 0
-    while (i < sub.length && init.length < ncent) {
-      if (seen.add(sub(i).toSeq)) init += sub(i)
-      i += 1
-    }
-    var cents = init.toArray
+    var cents = VectorSearch.lowestDistinct(sub.iterator.zipWithIndex
+        .map { case (v, i) => (i.toLong, v.toSeq) }, ncent)
+      .map(_._2.toArray).toArray
     var it = 0
     while (it < iters) {
       val sums = Array.fill(cents.length)(new Array[Double](sub(0).length))
@@ -209,6 +205,24 @@ object ProductQuantizer {
     corpus.withColumn(codeCol,
       model.encodeCol(col(vecCol).cast("array<double>")))
 
+  /** The query set, collected once (bounded: it is small by contract,
+    * the broadcast side of every search in this engine): (query_id,
+    * query vector) in qidx order, and their ADC lookup tables for
+    * `graft_pq_adc_lit(codes, qidx, tables)`. The tables ride as
+    * ONE foldable literal that graft_pq_adc_lit materializes into a
+    * primitive double[][] at plan time — NOT as a data column (16 KB
+    * copied into every corpus×queries join row) and NOT element_at
+    * over the literal (GenericArrayData boxes every getDouble — one
+    * Double unbox per lookup, half a billion on a 2M-row scan). */
+  private def adcQueries(queries: DataFrame, qidCol: String,
+      qvecCol: String, model: PqModel)
+      : (Seq[(Long, Seq[Double])], Column) = {
+    val qs = queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    (qs, typedLit(qs.map(q => model.lookupTable(q._2.toArray).toSeq)))
+  }
+
   /** Approximate top-k by ADC scan over PQ codes. `queries` must be
     * small (collected to build per-query lookup tables, broadcast as
     * a frame). Returns (query_id, id, dist, rank) with dist the ADC
@@ -218,37 +232,15 @@ object ProductQuantizer {
       model: PqModel, k: Int): DataFrame = {
     val spark = encoded.sparkSession
     import spark.implicits._
-    // bounded collect: the query set is small by contract (it is the
-    // broadcast side of every search in this engine)
-    val qs = queries
-      .select(col(qidCol).cast("long").as("qid"),
-        col(qvecCol).cast("array<double>").as("qvec"))
-      .collect()
-      .map(r => (r.getLong(0),
-        model.lookupTable(r.getSeq[Double](1).toArray).toSeq))
-      .toSeq
-    // the per-query ADC tables ride as ONE foldable literal that
-    // graft_pq_adc_lit materializes into a primitive double[][] at
-    // plan time — NOT as a data column (16 KB copied into every
-    // corpus×queries join row) and NOT element_at over the literal
-    // (GenericArrayData boxes every getDouble — one Double unbox per
-    // lookup, half a billion on a 2M-row scan)
-    val tablesLit = typedLit(qs.map(_._2))
+    val (qs, tables) = adcQueries(queries, qidCol, qvecCol, model)
     val qdf = broadcast(
       qs.map(_._1).zipWithIndex.toDF("query_id", "qidx"))
     val scored = encoded
       .select(col(idCol).as("id"), col(codeCol).as("codes"))
       .crossJoin(qdf)
-      .withColumn("dist",
-        call_function("graft_pq_adc_lit", col("codes"), col("qidx"),
-          tablesLit))
-    graft.ops.Ops.topKPerGroupAgg(
-      scored.withColumn("__dk",
-        call_function("graft_sortable_bits", col("dist"))),
-      Seq("query_id"), col("__dk"), col("id"), k, "dkey", "id", "rank")
-      .select(col("query_id"), col("id"),
-        call_function("graft_sortable_double", col("dkey")).as("dist"),
-        col("rank"))
+      .withColumn("dist", call_function("graft_pq_adc_lit",
+        col("codes"), col("qidx"), tables))
+    VectorSearch.rankTopK(scored, k)
   }
 
   /** PQ-encode an IVF-assigned corpus: (id, cell, pq_codes) — the
@@ -276,8 +268,8 @@ object ProductQuantizer {
       : DataFrame =
     spark.read.parquet(path)
 
-  /** IVFPQ search: the query probes its `nprobe` nearest cells
-    * (map-side literal argmin, exactly [[VectorSearch.searchIvf]]) and
+  /** IVFPQ search: the query probes its `nprobe` nearest cells (the
+    * nearest-cell kernel [[VectorSearch.searchIvf]] probes with) and
     * ADC-scans only those cells' codes. The two approximations
     * compose: IVF bounds WHAT is scanned (nprobe/nCells of the
     * corpus), PQ bounds WHAT EACH ROW COSTS (m byte codes); at 100 TB
@@ -287,48 +279,24 @@ object ProductQuantizer {
       queries: DataFrame, qidCol: String, qvecCol: String,
       model: PqModel, k: Int, nprobe: Int = 1,
       codeCol: String = "pq_codes"): DataFrame = {
-    val qrows = queries
-      .select(col(qidCol).cast("long").as("qid"),
-        col(qvecCol).cast("array<double>").as("qvec"))
-      .collect() // bounded: the query set is the broadcast side
-    // STATIC cell pruning (round 11): the probe cells are a pure
-    // driver-side function of (query set × centroids) — both already
-    // in hand — so restrict the corpus BEFORE the join with a literal
-    // IN filter. Over a [[writeIvfPq]] layout this plans as real
-    // PartitionFilters (read nprobe directories, not the corpus);
-    // in-memory it is a no-op-cost row filter. The driver twin
-    // ([[graft.plans.KnnIvfCatalog.probeCells]]) orders by
-    // (sqrt distance, cell) — BIT-IDENTICAL to the expression form
-    // (same summation order, same sqrt, same cell tiebreak; see the
-    // probeCells scaladoc for why sorting raw squared sums instead
-    // would diverge at ulp ties) — so the filter set is EXACTLY the
-    // joined set, never a semantic change.
-    val meta = graft.plans.KnnIvfCatalog.IvfMeta(index.centroids, nprobe)
-    val probed: Seq[Long] = qrows.toSeq
-      .flatMap(r => graft.plans.KnnIvfCatalog.probeCells(
-        meta, r.getSeq[Double](1))).distinct
-    val prunedCells = graft.io.Layout.keepPartitions(encodedCells,
-      Seq("cell"), probed.map(Seq(_)))
-    val tablesLit = typedLit(qrows.map(r =>
-      model.lookupTable(r.getSeq[Double](1).toArray).toSeq).toSeq)
-    val qidxLit = typedLit(qrows.map(_.getLong(0)).zipWithIndex.toMap)
-    val qdf = broadcast(queries
-      .select(col(qidCol).cast("long").as("query_id"),
-        col(qvecCol).cast("array<double>").as("qvec"))
-      .withColumn("qidx", element_at(qidxLit, col("query_id")))
-      .withColumn("cell", explode(index.probeCells(col("qvec"), nprobe)))
-      .select("query_id", "qidx", "cell"))
-    val scored = prunedCells
-      .join(qdf, Seq("cell"))
-      .withColumn("dist",
-        call_function("graft_pq_adc_lit", col(codeCol), col("qidx"),
-          tablesLit))
-    graft.ops.Ops.topKPerGroupAgg(
-      scored.withColumn("__dk",
-        call_function("graft_sortable_bits", col("dist"))),
-      Seq("query_id"), col("__dk"), col("id"), k, "dkey", "id", "rank")
-      .select(col("query_id"), col("id"),
-        call_function("graft_sortable_double", col("dkey")).as("dist"),
-        col("rank"))
+    val spark = encodedCells.sparkSession
+    import spark.implicits._
+    val (qs, tables) = adcQueries(queries, qidCol, qvecCol, model)
+    // (query_id, qidx, cell) per probed cell, computed driver-side by
+    // the cell model's own kernel ([[VectorSearch.probeCellsOf]]). The
+    // same list is the broadcast join side AND the STATIC cell filter
+    // that restricts the corpus before the join — over a
+    // [[writeIvfPq]] layout real PartitionFilters (read nprobe
+    // directories, not the corpus), in memory a cheap row filter.
+    val probes = qs.zipWithIndex.flatMap { case ((qid, qvec), qidx) =>
+      VectorSearch.probeCellsOf(qvec, index.centroids, nprobe)
+        .map((qid, qidx, _))
+    }
+    val scored = graft.io.Layout.keepPartitions(encodedCells,
+        Seq("cell"), probes.map(p => Seq(p._3)).distinct)
+      .join(broadcast(probes.toDF("query_id", "qidx", "cell")), Seq("cell"))
+      .withColumn("dist", call_function("graft_pq_adc_lit",
+        col(codeCol), col("qidx"), tables))
+    VectorSearch.rankTopK(scored, k)
   }
 }

@@ -1,8 +1,12 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
+import graft.expr.NearestCentroidK
 import graft.io.Layout
 
 /** Library-level similarity-search API (the reference's
@@ -29,10 +33,11 @@ object VectorSearch {
     call_function("graft_l2_distance", a, b)
 
   /** Rank scored (query_id, id, dist) candidates: top-k per query via
-    * the mergeable bounded-heap aggregate. The double distance rides
-    * the order-preserving sortable-bits map and is restored
-    * bit-for-bit on output. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    * the mergeable bounded-heap aggregate — the one ranking tail of
+    * every search here and in [[ProductQuantizer]]. The double
+    * distance rides the order-preserving sortable-bits map and is
+    * restored bit-for-bit on output. */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
     graft.ops.Ops.topKPerGroupAgg(
       scored.withColumn("__dk",
         call_function("graft_sortable_bits", col("dist"))),
@@ -58,76 +63,119 @@ object VectorSearch {
   final case class IvfIndex(
       assigned: DataFrame, centroids: Seq[(Long, Seq[Double])]) {
 
-    /** (distance-to-centroid, cell) candidates as one literal-array
-      * expression over `vec` — evaluated map-side, fully codegen.
-      * `private[graft]`: [[graft.ops.SemanticDecontam]] reuses the
-      * pair to get nearest-cell AND its distance in one expression. */
-    private[graft] def cellCandidates(vec: Column): Column =
-      array(centroids.map { case (cellId, cvec) =>
-        struct(
-          l2(vec, typedLit(cvec)).as("d"),
-          lit(cellId).as("cell"))
-      }: _*)
-
-    /** Nearest cell for a vector: argmin over the literal candidates. */
-    def nearestCell(vec: Column): Column =
-      array_min(cellCandidates(vec)).getField("cell")
-
-    /** The query's nprobe nearest cells, nearest first — through the
-      * scalable [[probeCellsLit]] expression since r14 (the old
-      * `array_sort(cellCandidates)` composition builds the same
-      * per-centroid tree that degenerates at large k; ordering parity
-      * with it is pinned in VectorSearchSpec). */
+    /** The query's nprobe nearest cells, nearest first
+      * ([[probeCellsLit]]). */
     def probeCells(vec: Column, nprobe: Int): Column =
       probeCellsLit(vec, centroids, nprobe)
   }
 
-  /** The nprobe nearest cell IDS for a vector, nearest first, over the
-    * centroid MATRIX literal — `graft_nearest_centroid_k`'s flat
-    * n-slot insertion loop ([[graft.expr.NearestCentroidK]]), mapped
-    * from matrix positions back to cell ids. Same (distance, lowest
-    * cell id) tiebreak as the struct-literal form. */
+  /** The IVF family's one cell model. Every build, k-means round,
+    * probe, optimizer prune and static partition filter decides
+    * "nearest cell" through the flat matrix-literal kernels
+    * [[graft.expr.NearestCentroid]] / [[graft.expr.NearestCentroidK]]:
+    * squared L2, ties to the lowest cell id. This is the one centroid
+    * layout they read: ids ascending and the matching matrix rows, so
+    * matrix row i is cell `ids(i)` and the kernels' lowest-index
+    * tiebreak is the lowest-cell-id tiebreak. */
+  private def cellMatrix(centroids: Seq[(Long, Seq[Double])])
+      : (Seq[Long], Seq[Seq[Double]]) =
+    centroids.sortBy(_._1).unzip
+
+  /** The nprobe nearest cell IDS for a vector, nearest first:
+    * `graft_nearest_centroid_k`'s flat n-slot insertion loop over the
+    * centroid matrix, mapped from matrix positions back to cell ids. */
   private[graft] def probeCellsLit(vec: Column,
       centroids: Seq[(Long, Seq[Double])], nprobe: Int): Column = {
-    val sorted = centroids.sortBy(_._1)
+    val (ids, matrix) = cellMatrix(centroids)
     transform(
       call_function("graft_nearest_centroid_k",
-        vec, typedLit(sorted.map(_._2)), lit(nprobe)),
-      i => element_at(typedLit(sorted.map(_._1)), i + 1))
+        vec, typedLit(matrix), lit(nprobe)),
+      i => element_at(typedLit(ids), i + 1))
   }
 
-  /** Build the IVF index: pick nCells seed centroids deterministically
-    * (lowest ids via TakeOrdered — no global sort), embed them as
-    * literals, tag every corpus row with its nearest cell in one
-    * map-side pass. */
-  def buildIvf(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int): IvfIndex = {
-    val ids = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val cents: Seq[(Long, Seq[Double])] = ids
-      .orderBy("id").limit(nCells)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .toSeq
-    buildIvfWith(corpus, idCol, vecCol, cents)
+  /** [[probeCellsLit]] for one driver-side query vector: the same
+    * `NearestCentroidK` over the same literals, evaluated the way
+    * ConstantFolding evaluates a foldable expression. Driver-side cell
+    * choices (the optimizer prune, [[ProductQuantizer.searchIvfPq]]'s
+    * static partition filter) are therefore the cells the map-side
+    * probes and assignments pick, ulp ties included. A dimension
+    * mismatch means the WRONG index — the kernel would silently
+    * truncate its distance loop, so fail loudly instead. */
+  private[graft] def probeCellsOf(q: Seq[Double],
+      centroids: Seq[(Long, Seq[Double])], nprobe: Int): Seq[Long] = {
+    val (ids, matrix) = cellMatrix(centroids)
+    matrix.foreach(c => require(c.length == q.length,
+      s"IVF centroid dim ${c.length} != query dim ${q.length} — " +
+        "the registered index does not match this corpus/query"))
+    NearestCentroidK(Literal.create(q, ArrayType(DoubleType)),
+        Literal.create(matrix, ArrayType(ArrayType(DoubleType))),
+        Literal(nprobe))
+      .eval().asInstanceOf[ArrayData].toIntArray.toSeq.map(ids)
   }
+
+  /** The IVF seeding rule: the `n` lowest-id DISTINCT vectors,
+    * id-ascending — [[buildIvf]], [[Kmeans.fit]] and
+    * [[graft.ops.VectorDedupIndex.seedCentroids]] all seed through it.
+    * Distinct matters: on a replica-heavy corpus the lowest n ids can
+    * all be copies of one vector, and n copies of one seed make one
+    * cell. A corpus with fewer than n distinct vectors yields fewer
+    * than n seeds. Ids must be unique (they become the cell ids).
+    *
+    * One map-side pass, no shuffle: each partition keeps its own n
+    * lowest-id distinct vectors ([[lowestDistinct]]) and the driver
+    * folds the partitions' survivors in with the same rule as they
+    * arrive, holding at most 2n. Exact: a vector among the global n
+    * lowest has fewer than n distinct vectors with a lower id
+    * anywhere, so its own partition keeps it. */
+  private[graft] def seedCells(corpus: DataFrame, idCol: String,
+      vecCol: String, n: Int): Seq[(Long, Seq[Double])] =
+    corpus
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .rdd.mapPartitions(rows => Iterator(lowestDistinct(
+        rows.map(r => (r.getLong(0), r.getSeq[Double](1))), n)))
+      .fold(Seq.empty)((a, b) => lowestDistinct((a ++ b).iterator, n))
+
+  /** The `n` lowest-id distinct vectors of `rows` (any order),
+    * id-ascending; a vector counts at its lowest id. Holds at most n
+    * vectors at a time. */
+  private[graft] def lowestDistinct(rows: Iterator[(Long, Seq[Double])],
+      n: Int): Seq[(Long, Seq[Double])] = {
+    val byId = scala.collection.mutable.TreeMap.empty[Long, Seq[Double]]
+    val idOf = scala.collection.mutable.HashMap.empty[Seq[Double], Long]
+    rows.foreach { case (id, v) =>
+      if (n > 0 && (byId.size < n || id < byId.lastKey)) {
+        val prev = idOf.get(v)
+        if (prev.forall(id < _)) {
+          prev.foreach(byId.remove)
+          byId(id) = v
+          idOf(v) = id
+          if (byId.size > n) byId.remove(byId.lastKey).foreach(idOf.remove)
+        }
+      }
+    }
+    byId.toSeq
+  }
+
+  /** Build the IVF index: [[seedCells]] picks nCells seed centroids
+    * deterministically, and [[buildIvfWith]] tags every corpus row
+    * with its nearest cell in one map-side pass. */
+  def buildIvf(corpus: DataFrame, idCol: String, vecCol: String,
+      nCells: Int): IvfIndex =
+    buildIvfWith(corpus, idCol, vecCol,
+      seedCells(corpus, idCol, vecCol, nCells))
 
   /** Map-side nearest-centroid assignment that scales in centroid
     * count: ONE `graft_nearest_centroid` expression over the centroid
     * MATRIX literal (flat generated loop — [[graft.expr
     * .NearestCentroid]]). The alternatives both fail at large k,
-    * measured: the per-centroid struct-literal argmin
-    * ([[IvfIndex.cellCandidates]]) builds an nCells×dim expression
-    * tree that degenerates past a few dozen cells (160×64 stalled a
-    * 2M-row assignment 20+ min), and a join+aggregate form OOMs
-    * carrying vectors as group keys through a sort-fallback
-    * aggregate. Ties → lowest cell id (matrix rows id-sorted),
-    * matching cellCandidates' (d, cell) tiebreak. Appends `cell`. */
+    * measured: a per-centroid struct-literal argmin builds an
+    * nCells×dim expression tree that degenerates past a few dozen
+    * cells (160×64 stalled a 2M-row assignment 20+ min), and a
+    * join+aggregate form OOMs carrying vectors as group keys through a
+    * sort-fallback aggregate. Appends `cell`. */
   private[graft] def assignCells(rows: DataFrame, vecCol: String,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
-    val sorted = centroids.sortBy(_._1)
-    val ids = sorted.map(_._1)
-    val matrix = sorted.map(_._2)
+    val (ids, matrix) = cellMatrix(centroids)
     rows.withColumn("cell",
       element_at(typedLit(ids),
         call_function("graft_nearest_centroid",
@@ -139,15 +187,10 @@ object VectorSearch {
     * per-cell radius stats. The argmin runs through the same scalable
     * matrix-literal expression; the distance is then ONE O(d)
     * `graft_l2_distance` against `element_at(matrix, argmin+1)` —
-    * never a second O(k·d) pass, and never the per-centroid
-    * struct-literal tree that degenerates at large k (the r13-measured
-    * 160-cell stall this replaces; ADVICE r13). Appends `cell` and
-    * `distCol`. */
+    * never a second O(k·d) pass. Appends `cell` and `distCol`. */
   private[graft] def assignCellsWithDist(rows: DataFrame, vecCol: String,
       centroids: Seq[(Long, Seq[Double])], distCol: String): DataFrame = {
-    val sorted = centroids.sortBy(_._1)
-    val ids = sorted.map(_._1)
-    val matrix = sorted.map(_._2)
+    val (ids, matrix) = cellMatrix(centroids)
     rows
       .withColumn("__ci",
         call_function("graft_nearest_centroid",

@@ -50,9 +50,11 @@ class IvfPruneSpec extends SparkSpec {
     // the injected IN filter must reach the scan as a partition filter
     assert("""PartitionFilters: \[[^\]]*ivf_cell#\d+ (IN|=)""".r.findFirstIn(p).isDefined, p)
 
-    // ground truth: explicit filter to the same probe cells
-    val probes = KnnIvfCatalog.probeCells(
-      KnnIvfCatalog.IvfMeta(centroids, 2), qvec)
+    // ground truth: explicit filter to the 2 nearest cells, by a
+    // brute-force squared-distance sort (ties to the lowest cell id)
+    val probes = centroids.map { case (cell, c) =>
+      (c.zip(qvec).map { case (a, b) => (a - b) * (a - b) }.sum, cell)
+    }.sorted.take(2).map(_._2)
     val manual = l2(spark.read.parquet(path))
       .filter(col("ivf_cell").isin(probes: _*))
       .orderBy(col("dist"), col("id")).limit(10).collect()

@@ -1,11 +1,34 @@
 package graft.vector
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class VectorSearchSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The per-centroid struct-literal argmin the matrix-literal cell
+    * kernels replaced, kept here as their parity reference: sqrt L2
+    * per centroid, ties to the lowest cell id. */
+  private implicit class StructLiteralCells(index: VectorSearch.IvfIndex) {
+    import index.centroids
+    private def l2(a: Column, b: Column): Column =
+      call_function("graft_l2_distance", a, b)
+
+    /** (distance-to-centroid, cell) candidates as one literal-array
+      * expression over `vec` — evaluated map-side, fully codegen. */
+    def cellCandidates(vec: Column): Column =
+      array(centroids.map { case (cellId, cvec) =>
+        struct(
+          l2(vec, typedLit(cvec)).as("d"),
+          lit(cellId).as("cell"))
+      }: _*)
+
+    /** Nearest cell for a vector: argmin over the literal candidates. */
+    def nearestCell(vec: Column): Column =
+      array_min(cellCandidates(vec)).getField("cell")
+  }
 
   private val dir = "/root/testdata/sf0.001"
   private def emb = spark.read.parquet(s"$dir/embeddings.parquet")
