@@ -80,7 +80,7 @@ object Layout {
 
   // ------------------------------------------------ standing indexes
 
-  /** The partitioned-index core: the ONE write, pruned read and
+  /** The partitioned-index core: the ONE write, probe side and
     * parameter sidecar behind all five standing-index layouts —
     * MinHash bands ([[graft.ops.TextDedupIndex]]), pHash bands
     * ([[graft.multimodal.VideoFrameIndex]]), IVF cells
@@ -101,15 +101,25 @@ object Layout {
     *    task writes into every directory (measured: 32 tasks × 256
     *    directories = 8k small files, and a 40-directory probe paid
     *    ~1,300 file opens for ~60k rows).
-    *  - **Probe keys bounded by the partition count.** A probe
-    *    collects the distinct partition-key tuples of its (small)
-    *    batch — at most the layout's partition count
-    *    (bands × [[GroupMod]], cells, buckets), independent of corpus
-    *    AND batch size — and [[prunedRead]] pushes them as a filter on
-    *    the partition columns, so only those directories are read
-    *    (`PartitionFilters` in the executed plan, pinned per index).
-    *    Band layouts bound the count by grouping the band key:
-    *    `bgroup = bkey mod GroupMod` instead of one directory per key.
+    *  - **One probe side, evaluated once on the driver.** Every probe
+    *    hands its batch's key rows to [[probeSides]], which collects
+    *    them ONCE and joins nothing itself: the probe joins the pruned
+    *    index read to the batch held as a driver-side local frame, so
+    *    the batch's subtree (shingling, hashing, cell assignment) is
+    *    never re-evaluated, and nothing is cached. The batch must
+    *    therefore fit on the driver — as the vector, video and LSH
+    *    probes already required, since they broadcast it. An empty
+    *    batch keys no partitions, so its probe is the ordinary join
+    *    with no rows, under the non-empty schema.
+    *  - **Probe keys bounded by the partition count.** The distinct
+    *    partition-key tuples of the batch — at most the layout's
+    *    partition count (bands × [[GroupMod]], cells, buckets),
+    *    independent of corpus AND batch size — are pushed as a filter
+    *    on the partition columns ([[keepPartitions]]), so only those
+    *    directories are read (`PartitionFilters` in the executed plan,
+    *    pinned per index). Band layouts bound the count by grouping the
+    *    band key: `bgroup = bkey mod GroupMod` instead of one directory
+    *    per key.
     *  - **The sidecar.** Key-derivation parameters that are part of
     *    the index, not of the caller ([[graft.multimodal
     *    .VideoFrameIndex]]'s `bands`, [[graft.ops.TextDedupIndex]]'s
@@ -200,17 +210,19 @@ object Layout {
       params = readIndexMeta(spark, inPath).getOrElse(Map.empty),
       sortCols = sortCols, maxRecordsPerFile = maxRecordsPerFile)
 
-  /** The index at `path` read with only the partitions `probe` keys
-    * into: the distinct `partCols` tuples of `probe` (a small batch —
-    * the collect is bounded by the layout's partition count) become a
-    * partition filter ([[keepPartitions]]). `None` when the probe has
-    * no keys — an empty batch probes nothing. */
-  def prunedRead(spark: SparkSession, path: String, probe: DataFrame,
-      partCols: Seq[String]): Option[DataFrame] = {
-    val keys = probe.select(partCols.map(col): _*).distinct().collect()
-    if (keys.isEmpty) None
-    else Some(keepPartitions(spark.read.parquet(path), partCols,
-      keys.toSeq.map(_.toSeq)))
+  /** The two sides of a probe: the index at `path` read with only the
+    * partitions `batch` keys into, and `batch` as a driver-held local
+    * frame. `batch` holds the probe's key rows (`partCols` among its
+    * columns) and is evaluated exactly once, by the collect; its
+    * distinct `partCols` tuples become the partition filter
+    * ([[keepPartitions]]). See the contract above. */
+  def probeSides(spark: SparkSession, path: String, batch: DataFrame,
+      partCols: Seq[String]): (DataFrame, DataFrame) = {
+    val rows = batch.collect()
+    val keyAt = partCols.map(batch.schema.fieldIndex)
+    val keys = rows.toSeq.map(r => keyAt.map(r.get)).distinct
+    (keepPartitions(spark.read.parquet(path), partCols, keys),
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema))
   }
 
   /** Keep only the rows of `index` whose `partCols` tuple is one of

@@ -145,8 +145,9 @@ object VideoFrameIndex {
     * bucketCap × |batch|).
     *
     * The batch is small next to the corpus by the incremental
-    * contract; only the index partitions it hashes into are read
-    * ([[graft.io.Layout.prunedRead]]). Fails loudly when the caller's
+    * contract: its band rows are built once and held on the driver,
+    * and only the index partitions they hash into are read
+    * ([[graft.io.Layout.probeSides]]). Fails loudly when the caller's
     * `bands` differs from the index's. */
   def probePairs(spark: SparkSession, indexPath: String,
       newFrames: DataFrame, hammingMax: Int = 10,
@@ -163,71 +164,52 @@ object VideoFrameIndex {
     // side collapses the pruned index rows map-side (duplicates of a
     // hash co-locate in their (band, bgroup) partition files, so the
     // partial aggregate collapses before the exchange).
-    // r19 (guide §5 reuse): the collapsed batch is consumed THREE
-    // times — the driver-side (band, bgroup) pruning collect, the
-    // broadcast side of the candidate join, and the per-video frame
-    // totals — and each consumer re-evaluated the caller's whole
-    // batch subtree (for the bench fixture: a full re-synthesis per
-    // consumer; in production a re-read of the landed batch).
-    // localCheckpoint (eager) evaluates it once; the batch is
-    // nightly-small by the incremental contract, so the checkpointed
-    // rows are bounded. n_frames_new = Σ nnf over a video's distinct
-    // hashes (= its frame count under the one-row-per-(video,
-    // frame_idx) input contract), so the raw batch is never re-read.
-    val newU = newFrames.groupBy("video", "phash")
-      .agg(count(lit(1)).as("nnf"))
-      .localCheckpoint()
-    val nb = Layout.withBandGroup(bandRowsKeeping(newU, bands))
-    val index = Layout.prunedRead(spark, indexPath, nb, Layout.BandCols)
-    if (index.isEmpty) {
-      // an empty batch probes nothing — empty frames, not a crash
-      val pairs = spark.emptyDataFrame.select(
-        lit("").as("corpus_video"), lit("").as("new_video"),
-        lit(0L).as("matched_corpus"), lit(0L).as("matched_new"),
-        lit(0L).as("n_frames_new"), lit(0d).as("new_frac")).limit(0)
-      val dropped = spark.emptyDataFrame.select(
-        lit(0).as("band"), lit(0L).as("bkey"),
-        lit(0L).as("bucket_size")).limit(0)
-      (pairs, dropped)
-    } else {
-      // collapse pruned corpus rows to distinct (bucket, video, hash)
-      // with frame counts — the weighted cap keeps the same buckets
-      // and the same (band, bkey, bucket_size) dropped report as the
-      // raw-row capBuckets did (whole buckets, summed multiplicities)
-      val pruned = index.get
-        .select(col("video").as("corpus_video"),
-          col("phash").as("corpus_ph"),
-          col("band").cast("int").as("band"), col("bkey"))
-        .groupBy("band", "bkey", "corpus_video", "corpus_ph")
-        .agg(count(lit(1)).as("cnf"))
-      val (corpus, dropped) = graft.ops.Blocking.capBucketsWeighted(
-        pruned, Seq("band", "bkey"), bucketCap, "cnf")
-      val cand = corpus
-        .join(broadcast(nb.select(col("video").as("new_video"),
-          col("phash").as("new_ph"), col("nnf"),
-          col("band"), col("bkey"))), Seq("band", "bkey"))
-        .filter(col("corpus_video") =!= col("new_video"))
-        .filter(bit_count(col("corpus_ph").bitwiseXOR(col("new_ph")))
-          <= hammingMax)
-      val nNew = newU.groupBy(col("video").as("new_video"))
-        .agg(sum(col("nnf")).as("n_frames_new"))
-      // collect_set dedups multi-band hash matches; the in-row fold
-      // sums multiplicities (sets bounded by distinct hashes/video)
-      val pairs = cand.groupBy("corpus_video", "new_video")
-        .agg(collect_set(struct(col("corpus_ph"), col("cnf"))).as("sc"),
-          collect_set(struct(col("new_ph"), col("nnf"))).as("sn"))
-        .select(col("corpus_video"), col("new_video"),
-          aggregate(col("sc"), lit(0L), (acc, x) => acc + x("cnf"))
-            .as("matched_corpus"),
-          aggregate(col("sn"), lit(0L), (acc, x) => acc + x("nnf"))
-            .as("matched_new"))
-        .join(broadcast(nNew), Seq("new_video"))
-        .select(col("corpus_video"), col("new_video"),
-          col("matched_corpus"), col("matched_new"), col("n_frames_new"),
-          (col("matched_new").cast("double") / col("n_frames_new"))
-            .as("new_frac"))
-      (pairs, dropped)
-    }
+    val (index, nb) = Layout.probeSides(spark, indexPath,
+      Layout.withBandGroup(bandRowsKeeping(
+        newFrames.groupBy("video", "phash").agg(count(lit(1)).as("nnf")),
+        bands)),
+      Layout.BandCols)
+    // collapse pruned corpus rows to distinct (bucket, video, hash)
+    // with frame counts — the weighted cap keeps the same buckets
+    // and the same (band, bkey, bucket_size) dropped report as the
+    // raw-row capBuckets did (whole buckets, summed multiplicities)
+    val pruned = index
+      .select(col("video").as("corpus_video"),
+        col("phash").as("corpus_ph"),
+        col("band").cast("int").as("band"), col("bkey"))
+      .groupBy("band", "bkey", "corpus_video", "corpus_ph")
+      .agg(count(lit(1)).as("cnf"))
+    val (corpus, dropped) = graft.ops.Blocking.capBucketsWeighted(
+      pruned, Seq("band", "bkey"), bucketCap, "cnf")
+    val cand = corpus
+      .join(broadcast(nb.select(col("video").as("new_video"),
+        col("phash").as("new_ph"), col("nnf"),
+        col("band"), col("bkey"))), Seq("band", "bkey"))
+      .filter(col("corpus_video") =!= col("new_video"))
+      .filter(bit_count(col("corpus_ph").bitwiseXOR(col("new_ph")))
+        <= hammingMax)
+    // n_frames_new = Σ nnf over a video's distinct hashes (= its frame
+    // count under the one-row-per-(video, frame_idx) input contract);
+    // band 0 holds each distinct hash once
+    val nNew = nb.filter(col("band") === 0)
+      .groupBy(col("video").as("new_video"))
+      .agg(sum(col("nnf")).as("n_frames_new"))
+    // collect_set dedups multi-band hash matches; the in-row fold
+    // sums multiplicities (sets bounded by distinct hashes/video)
+    val pairs = cand.groupBy("corpus_video", "new_video")
+      .agg(collect_set(struct(col("corpus_ph"), col("cnf"))).as("sc"),
+        collect_set(struct(col("new_ph"), col("nnf"))).as("sn"))
+      .select(col("corpus_video"), col("new_video"),
+        aggregate(col("sc"), lit(0L), (acc, x) => acc + x("cnf"))
+          .as("matched_corpus"),
+        aggregate(col("sn"), lit(0L), (acc, x) => acc + x("nnf"))
+          .as("matched_new"))
+      .join(broadcast(nNew), Seq("new_video"))
+      .select(col("corpus_video"), col("new_video"),
+        col("matched_corpus"), col("matched_new"), col("n_frames_new"),
+        (col("matched_new").cast("double") / col("n_frames_new"))
+          .as("new_frac"))
+    (pairs, dropped)
   }
 
   /** One NIGHTLY video-ingest tick, composed end-to-end (VERDICT r17

@@ -93,35 +93,25 @@ object TextDedupIndex {
 
   /** Candidate (corpus_id, new_id) pairs for a new batch against the
     * persisted index, reading ONLY the index partitions the batch
-    * hashes into ([[graft.io.Layout.prunedRead]]). The batch is
-    * assumed small next to the corpus (the incremental contract).
-    * Fails loudly when `k` or `rowsPerBand` differ from the index's. */
+    * hashes into. The batch's band rows are built once and held on the
+    * driver ([[graft.io.Layout.probeSides]]); the batch is assumed
+    * small next to the corpus (the incremental contract). Fails loudly
+    * when `k` or `rowsPerBand` differ from the index's. */
   def probeCandidates(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, rowsPerBand: Int = 2)
       : DataFrame = {
     Layout.requireIndexMeta(spark, indexPath, meta(k, rowsPerBand),
       "probeCandidates")
-    // NOT cached: the batch is micro-batch-sized by the incremental
-    // contract, so re-shingling it once for the pruning collect and
-    // once inside the returned (lazy) join costs next to nothing —
-    // while a per-batch `.cache()` in the long-lived nightly session
-    // this is built for accumulates blocks that nothing unpersists.
-    val nb = Layout.withBandGroup(
-      bandRows(newDocs, idCol, textCol, k, rowsPerBand))
-    Layout.prunedRead(spark, indexPath, nb, Layout.BandCols) match {
-      // an empty micro-batch (or one whose docs are all shorter than a
-      // shingle) has nothing to probe — return an empty pair frame
-      // instead of crashing the caller's streaming loop
-      case None => newDocs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("corpus_id"), lit(0L).as("new_id"))
-      case Some(index) => index
-        .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
-        .join(nb.select(col("doc_id").as("new_id"), col("band"),
-          col("bkey")), Seq("band", "bkey"))
-        .filter(col("corpus_id") =!= col("new_id"))
-        .select("corpus_id", "new_id")
-        .distinct()
-    }
+    val (index, nb) = Layout.probeSides(spark, indexPath,
+      Layout.withBandGroup(bandRows(newDocs, idCol, textCol, k, rowsPerBand)),
+      Layout.BandCols)
+    index
+      .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
+      .join(nb.select(col("doc_id").as("new_id"), col("band"),
+        col("bkey")), Seq("band", "bkey"))
+      .filter(col("corpus_id") =!= col("new_id"))
+      .select("corpus_id", "new_id")
+      .distinct()
   }
 }

@@ -220,10 +220,8 @@ object VectorDedupIndex {
   /** (corpus_id, new_id, cell, cos) pairs with cosine ≥ tau between a
     * new batch and the persisted index, reading ONLY the cell
     * partitions the batch assigns into. The batch is small by the
-    * incremental contract (it is broadcast); like
-    * [[TextDedupIndex.probeCandidates]] it is deliberately NOT cached —
-    * re-assigning a micro-batch twice costs next to nothing, while a
-    * per-batch cache in a long-lived nightly session leaks blocks.
+    * incremental contract (it is broadcast); it is assigned once and
+    * held on the driver ([[graft.io.Layout.probeSides]]).
     *
     * `nprobe` is the recall knob (VERDICT r13 item 4): each batch row
     * probes its n nearest cells instead of one, so a near-dup pair
@@ -240,40 +238,28 @@ object VectorDedupIndex {
       idCol: String, vecCol: String, tau: Double,
       cellCol: String = "ivf_cell", nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // batch assignment: the same matrix-literal argmin as the index
-    // build (map-side, scales in centroid count); multiprobe explodes
-    // each row across its n nearest cells, nearest first
-    val base = batch.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val assigned =
-      if (nprobe == 1) VectorSearch.assignCells(base, "vec", centroids)
-      else base.withColumn("cell",
-        explode(VectorSearch.probeCellsLit(col("vec"), centroids, nprobe)))
-    val nb = assigned
-      .select(col("id").as("new_id"), col("vec").as("new_vec"),
-        col("cell"))
+    // batch assignment: the same nearest-cell kernel as the index
+    // build, each row exploded across its n nearest cells, nearest
+    // first (at n = 1 the build's own cell)
+    val nb = batch
+      .select(col(idCol).cast("long").as("new_id"),
+        col(vecCol).cast("array<double>").as("new_vec"))
+      .withColumn(cellCol,
+        explode(VectorSearch.probeCellsLit(col("new_vec"), centroids, nprobe)))
       .withColumn("new_ss",
         call_function("graft_dot", col("new_vec"), col("new_vec")))
-    Layout.prunedRead(spark, indexPath, nb.select(col("cell").as(cellCol)),
-        Seq(cellCol)) match {
-      case None =>
-        // an empty micro-batch probes nothing — empty pairs, not a crash
-        spark.emptyDataFrame.select(
-          lit(0L).as("corpus_id"), lit(0L).as("new_id"),
-          lit(0L).as("cell"), lit(0d).as("cos")).limit(0)
-      case Some(index) =>
-        // the partition column reads back as int/string per discovery
-        // — cast to long AFTER the pruning filter
-        index.select(col("id").as("corpus_id"), col("vec"),
-            col(cellCol).cast("long").as("cell"))
-          .withColumn("ss", call_function("graft_dot", col("vec"), col("vec")))
-          .join(broadcast(nb), Seq("cell"))
-          .filter(col("corpus_id") =!= col("new_id"))
-          .withColumn("cos",
-            call_function("graft_dot", col("vec"), col("new_vec")) /
-              (sqrt(col("ss")) * sqrt(col("new_ss"))))
-          .filter(col("cos") >= tau)
-          .select(col("corpus_id"), col("new_id"), col("cell"), col("cos"))
-    }
+    val (index, local) = Layout.probeSides(spark, indexPath, nb, Seq(cellCol))
+    // the partition column reads back as int/string per discovery — cast
+    // to long AFTER the pruning filter
+    index.select(col("id").as("corpus_id"), col("vec"),
+        col(cellCol).cast("long").as("cell"))
+      .withColumn("ss", call_function("graft_dot", col("vec"), col("vec")))
+      .join(broadcast(local.withColumnRenamed(cellCol, "cell")), Seq("cell"))
+      .filter(col("corpus_id") =!= col("new_id"))
+      .withColumn("cos",
+        call_function("graft_dot", col("vec"), col("new_vec")) /
+          (sqrt(col("ss")) * sqrt(col("new_ss"))))
+      .filter(col("cos") >= tau)
+      .select(col("corpus_id"), col("new_id"), col("cell"), col("cos"))
   }
 }

@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, EqualTo, Expression, In, InSet, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
@@ -33,10 +33,13 @@ import graft.vector.VectorSearch
   * ties to the lowest cell id) — so the pruned cells are exactly the
   * cells the build assigned rows by and `searchIvf` probes, ulp ties
   * included. They are injected as `Filter(cell IN (...))` directly
-  * above the KnnTopK child. Catalyst's own PushDownPredicates then
-  * carries the filter to the scan, where a `partitionBy(cell)` layout
-  * turns it into real partition pruning — at 100 TB the query reads
-  * `nprobe` directories, not the corpus.
+  * above the KnnTopK child, or — when a projection above the top-k has
+  * let column pruning drop the cell column from the child — above the
+  * relation under the child's Project/Filter chain, which still reads
+  * it. Catalyst's own PushDownPredicates then carries the filter to
+  * the scan, where a `partitionBy(cell)` layout turns it into real
+  * partition pruning — at 100 TB the query reads `nprobe`
+  * directories, not the corpus.
   */
 object KnnIvfCatalog {
   /** One registered index: centroid set + probe width, keyed by the
@@ -104,6 +107,23 @@ case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
+  /** The node under the top-k whose output carries a registered cell
+    * column: `p` itself, else the first such node down its chain of
+    * deterministic Projects and Filters (row-wise, so a cell filter
+    * there keeps the same rows as one above `p`). */
+  private def cellSource(p: LogicalPlan): Option[(LogicalPlan, Attribute)] =
+    p.output.find(a => lookup(a.name).isDefined).map(p -> _).orElse(p match {
+      case Project(pl, c) if pl.forall(_.deterministic) => cellSource(c)
+      case Filter(cond, c) if cond.deterministic => cellSource(c)
+      case _ => None
+    })
+
+  /** `p` with `cond` filtering directly above its node `src`. */
+  private def filterAt(p: LogicalPlan, src: LogicalPlan,
+      cond: Expression): LogicalPlan =
+    if (p eq src) Filter(cond, p)
+    else p.withNewChildren(p.children.map(filterAt(_, src, cond)))
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     // nearest-neighbor shapes only: ascending distance. A descending
     // sort (farthest points) must stay exact — nearest-cell probes
@@ -111,13 +131,13 @@ case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case k @ KnnTopK(_, order, child)
         if order.head.direction == Ascending =>
       val pruned = for {
-        cellAttr <- child.output.find(a => lookup(a.name).isDefined)
+        (src, cellAttr) <- cellSource(child)
         if !alreadyPruned(child, cellAttr)
         meta <- lookup(cellAttr.name)
         q <- queryVector(order.head.child).orElse(
           // aliased form: distance projected one level below the sort
           child match {
-            case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+            case p: Project =>
               p.projectList.collectFirst {
                 case al: org.apache.spark.sql.catalyst.expressions.Alias
                     if order.head.child.references.contains(al.toAttribute) =>
@@ -127,7 +147,7 @@ case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           })
         lits <- cellLiterals(cellAttr,
           VectorSearch.probeCellsOf(q, meta.centroids, meta.nprobe))
-      } yield k.copy(child = Filter(In(cellAttr, lits), child))
+      } yield k.copy(child = filterAt(child, src, In(cellAttr, lits)))
       pruned.getOrElse(k)
   }
 }

@@ -42,11 +42,11 @@ import graft.expr.{CosineSimilarity, DotProduct, L2Distance}
   * it is skipped when the input has one partition (the local heap is
   * the answer). Zero input partitions yield one empty partition.
   *
-  * Session flags: `spark.graft.knnTopK.maxK` (default 10000 — above
-  * that a heap per partition stops being obviously right; fall through
-  * to Spark) and `spark.graft.knnTopK.enabled` (default true). Nothing
-  * in the library or the registry sets the latter; it is the switch
-  * KnnTopKSpec flips to get the stock plan as its reference.
+  * k above [[KnnTopK.MaxK]] falls through to Spark: there a heap per
+  * partition stops being obviously right. The stock plan is one conf
+  * away — Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.KnnTopKRewrite`,
+  * KnnTopKSpec's reference switch.
   */
 case class KnnTopK(limit: Int, order: Seq[SortOrder], child: LogicalPlan)
     extends UnaryNode {
@@ -56,15 +56,15 @@ case class KnnTopK(limit: Int, order: Seq[SortOrder], child: LogicalPlan)
     copy(child = c)
 }
 
+object KnnTopK {
+  /** The largest k [[KnnTopKRewrite]] takes. */
+  val MaxK = 10000
+}
+
 /** Matches Limit over a global Sort whose PRIMARY key is an expensive
   * double-valued vector expression (graft distance/similarity), either
   * inline in the Sort or aliased one Project below it. */
 case class KnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.knnTopK.enabled", "true").toBoolean
-  private def maxK: Int =
-    conf.getConfString("spark.graft.knnTopK.maxK", "10000").toInt
 
   /** The head sort key, seen through one level of Project aliasing. */
   private def resolveHead(key: Expression, child: LogicalPlan): Expression =
@@ -87,12 +87,11 @@ case class KnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def eligible(k: Int, order: Seq[SortOrder],
       sortChild: LogicalPlan): Boolean =
-    k > 0 && k <= maxK && order.nonEmpty &&
+    k > 0 && k <= KnnTopK.MaxK && order.nonEmpty &&
       order.head.child.dataType == DoubleType &&
       isVectorKey(resolveHead(order.head.child, sortChild))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case Limit(IntegerLiteral(k), Sort(order, true, child, _))
           if eligible(k, order, child) =>
@@ -106,7 +105,6 @@ case class KnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if eligible(k, order, child) && projectList.forall(_.deterministic) =>
         p.copy(child = KnnTopK(k, order, child))
     }
-  }
 }
 
 /** Plans [[KnnTopK]] as one [[KnnTopKExec]]. */

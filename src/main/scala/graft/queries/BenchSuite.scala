@@ -426,11 +426,8 @@ object BenchSuite extends QuerySuite {
     * (PERFORMANCE.md "x21 profile"). Stateful
     * streaming partitions must be sized to STATE VOLUME (target tens
     * of MB per partition), not to core count; 8 partitions hold to
-    * sf1 (~140 MB state → ~17 MB each) and cut x21 3.2×. Override with
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS when benching a fixture whose
-    * watermark-horizon state outgrows that. */
-  private val streamStateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    * sf1 (~140 MB state → ~17 MB each) and cut x21 3.2×. */
+  private val streamStateParts = "8"
 
   private def streamArm(name: String,
       build: (SparkSession, DataFrame) => org.apache.spark.sql.Dataset[_],

@@ -331,19 +331,18 @@ object VectorSearch {
       bucketCol), path, Seq(bucketCol), SaveMode.Append)
 
   /** Probe a persisted LSH index: only the bucket directories the
-    * query set probes are read ([[graft.io.Layout.prunedRead]];
-    * queries are small by contract); exact top-k within them. */
+    * query set probes are read; the exploded queries are built once and
+    * held on the driver ([[graft.io.Layout.probeSides]]; queries are
+    * small by contract); exact top-k within them. */
   def searchLshIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, qidCol: String, qvecCol: String,
       planes: Seq[Seq[Double]], k: Int, multiprobe: Boolean = true,
       bucketCol: String = "lsh_bucket"): DataFrame = {
-    val q = lshQueries(queries, qidCol, qvecCol, planes, multiprobe)
-    val corpus = Layout.prunedRead(spark, path,
-        q.select(col("bucket").as(bucketCol)), Seq(bucketCol))
-      .getOrElse(spark.read.parquet(path).limit(0))
-      .withColumnRenamed(bucketCol, "bucket")
+    val (corpus, q) = Layout.probeSides(spark, path,
+      lshQueries(queries, qidCol, qvecCol, planes, multiprobe)
+        .withColumnRenamed("bucket", bucketCol), Seq(bucketCol))
     rankTopK(
-      corpus.join(broadcast(q), Seq("bucket"))
+      corpus.join(broadcast(q), Seq(bucketCol))
         .withColumn("dist", l2(col("vec"), col("qvec"))),
       k)
   }

@@ -119,6 +119,13 @@ class VideoFrameIndexSpec extends SparkSpec {
     val (pairs, dropped) = VideoFrameIndex.probePairs(spark, path, empty)
     assert(pairs.count() === 0)
     assert(dropped.count() === 0)
+    // both carry the non-empty probe's columns and types
+    val (fullPairs, fullDropped) =
+      VideoFrameIndex.probePairs(spark, path, batch)
+    assert(fullPairs.count() > 0)
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(shape(pairs) == shape(fullPairs))
+    assert(shape(dropped) == shape(fullDropped))
   }
 
   test("banding travels with the index: mismatched probe/admit fail loudly") {

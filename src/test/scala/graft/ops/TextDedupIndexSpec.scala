@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.SparkSpec
 
@@ -96,6 +98,21 @@ class TextDedupIndexSpec extends SparkSpec {
     // … or contain only docs too short to produce a single 3-shingle
     val tiny = Seq((200L, "one two")).toDF("doc_id", "text")
     assert(TextDedupIndex.probeCandidates(spark, path, tiny).count() == 0)
+    // both carry the non-empty probe's columns and types — the caller's
+    // id type included (int here)
+    def intIds(df: DataFrame) = df.withColumn("doc_id", col("doc_id").cast("int"))
+    val intPath = java.nio.file.Files
+      .createTempDirectory("lsh_empty_int").toString
+    TextDedupIndex.writeIndex(intIds(corpus), intPath)
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val full = TextDedupIndex.probeCandidates(spark, intPath, intIds(batch))
+    assert(full.count() > 0)
+    assert(shape(full) == Seq("corpus_id" -> IntegerType,
+      "new_id" -> IntegerType))
+    for (b <- Seq(empty, tiny)) {
+      val none = TextDedupIndex.probeCandidates(spark, intPath, intIds(b))
+      assert(none.count() == 0 && shape(none) == shape(full))
+    }
   }
 
   test("admitBatch: N nightly admits ≡ one full rebuild — band-row " +

@@ -358,7 +358,15 @@ class VectorDedupIndexSpec extends SparkSpec {
     val cents = VectorDedupIndex.seedCentroids(emb, "vec_id", "embedding", 8)
     VectorDedupIndex.writeIndex(emb, "vec_id", "embedding", cents, path)
     val empty = emb.filter(col("vec_id") < 0)
-    assert(VectorDedupIndex.probePairs(spark, path, cents,
-      empty, "vec_id", "embedding", Tau).count() == 0)
+    val none = VectorDedupIndex.probePairs(spark, path, cents,
+      empty, "vec_id", "embedding", Tau)
+    assert(none.count() == 0)
+    // the non-empty probe's columns and types
+    val full = VectorDedupIndex.probePairs(spark, path, cents,
+      emb.filter(col("vec_id") < 20), "vec_id", "embedding", Tau)
+    assert(full.count() > 0)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    assert(shape(none) == shape(full))
   }
 }

@@ -31,9 +31,11 @@ class KnnTopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.withColumn("dist",
       call_function("graft_l2_distance", col("vec"), typedLit(qvec)))
 
+  /** Off = Spark's own rule exclusion: the stock reference plan. */
   private def withRewrite[A](on: Boolean)(body: => A): A = {
-    spark.conf.set("spark.graft.knnTopK.enabled", on.toString)
-    try body finally spark.conf.unset("spark.graft.knnTopK.enabled")
+    val key = "spark.sql.optimizer.excludedRules"
+    if (!on) spark.conf.set(key, "graft.plans.KnnTopKRewrite")
+    try body finally spark.conf.unset(key)
   }
 
   private def executed(df: DataFrame): String = {
@@ -192,13 +194,14 @@ class KnnTopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(all.map(_.getLong(0)).toSeq == (0L until 40L))
   }
 
-  test("k above spark.graft.knnTopK.maxK falls back to Spark") {
-    spark.conf.set("spark.graft.knnTopK.maxK", "3")
-    try {
-      val p = executed(l2q(corpus).orderBy(col("dist"), col("id")).limit(10))
-      assert(!p.contains("KnnTopK"), p)
-      assert(p.contains("TakeOrderedAndProject"), p)
-    } finally spark.conf.unset("spark.graft.knnTopK.maxK")
+  test("k above KnnTopK.MaxK falls back to Spark") {
+    // RDD-backed, so Spark cannot bound the rows and drop a limit above
+    // the corpus size
+    val unbounded = spark.createDataFrame(corpus.rdd, corpus.schema)
+    val p = executed(l2q(unbounded).orderBy(col("dist"), col("id"))
+      .limit(KnnTopK.MaxK + 1))
+    assert(!p.contains("KnnTopK"), p)
+    assert(p.contains("TakeOrderedAndProject"), p)
   }
 
   test("plain non-vector sort keys are left alone") {

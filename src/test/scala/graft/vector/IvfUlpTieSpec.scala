@@ -86,4 +86,22 @@ class IvfUlpTieSpec extends SparkSpec {
     assert("""PartitionFilters: \[[^\]]*tie_cell#\d+ (IN|=)""".r
       .findFirstIn(p).isDefined, p)
   }
+
+  test("a projection above the pruned top-k keeps the prune: " +
+      "select(\"id\") returns cell 1's rows over PartitionFilters") {
+    val dir = Files.createTempDirectory("graft_tie_ivf_sel").toString + "/i"
+    VectorSearch.writeIvfIndexed(index, dir, "tie_cell")
+    // column pruning drops tie_cell from the top-k's child: the prune
+    // must find it in the relation under the top-k
+    val df = VectorSearch.readIvfIndexed(spark, dir, centroids,
+        nprobe = 1, cellCol = "tie_cell")
+      .orderBy(call_function("graft_l2_distance", col("vec"),
+        typedLit(origin)), col("id"))
+      .limit(4)
+      .select("id")
+    assert(ids(df) == want)
+    val p = df.queryExecution.executedPlan.toString
+    assert("""PartitionFilters: \[[^\]]*tie_cell#\d+ (IN|=)""".r
+      .findFirstIn(p).isDefined, p)
+  }
 }

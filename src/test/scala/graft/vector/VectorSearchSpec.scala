@@ -112,6 +112,13 @@ class VectorSearchSpec extends SparkSpec {
     val b = inMem.select("query_id", "id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(a == b, "indexed and in-memory LSH results diverge")
+    // an empty query set probes nothing, under the non-empty schema
+    val none = VectorSearch.searchLshIndexed(spark, path,
+      emb.filter(col("vec_id") < 0), "vec_id", "embedding", planes, k = 5)
+    assert(none.count() == 0)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    assert(shape(none) == shape(indexed))
   }
 
   test("multiprobe visits strictly more candidates than single-bucket") {
