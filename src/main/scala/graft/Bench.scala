@@ -118,7 +118,10 @@ object Bench {
   // running its group in-process — a degraded artifact beats no
   // artifact. DEFAULT ON for full runs since r12 (opt out with
   // SPARK_GRAFT_BENCH_FORK=0); targeted BENCH_ONLY runs stay
-  // in-process. ----
+  // in-process. `GraftSession` now sizes the codegen cache (4000
+  // entries, was Spark's 100), which removes the eviction half of the
+  // codegen-cache reason; whether the fork is still needed waits on a
+  // full-registry A/B with and without it. ----
 
   /** Family key = the name prefix up to the first digit run's end
     * (r01→r, d06→d, x17→x …), grouped into 3 balanced child JVMs. */

@@ -112,6 +112,14 @@ object GraftSession {
       // 4096 in-memory groups is still < 1 MB per task.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "4096")
+      // generated classes per JVM: the stock 100 entries evict a warm
+      // nightly_ingest night's classes, which it then compiles again.
+      // A/B, this conf alone (perfbench nightly_ingest, 4-core host,
+      // alternating): traced seeds 9901/9902, 2/2 pairs, codegen
+      // classes per night 79 → 5.3 and 100 → 4.7; untraced seeds
+      // 9911-9913, 3/3 pairs, median night p50 6,705 → 5,879 ms, tail
+      // 11.6 → 9.6 s, cache_mb equal.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.expr.GraftExtensions")
       .config("spark.ui.enabled", "false")

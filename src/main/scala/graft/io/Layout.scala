@@ -1,7 +1,9 @@
 package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListedParquet
 
 /** Data-layout utilities for the 100 TB posture — the concerns that
   * dominate real lake maintenance and that no single query shows:
@@ -111,6 +113,17 @@ object Layout {
     *    probes already required, since they broadcast it. An empty
     *    batch keys no partitions, so its probe is the ordinary join
     *    with no rows, under the non-empty schema.
+    *  - **A listing-free read.** Every read of a standing index —
+    *    probe, compaction, occupancy audit — goes through
+    *    [[readIndex]], which lists on the driver, with Spark's serial
+    *    lister and its hidden-file rules, only the leaf directories it
+    *    wants: a probe's the directories its keys name (one that does
+    *    not exist is skipped), a full read's every leaf. Both are
+    *    bounded by the partition count, so no read starts a listing
+    *    job or a schema job, however many directories the layout has
+    *    (`spark.read.parquet` started four 64-task listing jobs per
+    *    text-index read). Each read lists afresh, so an admit is
+    *    visible to the next probe.
     *  - **Probe keys bounded by the partition count.** The distinct
     *    partition-key tuples of the batch — at most the layout's
     *    partition count (bands × [[GroupMod]], cells, buckets),
@@ -206,7 +219,7 @@ object Layout {
       outPath: String, partCols: Seq[String],
       sortCols: Seq[String] = Nil,
       maxRecordsPerFile: Long = 1000000L): Unit =
-    writePartitioned(spark.read.parquet(inPath), outPath, partCols,
+    writePartitioned(readIndex(spark, inPath), outPath, partCols,
       params = readIndexMeta(spark, inPath).getOrElse(Map.empty),
       sortCols = sortCols, maxRecordsPerFile = maxRecordsPerFile)
 
@@ -221,8 +234,26 @@ object Layout {
     val rows = batch.collect()
     val keyAt = partCols.map(batch.schema.fieldIndex)
     val keys = rows.toSeq.map(r => keyAt.map(r.get)).distinct
-    (keepPartitions(spark.read.parquet(path), partCols, keys),
+    (readIndex(spark, path, Some((partCols, keys))),
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema))
+  }
+
+  /** The standing index at `path`, read without a listing or schema
+    * job (see the contract above). With `keep` = (partition columns,
+    * keys), only the directories those partition-key tuples name are
+    * listed, and [[keepPartitions]] keeps exactly their rows; when
+    * none of them exists, every leaf is listed for the schema and none
+    * is kept. Without `keep`, every leaf is read. A key names the
+    * directory the write made for it: each value rendered as a
+    * string, null as Spark's default partition name. Partition
+    * columns are typed by discovery over the directories read. */
+  def readIndex(spark: SparkSession, path: String,
+      keep: Option[(Seq[String], Seq[Seq[Any]])] = None): DataFrame = {
+    val index = ListedParquet.read(spark, path, keep.map { case (cols, keys) =>
+      keys.map(k => cols.zip(k).map { case (c, v) => ExternalCatalogUtils
+        .getPartitionPathString(c, Option(v).map(_.toString).orNull)
+      }.mkString("/")).distinct })
+    keep.fold(index) { case (cols, keys) => keepPartitions(index, cols, keys) }
   }
 
   /** Keep only the rows of `index` whose `partCols` tuple is one of

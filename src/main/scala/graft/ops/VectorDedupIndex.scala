@@ -117,7 +117,7 @@ object VectorDedupIndex {
     * maintenance audit, not a per-batch operation. */
   def cellOccupancy(spark: SparkSession, indexPath: String,
       cellCol: String = "ivf_cell"): DataFrame =
-    spark.read.parquet(indexPath)
+    Layout.readIndex(spark, indexPath)
       // input_file_name() is non-deterministic — project it BEFORE the
       // aggregate (Spark rejects it inside an agg function's args)
       .select(col(cellCol).cast("long").as("cell"),
@@ -190,7 +190,8 @@ object VectorDedupIndex {
       .agg(max(col("n_rows")).as("mx"), sum(col("n_rows")).as("tot"))
       .head()
     val skew = occ.getLong(0).toDouble * centroids.size / occ.getLong(1)
-    val idxRows = spark.read.parquet(indexPath).select(col("id"), col("vec"))
+    val idxRows = Layout.readIndex(spark, indexPath)
+      .select(col("id"), col("vec"))
     val idxSample =
       if (sampleFraction >= 1.0) idxRows
       else idxRows.sample(withReplacement = false, sampleFraction,

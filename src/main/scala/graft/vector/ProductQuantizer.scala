@@ -266,7 +266,7 @@ object ProductQuantizer {
   /** Read a [[writeIvfPq]] layout back for [[searchIvfPq]]. */
   def readIvfPq(spark: org.apache.spark.sql.SparkSession, path: String)
       : DataFrame =
-    spark.read.parquet(path)
+    graft.io.Layout.readIndex(spark, path)
 
   /** IVFPQ search: the query probes its `nprobe` nearest cells (the
     * nearest-cell kernel [[VectorSearch.searchIvf]] probes with) and

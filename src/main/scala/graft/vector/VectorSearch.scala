@@ -233,7 +233,7 @@ object VectorSearch {
       centroids: Seq[(Long, Seq[Double])], nprobe: Int,
       cellCol: String = "ivf_cell"): DataFrame = {
     graft.plans.KnnIvfCatalog.register(cellCol, centroids, nprobe)
-    spark.read.parquet(path)
+    Layout.readIndex(spark, path)
   }
 
   /** Probe the IVF index: rank the query's `nprobe` nearest cells
