@@ -107,133 +107,6 @@ object Bench {
       .sum / (1024 * 1024)
     catch { case scala.util.control.NonFatal(_) => -1L }
 
-  // ---- forked family-JVM mode (VERDICT r10 item 1 + r11 item 5):
-  // full-registry runs execute in fresh child JVMs, one per
-  // query-family group, so one family's late-run heap pressure or
-  // codegen-cache growth can never contaminate another's numbers.
-  // Each child is THIS main with SPARK_GRAFT_BENCH_ONLY set, writing
-  // BENCH_PARTIAL.json into its own temp cwd; the parent merges the
-  // partials into one BENCH_FULL.json (recording the group
-  // boundaries as `fork_groups`). A child that fails falls back to
-  // running its group in-process — a degraded artifact beats no
-  // artifact. DEFAULT ON for full runs since r12 (opt out with
-  // SPARK_GRAFT_BENCH_FORK=0); targeted BENCH_ONLY runs stay
-  // in-process. `GraftSession` now sizes the codegen cache (4000
-  // entries, was Spark's 100), which removes the eviction half of the
-  // codegen-cache reason; whether the fork is still needed waits on a
-  // full-registry A/B with and without it. ----
-
-  /** Family key = the name prefix up to the first digit run's end
-    * (r01→r, d06→d, x17→x …), grouped into 3 balanced child JVMs. */
-  private def familyGroups(names: Seq[String]): Seq[Seq[String]] = {
-    val byFam = names.groupBy(_.takeWhile(!_.isDigit)).toSeq.sortBy(_._1)
-    val groups = Array.fill(3)(Vector.empty[String])
-    // largest-first into the emptiest bucket: coarse balance is enough
-    byFam.sortBy(-_._2.size).foreach { case (_, qs) =>
-      val i = groups.indices.minBy(groups(_).size)
-      groups(i) = groups(i) ++ qs
-    }
-    groups.filter(_.nonEmpty).toSeq
-  }
-
-  /** JVM args that size the heap — stripped from the child command
-    * line so [[runForked]] can pin its own (see `childHeapMb`). */
-  private def isHeapArg(a: String): Boolean =
-    a.startsWith("-Xmx") || a.startsWith("-Xms") || a.startsWith("-Xmn") ||
-      a.startsWith("-XX:MaxHeapSize") || a.startsWith("-XX:InitialHeapSize") ||
-      a.startsWith("-XX:MinHeapSize") || a.startsWith("-XX:MaxRAMPercentage")
-
-  /** Run one group in a child JVM (same classpath + JVM flags as this
-    * one — run/fork gives a real -cp — EXCEPT the heap, which is
-    * pinned to `childHeapMb`); returns the parsed partial or None on
-    * any failure.
-    *
-    * Why the heap is pinned (VERDICT r14 item 1): the measuring JVMs
-    * used to inherit the parent's -Xmx, which is an environment
-    * accident (SPARK_DRIVER_MEM / sbt -mem at whatever the launching
-    * harness set). The r14 driver ran the parent at 88 GiB and the
-    * inherited-heap children measured 10 A/B arms 2-6× slower than
-    * the committed 8 GiB pins — GC-ergonomics/page-cache trades, not
-    * plan changes — making builder and driver artifacts incomparable
-    * three rounds running. A fixed child heap makes the measurement
-    * environment part of the bench contract instead of an accident;
-    * the value is recorded in the artifact (`env.bench_heap_mb`) and
-    * checked against pins by [[loadBaseline]]. */
-  private def runForked(group: Seq[String], childHeapMb: Int)
-      : Option[org.json4s.JValue] =
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bench-fork")
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(System.getProperty("java.home") + "/bin/java")
-      jvmArgs.forEach(a => if (!isHeapArg(a)) cmd.add(a))
-      cmd.add(s"-Xmx${childHeapMb}m")
-      cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-      cmd.add("graft.Bench")
-      val pb = new ProcessBuilder(cmd)
-      pb.directory(tmp.toFile)
-      pb.environment().put("SPARK_GRAFT_BENCH_ONLY", group.mkString(","))
-      // fresh child JVMs pay JIT/codegen warmup inside their first
-      // queries' WARM iterations too (r12: f20 cold 33.4 s in group 0
-      // vs 4.6 s steady) — tell the child to run one untimed warmup
-      // pass before its timed entries (VERDICT r12 item 4)
-      pb.environment().put("SPARK_GRAFT_BENCH_WARMUP", "1")
-      pb.environment().remove("SPARK_GRAFT_BENCH_FORK") // no recursion
-      pb.redirectErrorStream(false)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT) // keep progress
-      val p = pb.start()
-      val rc = p.waitFor()
-      val f = tmp.resolve("BENCH_PARTIAL.json")
-      if (rc == 0 && java.nio.file.Files.exists(f))
-        Some(org.json4s.jackson.JsonMethods.parse(
-          new String(java.nio.file.Files.readAllBytes(f), "UTF-8")))
-      else {
-        System.err.println(s"[bench] forked group rc=$rc — " +
-          "falling back in-process")
-        None
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] fork failed (${e.getMessage}) — " +
-          "falling back in-process")
-        None
-    }
-
-  /** Reconstruct per-query results from a child's BENCH_PARTIAL detail
-    * block (per-iteration tainted granularity collapses to the
-    * per-query flag, which is what every consumer reads). */
-  private def resultsFromPartial(doc: org.json4s.JValue)
-      : Seq[BenchReport.QueryResult] = {
-    import org.json4s._
-    val detail = (doc \ "detail").asInstanceOf[JObject]
-    detail.obj.map { case (name, d) =>
-      def longs(k: String) = (d \ k).asInstanceOf[JArray]
-        .arr.map(_.asInstanceOf[JInt].num.toLong)
-      def dbls(k: String) = (d \ k).asInstanceOf[JArray].arr.map {
-        case JDouble(x) => x
-        case JInt(x) => x.toDouble
-        case _ => Double.NaN
-      }
-      val tainted = (d \ "tainted") == JBool(true)
-      // host_cpu_ms is r13+; absent in older partials → -1 sentinel
-      val hostCpu = d \ "host_cpu_ms" match {
-        case a: JArray => a.arr.map(_.asInstanceOf[JInt].num.toLong)
-        case _ => Nil
-      }
-      val iters = dbls("times").lazyZip(longs("gc_ms"))
-        .lazyZip(longs("cpu_ms")).toSeq
-        .zipWithIndex.map { case ((sec, gc, cpu), i) =>
-          BenchReport.Iter(sec, gc, longs("gc_n")(i), cpu,
-            longs("heap_mb")(i), longs("storage_mb")(i),
-            dbls("load")(i), tainted,
-            hostCpuMs = hostCpu.applyOrElse(i, (_: Int) => -1L))
-        }
-      BenchReport.QueryResult(name, iters)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to ALL host cores, not a fixed small number: a bench
@@ -247,34 +120,17 @@ object Bench {
     // optional comma-separated name filter for targeted iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fork-mode is the DEFAULT for full-registry runs (VERDICT r11
-    // item 5; b0eec66 validated it on the whole registry): family-
-    // grouped child JVMs stop late-run heap pressure from
-    // contaminating early families, so the committed artifact stays
-    // reproducible under the driver's scheduler too. Opt out with
-    // SPARK_GRAFT_BENCH_FORK=0; targeted (BENCH_ONLY) runs stay
-    // in-process — isolation buys nothing for a two-query iteration.
-    val forkMode = only.isEmpty &&
-      !sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("0")
-
-    // the heap the MEASURING JVMs run under: fork children are pinned
-    // to a fixed -Xmx independent of the parent's (see runForked);
-    // in-process runs measure under this JVM's own heap. Recorded in
-    // the artifact and checked against pins — heap is part of the
-    // measurement environment, not an accident of who launched us.
-    val childHeapMb = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_CHILD_HEAP_MB", "8192").toInt
-    val benchHeapMb =
-      if (forkMode) childHeapMb.toLong
-      else Runtime.getRuntime.maxMemory() / (1024 * 1024)
+    // the heap the registry is measured under: this JVM's own max
+    // (run/fork's -Xmx, SPARK_DRIVER_MEM). Recorded in the artifact
+    // and checked against pins — heap is part of the measurement
+    // environment, not an accident of who launched us.
+    val benchHeapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
 
     // committed clean-session pins for the cross-run regression flag
-    // (VERDICT r12 item 1). Child JVMs run in a temp cwd and simply
-    // find no file — the parent applies the pins when merging. Pins
-    // apply to FULL runs only: they were measured under fork-mode's
-    // per-child warmup, and a targeted in-process run pays cold-JVM
-    // costs in every iteration (measured: a lone r08 reads 0.817 s
-    // vs its 0.31 s full-run pin — conditions, not a regression).
+    // (VERDICT r12 item 1). Pins apply to FULL runs only: a targeted
+    // run measures its arms without the JIT/codegen residue of the
+    // registry ahead of them (measured: a lone r08 reads 0.817 s vs
+    // its 0.31 s full-run pin — conditions, not a regression).
     val (baseline, baselineStatus) =
       if (only.isDefined) (None, "off:targeted_run")
       else loadBaseline(
@@ -283,36 +139,7 @@ object Bench {
         Runtime.getRuntime.availableProcessors(),
         BenchReport.fixtureBytes(sfDir))
 
-    var forkGroups: Option[Seq[BenchReport.ForkGroup]] = None
-    var warmedUp: Option[String] = None
-    val results: Seq[BenchReport.QueryResult] =
-      if (!forkMode) {
-        val (rs, w) = runRegistry(only, sfDir, cpus, iters)
-        warmedUp = w
-        rs
-      } else {
-        val allNames =
-          (SparkEntry.queries ++ SparkEntry.benchOnlyQueries).keys.toSeq
-        val groups = familyGroups(allNames)
-        val ran = groups.map { group =>
-          runForked(group, childHeapMb) match {
-            case Some(doc) =>
-              val w = doc \ "warmup" match {
-                case org.json4s.JString(s) => Some(s)
-                case _ => None
-              }
-              (resultsFromPartial(doc),
-                BenchReport.ForkGroup(group, forked = true, w))
-            case None =>
-              // in-process fallback: no fresh JVM, so no warmup either —
-              // the provenance entry records BOTH degradations
-              (runRegistry(Some(group.toSet), sfDir, cpus, iters)._1,
-                BenchReport.ForkGroup(group, forked = false, None))
-          }
-        }
-        forkGroups = Some(ran.map(_._2))
-        ran.flatMap(_._1)
-      }
+    val (results, warmedUp) = runRegistry(only, sfDir, cpus, iters)
 
     // full-precision detail file (every query, all iterations + the
     // per-iteration GC/CPU/load/memory evidence — see BenchReport).
@@ -323,8 +150,7 @@ object Bench {
       if (only.isDefined) "BENCH_PARTIAL.json" else "BENCH_FULL.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
       BenchReport.fullJson(iters, sfDir, cpus, results,
-        forkGroups = forkGroups, baseline = baseline,
-        warmup = warmedUp, benchHeapMb = benchHeapMb,
+        baseline = baseline, warmup = warmedUp, benchHeapMb = benchHeapMb,
         baselineStatus = baselineStatus).getBytes("UTF-8"))
 
     val sfNum = raw".*sf([0-9.]+)/?$$".r
@@ -342,7 +168,7 @@ object Bench {
     *
     *  - `sf_dir` must be equal — an sf1 scaling run compared against
     *    sf0.1 pins manufactured 4 false `regressed` flags;
-    *  - `bench_heap_mb` (the measuring JVMs' heap) must be within
+    *  - `bench_heap_mb` (the measuring JVM's heap) must be within
     *    25% — the r14 driver's 88 GiB-heap run flagged 10 A/B arms
     *    against 8 GiB pins while run totals agreed within 2%: a
     *    GC-ergonomics environment trade, not a plan change, and the
@@ -355,8 +181,9 @@ object Bench {
     * fires) — a bench run must not die on its own calibration file.
     * Returns the pins plus a status string the artifact records, so
     * a disabled gate names its own cause instead of reading as
-    * "0 regressions". Old pin files without the env keys still apply
-    * (back-compat); regenerate via tools/pin_baseline.py to scope. */
+    * "0 regressions". A pin file missing any of the three scope keys
+    * is refused too (regenerate it via tools/pin_baseline.py);
+    * `fixture_bytes` is checked only where the pin file records it. */
   private[graft] def loadBaseline(path: String, sfDir: String,
       benchHeapMb: Long, hostCores: Int, fixtureBytes: Long = -1L)
       : (Option[Map[String, Double]], String) =
@@ -382,9 +209,12 @@ object Bench {
           System.err.println(s"[bench] $reason — cross-run flag disabled")
           (None, s"off:$reason")
         }
-        if (!pinnedSf.contains(sfDir))
-          off(s"pins are for sf_dir=${pinnedSf.getOrElse("?")}, " +
-            s"this run is $sfDir")
+        val unscoped = Seq("sf_dir" -> pinnedSf, "bench_heap_mb" -> pinnedHeap,
+          "host_cores" -> pinnedCores).collect { case (k, None) => k }
+        if (unscoped.nonEmpty)
+          off(s"unscoped_pins(missing ${unscoped.mkString(",")})")
+        else if (!pinnedSf.contains(sfDir))
+          off(s"pins are for sf_dir=${pinnedSf.get}, this run is $sfDir")
         else if (pinnedHeap.exists(h =>
             math.abs(h - benchHeapMb).toDouble / math.max(h, benchHeapMb)
               > 0.25))
@@ -406,9 +236,7 @@ object Bench {
               case (k, JDouble(v)) => k -> v
               case (k, JInt(v)) => k -> v.toDouble
             }.toMap
-            val scoped = pinnedHeap.isDefined && pinnedCores.isDefined
-            (Some(pins), s"applied(${pins.size}" +
-              (if (scoped) "" else ";unscoped_legacy_pins") + ")")
+            (Some(pins), s"applied(${pins.size})")
           case _ => (None, "off:no_steady_block")
         }
       }
@@ -419,12 +247,10 @@ object Bench {
         (None, "off:unreadable")
     }
 
-  /** The in-process registry run: one SparkSession, `iters` timed
-    * passes per (filtered) query, telemetry per iteration. Returns the
-    * results plus the name of the untimed warmup query, if one ran
-    * (SPARK_GRAFT_BENCH_WARMUP=1 — set by the fork parent for child
-    * JVMs, where fresh-JVM JIT/codegen cost would otherwise land in
-    * the first family's warm iterations). */
+  /** The registry run: one SparkSession, `iters` timed passes per
+    * (filtered) query, telemetry per iteration. Returns the results
+    * plus the name of the untimed warmup query (None only when the
+    * filter matched nothing). */
   private def runRegistry(only: Option[Set[String]], sfDir: String,
       cpus: String, iters: Int)
       : (Seq[BenchReport.QueryResult], Option[String]) = {
@@ -515,27 +341,24 @@ object Bench {
     val registry = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    // untimed warmup pass (fork children only): the group's
-    // alphabetically-FIRST query runs once and its timing is discarded
-    // — it absorbs the fresh JVM's JIT, codegen-compiler, and
-    // shuffle-machinery spin-up so the first TIMED entries measure the
-    // plan, not the VM. The name lands in the artifact (partial
-    // `warmup`, merged into fork_groups) so early-group numbers are
-    // auditable. Sorted, not headOption: the registry is a HashMap, so
-    // headOption made the warmup query hash-order arbitrary (ADVICE
-    // r13) — which query's cold cost got absorbed differed run to run.
+    // untimed warmup pass: the alphabetically-FIRST query runs once
+    // and its timing is discarded — it absorbs the fresh JVM's JIT,
+    // codegen-compiler, and shuffle-machinery spin-up so the first
+    // TIMED entries measure the plan, not the VM (without it c01's
+    // cold iteration read 5.8–6.5 s in a full run, vs 0.5 s steady).
+    // The name lands in the artifact (`warmup`). Sorted, not
+    // headOption: the registry is a HashMap, so headOption made the
+    // warmup query hash-order arbitrary (ADVICE r13).
     val orderedNames = registry.keys.toSeq.sorted
-    val warmedUp = orderedNames.headOption
-      .filter(_ => sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("1"))
-      .map { name =>
-        System.err.println(s"[bench] warmup $name (untimed) ...")
-        runOnce(name, registry(name))
-        name
-      }
+    val warmedUp = orderedNames.headOption.map { name =>
+      System.err.println(s"[bench] warmup $name (untimed) ...")
+      runOnce(name, registry(name))
+      name
+    }
 
     // timed entries run in the same sorted order — reproducible
-    // within-group position (who benefits from whose JIT residue) run
-    // over run, instead of HashMap iteration order
+    // position (who benefits from whose JIT residue) run over run,
+    // instead of HashMap iteration order
     val results = orderedNames
       .map { name => (name, registry(name)) }
       .map { case (name, fn) =>
@@ -549,8 +372,8 @@ object Bench {
         BenchReport.QueryResult(name, rs)
       }.toSeq
     // cache hygiene: the suite memos pin executor storage per (session,
-    // dir) — release before stop so a reused/long-lived session (or a
-    // fallback group in the same JVM) starts from storage baseline
+    // dir) — release before stop so a reused/long-lived session starts
+    // from storage baseline
     graft.queries.DedupSuite.releaseCaches(spark)
     graft.queries.BenchSuite.releaseCaches(spark)
     graft.queries.VectorSuite.releaseCaches(spark)

@@ -183,14 +183,6 @@ object BenchReport {
       !steadyContended(iters, hostCores)
   }
 
-  /** Fork-mode provenance for one family group: which queries shared a
-    * child JVM, whether the fork actually succeeded (ADVICE r12: a
-    * failed child silently ran in-process in the parent, and the old
-    * artifact overstated isolation for those queries), and which query
-    * the child ran untimed as its JIT/codegen warmup. */
-  final case class ForkGroup(queries: Seq[String], forked: Boolean,
-      warmup: Option[String])
-
   private def jsStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
@@ -235,13 +227,11 @@ object BenchReport {
   /** The BENCH_FULL.json document. Top-level `steady`/`cold` keep the
     * shape earlier rounds' tooling reads; `detail` carries the
     * per-iteration evidence; `env` pins the run's fixed context;
-    * `baseline` is the committed clean-session pin set (null when
-    * BENCH_BASELINE.json was absent — a child JVM's partial, or a
-    * checkout without the pin file). */
+    * `baseline` is the committed clean-session pin set (None when the
+    * gate is off — see `baselineStatus`). */
   def fullJson(iters: Int, sfDir: String, cpus: String,
       results: Seq[QueryResult],
       hostCores: Int = Runtime.getRuntime.availableProcessors(),
-      forkGroups: Option[Seq[ForkGroup]] = None,
       baseline: Option[Map[String, Double]] = None,
       warmup: Option[String] = None,
       benchHeapMb: Long = -1L,
@@ -274,19 +264,12 @@ object BenchReport {
           .getOrElse("false"),
         "tainted" -> q.tainted.toString))
     }
-    val rt = Runtime.getRuntime
     val (extSecTotal, extCoresMax) = extCpuTotals(results)
     val env = obj(Seq(
-      // THIS JVM's heap — in fork mode that is the merging parent,
-      // an environment accident (SPARK_DRIVER_MEM / sbt -mem)
-      "jvm_max_heap_mb" -> (rt.maxMemory() / (1024 * 1024)).toString,
-      // the heap the MEASURING JVMs ran under: the pinned child -Xmx
-      // in fork mode, this JVM's own max otherwise (-1 = not
-      // reported, a pre-r15 partial). The number pins are scoped to —
-      // the r14 driver/builder disagreement was exactly a run at
-      // 91136 graded against pins taken at 8192 (VERDICT r14 item 1).
-      // Caveat: a fork group that fell back in-process (fork_groups
-      // [i].forked=false) measured under jvm_max_heap_mb instead.
+      // the measuring JVM's max heap (-1 = not reported). The number
+      // pins are scoped to — the r14 driver/builder disagreement was
+      // exactly a run at 91136 graded against pins taken at 8192
+      // (VERDICT r14 item 1).
       "bench_heap_mb" -> benchHeapMb.toString,
       "host_cores" -> hostCores.toString,
       // thresholds, in contendedFlags' fallback order: external busy
@@ -319,20 +302,9 @@ object BenchReport {
       // seconds summed over the whole run + worst per-iteration cores
       "ext_cpu_sec_total" -> jsNum(math.rint(extSecTotal * 10) / 10),
       "ext_cores_max" -> jsNum(math.rint(extCoresMax * 100) / 100),
-      // the untimed warmup THIS JVM ran before its timed entries
-      // (set in child partials; the merged artifact carries it per
-      // group inside fork_groups)
+      // the query run untimed ahead of the timed entries to absorb
+      // the fresh JVM's JIT/codegen spin-up (see Bench.runRegistry)
       "warmup" -> warmup.map(jsStr).getOrElse("null"),
-      // fork-mode provenance: which queries shared a child JVM — the
-      // per-family isolation boundary the numbers were taken under —
-      // with per-group fork success (a failed child runs in-process
-      // in the parent) and the group's untimed warmup query
-      "fork_groups" -> forkGroups.map(gs =>
-        arr(gs.map(g => obj(Seq(
-          "queries" -> arr(g.queries.map(jsStr)),
-          "forked" -> g.forked.toString,
-          "warmup" -> g.warmup.map(jsStr).getOrElse("null"))))))
-        .getOrElse("null"),
       "steady" -> obj(steady.map { case (k, v) => k -> jsNum(v) }),
       "cold" -> obj(results.map(q => q.name -> jsNum(q.times.head))),
       "detail" -> obj(detail)))

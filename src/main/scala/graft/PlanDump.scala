@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dump `.explain("formatted")` for named registry queries — the r18
-  * optimization round's evidence trail (plans/r18/<query>_{before,
-  * after}.txt). Usage:
+/** Dump `.explain("formatted")` for named registry queries, one
+  * `<outDir>/<query>_<suffix>.txt` per query. Usage:
   *
   *   sbt "runMain graft.PlanDump <outDir> <suffix> <name>[,<name>...]"
   *

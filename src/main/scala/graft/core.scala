@@ -102,9 +102,13 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // join strategy, parquet codec and output committer stay at
-      // Spark's stock values: the r18/r19 A/Bs kept stock
-      // (OPTIMIZATION_r18.md, OPTIMIZATION_r19.md; GraftSessionSpec
-      // pins the four effective values)
+      // Spark's stock values, each measured against an alternative:
+      // plan-time preferSortMergeJoin=false regressed corpus-vs-corpus
+      // joins ~1.4× (x26 at sf1: 11.2 vs 7.9–9.6 s, 2–4× the GC); the
+      // AQE shuffled-hash-join rewrite never fired (most joins
+      // broadcast, and AQE coalesces the rest at its own advisory
+      // size); zstd and committer v2 showed no win. GraftSessionSpec
+      // pins the four effective values.
       .config("spark.sql.session.timeZone", "UTC")
       // grouped top-k (GroupedTopK) plans as ObjectHashAggregate; the
       // stock 128-key fallback would sort a partition's input by group

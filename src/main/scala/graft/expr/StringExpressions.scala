@@ -343,7 +343,7 @@ case class PiiScan(child: Expression)
     * (guide §4.4): a filter over the struct's fields gets pushed below
     * the projection with the scan INLINED PER FIELD — the first cut of
     * bench arm x36 evaluated the scan 5× per row (4 filter terms + 1
-    * project; executed plan in plans/r19/) and measured SLOWER than
+    * project, in its executed plan) and measured SLOWER than
     * the 8-pass form it replaces. Declaring it non-deterministic stops
     * the optimizer duplicating or reordering it, so the scan runs once
     * and the filter stays above the projection. The cost — other
@@ -405,8 +405,8 @@ object PiiScan {
   * reassembly exchange, and — unlike the higher-order
   * `filter(..., array_contains)` form, which measured SLOWER than the
   * join it replaced (interpreted ArrayFilter lambda, O(K) contains
-  * per window; OPTIMIZATION_r19.md §10) — the membership test is one
-  * hash lookup inside compiled code.
+  * per window: sf1 x26 8.52 → 10.60 s steady; reverted in 156f9c3) —
+  * the membership test is one hash lookup inside compiled code.
   *
   * NULL tokens (NULL text) and docs shorter than one window both
   * yield '' — exactly the short-doc repair the join form's union

@@ -140,22 +140,20 @@ class BenchReportSpec extends AnyFunSuite {
       QueryResult("q_cont", Seq(it(9.0, 9.0), it(8.0, 9.0))))
     val doc = JsonMethods.parse(
       fullJson(2, "d", "32", rs, hostCores = 32,
-        forkGroups = Some(Seq(
-          ForkGroup(Seq("q_clean"), forked = true, Some("q_clean")),
-          ForkGroup(Seq("q_cont"), forked = false, None)))))
+        warmup = Some("q_clean"), benchHeapMb = 8192L))
     assert((doc \ "detail" \ "q_cont" \ "contended") ==
       JArray(List(JBool(true), JBool(true))))
     assert((doc \ "detail" \ "q_cont" \ "steady_contended") == JBool(true))
     assert((doc \ "detail" \ "q_clean" \ "steady_contended") == JBool(false))
     assert((doc \ "env" \ "load_thresh") == JDouble(4.0))
     assert((doc \ "env" \ "ext_load_margin") == JDouble(32 / 12.0))
-    // fork provenance carries per-group fork success + warmup (ADVICE
-    // r12: a failed child runs in-process — the artifact must say so)
-    val gs = (doc \ "fork_groups").asInstanceOf[JArray].arr
-    assert(gs.map(g => g \ "queries") == List(
-      JArray(List(JString("q_clean"))), JArray(List(JString("q_cont")))))
-    assert(gs.map(g => g \ "forked") == List(JBool(true), JBool(false)))
-    assert(gs.map(g => g \ "warmup") == List(JString("q_clean"), JNull))
+    // one JVM measures every arm: the artifact names its warmup once
+    // at top level and records the heap once, with no per-group block
+    assert((doc \ "warmup") == JString("q_clean"))
+    assert((doc \ "fork_groups") == JNothing)
+    val envKeys = (doc \ "env").asInstanceOf[JObject].obj.map(_._1)
+    assert(envKeys.filter(_.contains("heap")) == List("bench_heap_mb"))
+    assert((doc \ "env" \ "bench_heap_mb") == JInt(8192))
     val line = JsonMethods.parse(headlineJson(rs, 2, "0.1", Nil,
       hostCores = 32))
     assert((line \ "contended") == JInt(1))
@@ -281,10 +279,11 @@ class BenchReportSpec extends AnyFunSuite {
     assert(cores._1.isEmpty && cores._2.contains("host_cores=32"))
     // sf_dir mismatch still refused (the pre-r15 rule)
     assert(Bench.loadBaseline(scoped, "other", 8192L, 32)._1.isEmpty)
-    // legacy unscoped pins apply but the status says so
+    // a pin file without its scope keys is refused, and the status
+    // names the missing keys
     val legacy = write("""{"sf_dir": "d", "steady": {"q": 0.5}}""")
-    val l = Bench.loadBaseline(legacy, "d", 91136L, 32)
-    assert(l._1.isDefined && l._2.contains("unscoped_legacy_pins"))
+    assert(Bench.loadBaseline(legacy, "d", 8192L, 32) ==
+      (None, "off:unscoped_pins(missing bench_heap_mb,host_cores)"))
     // absent file → named, not an error
     assert(Bench.loadBaseline(dir.resolve("nope.json").toString,
       "d", 8192L, 32) == (None, "off:no_pin_file"))

@@ -7,7 +7,7 @@ import graft.SparkSpec
   * the duration of its stream (PERFORMANCE.md "x21 profile") and MUST
   * restore the caller's value on every exit path — a bench arm that
   * leaks an 8-partition conf into the next timed query would corrupt
-  * every number after it in the same fork group. */
+  * every number after it in the same run. */
 class StreamArmSpec extends SparkSpec {
 
   test("stream arms restore spark.sql.shuffle.partitions after running") {

@@ -15,8 +15,8 @@ differs from the run's.
 Environment scoping (VERDICT r14 item 1 — the r14 driver's 88 GiB-heap
 run flagged 10 arms against 8 GiB pins while run totals agreed within
 2%): the pin file records the source run's measurement environment
-(`bench_heap_mb` — the heap the MEASURING JVMs ran under, i.e. the
-pinned fork-child -Xmx, and `host_cores`), Bench refuses pins whose
+(`bench_heap_mb` — the heap the measuring JVM ran under — and
+`host_cores`), Bench refuses pins whose
 environment differs from the run's, and THIS tool refuses to merge a
 run into a pin file taken under a different environment (or sf_dir) —
 histories mixing heap sizes would pin a number no single environment
@@ -59,17 +59,13 @@ HISTORY_CAP = 5
 
 def source_env(doc):
     """(bench_heap_mb, host_cores, fixture_bytes) of the run.
-    bench_heap_mb is r15+; fall back to the parent's jvm_max_heap_mb
-    for older artifacts (pre-r15 children inherited it).
     fixture_bytes fingerprints the parquet fixture itself: a
     regenerated fixture with identical rows in a different parquet
     layout measures differently (r15: d01 read 3x its pin on a
     re-generated sf1), so pins are scoped to the exact bytes."""
     env = doc.get("env", {})
-    heap = env.get("bench_heap_mb")
-    if heap in (None, -1):
-        heap = env.get("jvm_max_heap_mb")
-    return heap, env.get("host_cores"), env.get("fixture_bytes")
+    return (env.get("bench_heap_mb"), env.get("host_cores"),
+            env.get("fixture_bytes"))
 
 
 def main(full_path, note, out):
