@@ -109,13 +109,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to ALL host cores, not a fixed small number: a bench
-    // that silently runs local[4] on a 32-core box produces numbers
-    // incomparable with every pinned baseline (this exact mistake
-    // cost a round-14 afternoon — the artifact's `cpus` field is the
-    // tell, and the driver always sets the env explicitly)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    // all host cores unless set: a bench that silently runs local[4]
+    // on a 32-core box produces numbers incomparable with every pinned
+    // baseline (the artifact's `cpus` field is the tell)
+    val cpus = GraftSession.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     // optional comma-separated name filter for targeted iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -273,9 +270,11 @@ object Bench {
     // artifact, not just in a stderr note the judge never sees
     @volatile var zombieActive = false
 
-    def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : BenchReport.Iter = {
+    // the arm's lifecycle (its confs, then the run's scratch) wraps
+    // the watchdog on this thread: the clock runs inside the worker,
+    // so restoring and releasing stay untimed
+    def runOnce(arm: GraftQuery): BenchReport.Iter = {
+      val name = arm.name
       val group = s"bench-$name-${System.nanoTime()}"
       val taintedBefore = zombieActive
       val load0 = loadAvg()
@@ -283,22 +282,22 @@ object Bench {
       val cpu0 = processCpuMs()
       val host0 = hostCpuMs()
       @volatile var result = -1.0
-      val worker = new Thread(() => {
-        val t0 = System.nanoTime()
-        try {
-          // job group is per-thread state — set it in the worker so
-          // cancelJobGroup reaches exactly this iteration's jobs
-          spark.sparkContext.setJobGroup(group, name,
-            interruptOnCancel = true)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          result = (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => () } // result stays -1.0
-        finally spark.sparkContext.clearJobGroup()
-      }, group)
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(capSec * 1000L)
-      val sec =
+      val sec = Arm.run(spark, arm) {
+        val worker = new Thread(() => {
+          val t0 = System.nanoTime()
+          try {
+            // job group is per-thread state — set it in the worker so
+            // cancelJobGroup reaches exactly this iteration's jobs
+            spark.sparkContext.setJobGroup(group, name,
+              interruptOnCancel = true)
+            arm.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+            result = (System.nanoTime() - t0) / 1e9
+          } catch { case _: Throwable => () } // result stays -1.0
+          finally spark.sparkContext.clearJobGroup()
+        }, group)
+        worker.setDaemon(true)
+        worker.start()
+        worker.join(capSec * 1000L)
         if (worker.isAlive) {
           System.err.println(s"[bench] $name exceeded ${capSec}s — cancelling")
           spark.sparkContext.cancelJobGroup(group)
@@ -307,7 +306,7 @@ object Bench {
             // a worker that survives job-group cancellation is wedged in
             // driver-side code (plan/codegen/collect): interrupt it and
             // wait again — an abandoned-but-running zombie would overlap
-            // the next iteration's jobs and race the conf unset below,
+            // the next iteration's jobs and race the conf restore,
             // skewing every subsequent timing
             worker.interrupt()
             worker.join(30000L)
@@ -319,10 +318,7 @@ object Bench {
           }
           -2.0
         } else result
-      // conf hygiene: A/B builders (x09/x10 bloom join, x22/x23 skew
-      // join, x27 split size) pin session flags; reset so none leaks
-      // into later queries
-      graft.queries.BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
+      }
       val (gcMs1, gcN1) = gcStats()
       val cpu1 = processCpuMs()
       val host1 = hostCpuMs()
@@ -338,7 +334,7 @@ object Bench {
         hostCpuMs = if (host0 < 0 || host1 < 0) -1L else host1 - host0)
     }
 
-    val registry = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)
+    val registry = SparkEntry.arms
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
     // untimed warmup pass: the alphabetically-FIRST query runs once
@@ -352,7 +348,7 @@ object Bench {
     val orderedNames = registry.keys.toSeq.sorted
     val warmedUp = orderedNames.headOption.map { name =>
       System.err.println(s"[bench] warmup $name (untimed) ...")
-      runOnce(name, registry(name))
+      runOnce(registry(name))
       name
     }
 
@@ -360,23 +356,19 @@ object Bench {
     // position (who benefits from whose JIT residue) run over run,
     // instead of HashMap iteration order
     val results = orderedNames
-      .map { name => (name, registry(name)) }
-      .map { case (name, fn) =>
+      .map { name =>
         // per-query progress to stderr (NOT stdout — the harness parses
         // the stdout tail): makes a wedged or slow query identifiable
         // from the log instead of requiring a thread dump
         System.err.println(s"[bench] $name ...")
-        val rs = (0 until iters).map(_ => runOnce(name, fn))
+        val rs = (0 until iters).map(_ => runOnce(registry(name)))
         System.err.println(s"[bench] $name " +
           rs.map(i => f"${i.sec}%.2f(gc=${i.gcMs}ms)").mkString(","))
         BenchReport.QueryResult(name, rs)
       }.toSeq
-    // cache hygiene: the suite memos pin executor storage per (session,
-    // dir) — release before stop so a reused/long-lived session starts
-    // from storage baseline
-    graft.queries.DedupSuite.releaseCaches(spark)
-    graft.queries.BenchSuite.releaseCaches(spark)
-    graft.queries.VectorSuite.releaseCaches(spark)
+    // the arm memos pin executor storage and local dirs per session:
+    // release before stop so a long-lived session starts from baseline
+    Arm.release(spark)
     spark.stop()
     (results, warmedUp)
   }

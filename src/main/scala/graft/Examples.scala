@@ -14,8 +14,7 @@ import graft.streaming.EventStreams
   * `sbt "runMain graft.Examples"` */
 object Examples {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // --- streaming ---

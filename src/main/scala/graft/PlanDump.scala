@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `all` as the name list dumps every registry query. Reads the data
   * dir from SPARK_GRAFT_SF_DIR (default sf0.1) so the plans carry the
-  * same statistics the bench sees.
+  * same statistics the bench sees. Each arm is planned through
+  * [[Arm.run]], under its own declared confs only.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,11 +18,9 @@ object PlanDump {
       "usage: PlanDump <outDir> <suffix> <names|all>")
     val Array(outDir, suffix, nameArg) = args
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val registry = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
+    val registry = SparkEntry.arms
     val names =
       if (nameArg == "all") registry.keys.toSeq.sorted
       else nameArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -29,9 +28,8 @@ object PlanDump {
     names.foreach { n =>
       registry.get(n) match {
         case None => System.err.println(s"[plandump] unknown query: $n")
-        case Some(fn) =>
-          try {
-            val df = fn(spark, dir)
+        case Some(q) =>
+          try Arm.run(spark, dir, q) { df =>
             // AQE rewrites (SMJ→SHJ, coalescing, skew splits) exist
             // only in the FINAL plan — execute first so the dump
             // shows what actually ran, not the initial estimate. Must
@@ -54,6 +52,7 @@ object PlanDump {
           }
       }
     }
+    Arm.release(spark)
     spark.stop()
   }
 }

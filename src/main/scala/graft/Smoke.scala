@@ -4,7 +4,7 @@ package graft
   * sf0.001 and require rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.builder(GraftSession.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)

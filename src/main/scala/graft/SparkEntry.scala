@@ -47,6 +47,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap
 
+  /** Every registered arm (the oracle surface and the bench-only arms)
+    * by name, with its declared confs: run one through [[Arm.run]]. */
+  def arms: Map[String, GraftQuery] =
+    (all ++ BenchSuite.benchOnly).map(q => q.name -> q).toMap
+
   /** Bench-only arms (flag A/B pairs, engine-internal sketches, k-means
     * IVF, lifecycle arms): timed by [[Bench]] and plan-asserted in
     * specs, but NOT part of the correctness record — they either

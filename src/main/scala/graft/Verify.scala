@@ -28,11 +28,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // all host cores by default (matches Bench's stance) — results
-    // are core-count-independent, only the wall time isn't
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    // results are core-count-independent, only the wall time isn't
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
@@ -45,11 +42,12 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val arms = SparkEntry.arms
+    SparkEntry.queries.keys
+      .filter(name => only.forall(_.contains(name)))
+      .foreach { name =>
+      try Arm.run(spark, sfDir, arms(name))(_.coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: $msg")
@@ -58,11 +56,6 @@ object Verify {
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
       }
-      // conf hygiene: builders may pin session flags (the x09/x10 and
-      // x22/x23 A/Bs, x27) — reset so one query's flag never leaks
-      // into the next
-      finally graft.queries.BenchSuite.PinnedConfKeys
-        .foreach(spark.conf.unset)
     }
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -70,10 +63,7 @@ object Verify {
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries failed: " +
         errors.keys.mkString(", "))
-    // cache hygiene: release the suite memos (see Bench) before stop
-    graft.queries.DedupSuite.releaseCaches(spark)
-    graft.queries.BenchSuite.releaseCaches(spark)
-    graft.queries.VectorSuite.releaseCaches(spark)
+    Arm.release(spark)
     spark.stop()
   }
 }

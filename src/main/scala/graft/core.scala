@@ -17,7 +17,126 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class GraftQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None)
+    oracle: Option[String] = None,
+    /** Session confs the arm is planned and executed under; [[Arm.run]]
+      * sets them and restores the prior values afterwards. */
+    confs: Map[String, String] = Map.empty)
+
+/** The one lifecycle every registry arm runs under. Verify, Bench,
+  * PlanDump and the specs all run an arm through [[run]]:
+  *  - the arm's declared `confs` hold for the run, and the exact prior
+  *    values come back after it (a key the session had not set is
+  *    unset again), on every exit path;
+  *  - per-run scratch a body registers ([[tempDir]], [[cached]],
+  *    [[onRunEnd]]) is released when the run ends;
+  *  - standing artifacts that live across runs go through [[memo]],
+  *    keyed by (session, dir, key), until [[release]] drops them all
+  *    for a session (they rebuild lazily on next use).
+  * The restore and the release run in a `finally` on the calling
+  * thread, after `body`: a caller that times inside `body` leaves them
+  * off its clock. Scratch registered with no run open is held until
+  * [[release]]. */
+object Arm {
+  private final class Held(val value: Any, val release: () => Unit)
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), Held]
+  // per session, the open run's scratch releases, newest first
+  private val scratch =
+    scala.collection.mutable.Map.empty[SparkSession, List[() => Unit]]
+
+  def run[T](s: SparkSession, q: GraftQuery)(body: => T): T = {
+    val prior = s.conf.getAll
+    val outer = synchronized(scratch.remove(s))
+    try {
+      q.confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally {
+      try q.confs.keys.foreach { k =>
+        prior.get(k) match {
+          case Some(v) => s.conf.set(k, v)
+          case None => s.conf.unset(k)
+        }
+      } finally {
+        val mine = synchronized {
+          val m = scratch.remove(s).getOrElse(Nil)
+          outer.foreach(scratch(s) = _)
+          m
+        }
+        mine.foreach(safely)
+      }
+    }
+  }
+
+  /** [[run]] with the arm's frame built inside it: `use` sees
+    * `q.run(s, dir)` under the arm's confs, before its scratch goes. */
+  def run[T](s: SparkSession, dir: String, q: GraftQuery)(
+      use: DataFrame => T): T =
+    run(s, q)(use(q.run(s, dir)))
+
+  /** A standing artifact, built once per (session, dir, key) and kept
+    * across runs until [[release]] calls `release` on it. */
+  def memo[V](s: SparkSession, dir: String, key: String)(build: => V)(
+      release: V => Unit): V =
+    memos.get((s, dir, key)) match {
+      case Some(h) => h.value.asInstanceOf[V]
+      case None =>
+        val v = build
+        val h = new Held(v, () => release(v))
+        memos.putIfAbsent((s, dir, key), h) match {
+          case Some(first) => safely(h.release); first.value.asInstanceOf[V]
+          case None => v
+        }
+    }
+
+  /** A memoized local directory `fill` writes once, deleted by
+    * [[release]]; `key` doubles as the temp-dir prefix. */
+  def memoDir(s: SparkSession, dir: String, key: String)(
+      fill: String => Unit): String =
+    memo(s, dir, key) {
+      val p = java.nio.file.Files.createTempDirectory(key).toString
+      try { fill(p); p }
+      catch { case e: Throwable => deleteTree(p); throw e }
+    }(deleteTree)
+
+  /** Run `release` when the current run of `s` ends. */
+  def onRunEnd(s: SparkSession)(release: => Unit): Unit = synchronized {
+    scratch(s) = (() => release) :: scratch.getOrElse(s, Nil)
+  }
+
+  /** A fresh local directory, deleted when the current run ends. */
+  def tempDir(s: SparkSession, prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    onRunEnd(s)(deleteTree(p))
+    p
+  }
+
+  /** `df` cached for the current run only. */
+  def cached(s: SparkSession, df: DataFrame): DataFrame = {
+    val c = df.cache()
+    onRunEnd(s)(c.unpersist(blocking = true))
+    c
+  }
+
+  /** Drop every memo of `s` and any scratch still held for it. */
+  def release(s: SparkSession): Unit = {
+    val held = memos.keys.filter(_._1 eq s).toSeq.flatMap(memos.remove)
+    val loose = synchronized(scratch.remove(s)).getOrElse(Nil)
+    (held.map(_.release) ++ loose).foreach(safely)
+  }
+
+  private def safely(release: () => Unit): Unit =
+    try release() catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Best-effort recursive delete of a local directory. */
+  private def deleteTree(dir: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.toSeq.reverse
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
+}
 
 /** A named group of queries (one per SURVEY.md §2 operator family). */
 trait QuerySuite {
@@ -93,6 +212,12 @@ object Tables {
   * post-shuffle coalescing and skew; shuffle partitions match cores.
   */
 object GraftSession {
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else every host
+    * core. Set it on runs you will compare or commit; the bench
+    * artifact's `cpus` field records what ran. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")

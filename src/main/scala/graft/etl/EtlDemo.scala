@@ -13,8 +13,8 @@ import graft.GraftSession
   * generates its own fixture. */
 object EtlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val glob = args.headOption.getOrElse {

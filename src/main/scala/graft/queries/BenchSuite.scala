@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftQuery, QuerySuite, Tables}
+import graft.{Arm, GraftQuery, QuerySuite, Tables}
 import graft.vector.{ProductQuantizer, VectorSearch}
 
 /** Performance-path queries: kNN, top-k, join and lifecycle arms on
@@ -27,10 +27,8 @@ object BenchSuite extends QuerySuite {
   /** 100× synthetic inflation: each vector re-tagged with a replica id.
     * Deterministic (no rand); cached so the three x-queries time the
     * distance computation, not the re-inflation. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def inflated(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, dir),
+    Arm.memo(s, dir, "inflated")(
       Tables(s, dir, "embeddings")
         // the embeddings fixture is ONE parquet file with one row
         // group → one scan task → explode keeps ONE partition, and
@@ -43,52 +41,7 @@ object BenchSuite extends QuerySuite {
           explode(sequence(lit(0L), lit(99L))).as("rep"))
         .select((col("vec_id") * 100 + col("rep")).as("id"),
           col("embedding").cast("array<double>").as("vec"))
-        .cache())
-
-  /** Lifecycle hook (same contract as [[DedupSuite.releaseCaches]]):
-    * unpersist the inflated corpus and any memoized IVF index for
-    * `session`. Safe to call at any point — both rebuild lazily. */
-  def releaseCaches(session: SparkSession): Unit = {
-    // blocking for the same reason as DedupSuite.releaseCaches
-    memo.filterInPlace { case ((s, _), df) =>
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
-    ivfMemo.filterInPlace { case ((s, _), idx) =>
-      if (s eq session) { idx.assigned.unpersist(blocking = true); false }
-      else true
-    }
-    pqMemo.filterInPlace { case ((s, _), me) =>
-      if (s eq session) { me._2.unpersist(blocking = true); false }
-      else true
-    }
-    ivfPqMemo.filterInPlace { case ((s, _), me) =>
-      if (s eq session) { me._3.unpersist(blocking = true); false }
-      else true
-    }
-    // x26's in-flight stage caches (see the arm's measurement stance)
-    x26Prev.getAndSet(None).foreach(_.release())
-    // the standing indexes x27/x28/x33/x35 memoize live in temp dirs:
-    // drop each directory with its memo entry
-    def dropDirs[V](m: scala.collection.concurrent.TrieMap[
-        (SparkSession, String), V])(dir: V => String): Unit =
-      m.filterInPlace { case ((s, _), v) =>
-        if (s eq session) { deleteTree(dir(v)); false } else true
-      }
-    dropDirs(vdiMemo)(_._1)
-    dropDirs(curMemo)(identity)
-    dropDirs(vfiMemo)(identity)
-    dropDirs(x35IdxMemo)(identity)
-  }
-
-  /** Best-effort recursive delete of a local directory. */
-  private def deleteTree(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+        .cache())(_.unpersist(blocking = true))
 
   private def queries(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings").filter(col("vec_id") < 8)
@@ -146,18 +99,16 @@ object BenchSuite extends QuerySuite {
     * vector and the index had ONE occupied cell, so the committed
     * x03/x15 pins scored the whole corpus (PERFORMANCE.md, "IVF cells
     * on the replica-inflated corpus"). */
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), VectorSearch.IvfIndex]
   private val x03 = GraftQuery(
     "x03_knn_ivf",
     (s, dir) => {
-      val index = ivfMemo.getOrElseUpdate((s, dir), {
+      val index = Arm.memo(s, dir, "x03_ivf") {
         val corpus = inflated(s, dir)
         val nCells = math.max(16, (corpus.count() / 12500L).toInt)
         val built = VectorSearch.buildIvf(corpus, "id", "vec", nCells)
         // cache the assigned corpus: the index is the reusable artifact
         built.copy(assigned = built.assigned.cache())
-      })
+      }(_.assigned.unpersist(blocking = true))
       VectorSearch.searchIvf(index, queries(s, dir), "query_id", "qvec",
         k = 10, nprobe = 2)
     })
@@ -172,12 +123,10 @@ object BenchSuite extends QuerySuite {
     * (recall pinned ≥ 0.7 in ProductQuantizerSpec, fixture-probed
     * 0.84) → bench-only, no oracle; compare steady time against the
     * exact x02 scan. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (ProductQuantizer.PqModel, DataFrame)]
   private val x14 = GraftQuery(
     "x14_pq_adc",
     (s, dir) => {
-      val (model, encoded) = pqMemo.getOrElseUpdate((s, dir), {
+      val (model, encoded) = Arm.memo(s, dir, "x14_pq") {
         val m = ProductQuantizer.train(Tables(s, dir, "embeddings"),
           "vec_id", "embedding", m = 32, ncent = 64, iters = 10)
         val enc = ProductQuantizer
@@ -185,7 +134,7 @@ object BenchSuite extends QuerySuite {
           .select("id", "pq_codes")
           .cache() // the encoded codes ARE the persisted index artifact
         (m, enc)
-      })
+      }(_._2.unpersist(blocking = true))
       ProductQuantizer.search(encoded, "id", "pq_codes",
         queries(s, dir), "query_id", "qvec", model, k = 10)
     })
@@ -199,13 +148,10 @@ object BenchSuite extends QuerySuite {
     * The nprobe/nCells fraction holds at sf0.1 only since seeds are
     * distinct vectors: the committed x15 pins, like x03's, were
     * measured on a one-cell index. */
-  private val ivfPqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (VectorSearch.IvfIndex, ProductQuantizer.PqModel, DataFrame)]
   private val x15 = GraftQuery(
     "x15_ivfpq",
     (s, dir) => {
-      val (index, model, cells) = ivfPqMemo.getOrElseUpdate((s, dir), {
+      val (index, model, cells) = Arm.memo(s, dir, "x15_ivfpq") {
         // r18: the same ~12.5k-row cell budget as x03/x27/x32 — x15
         // still carried the fixed 16 cells whose superlinear-slope
         // class r17 root-caused in x03 (probe scans nprobe/nCells of
@@ -221,7 +167,7 @@ object BenchSuite extends QuerySuite {
         val enc = ProductQuantizer.encodeIvf(idx, "vec", m)
           .repartition(col("cell")).cache()
         (idx, m, enc)
-      })
+      }(_._3.unpersist(blocking = true))
       ProductQuantizer.searchIvfPq(index, cells, queries(s, dir),
         "query_id", "qvec", model, k = 10, nprobe = 2)
     })
@@ -231,14 +177,12 @@ object BenchSuite extends QuerySuite {
     * the per-round number is the encode projection). Output is the
     * per-doc subword count + the reassembled char count, so the whole
     * token stream materializes. */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ops.BpeTrainer.BpeModel]
   private val x16 = GraftQuery(
     "x16_bpe_encode",
     (s, dir) => {
-      val model = bpeMemo.getOrElseUpdate((s, dir),
+      val model = Arm.memo(s, dir, "x16_bpe")(
         graft.ops.BpeTrainer.train(Tables(s, dir, "documents"), "text",
-          nMerges = 200, maxVocab = 20000))
+          nMerges = 200, maxVocab = 20000))(_ => ())
       Tables(s, dir, "documents")
         .select(col("doc_id"), model.encodeCol(col("text")).as("toks"))
         .select(col("doc_id"), size(col("toks")).as("n_subwords"),
@@ -349,47 +293,29 @@ object BenchSuite extends QuerySuite {
     * scale; plan pinned in PlanSpec (bloom_filter_might_contain on the
     * fact scan side). Rows-only checked (the A/B twin is the oracle of
     * shape; x10's output is identical by construction). */
-  private def bloomJoin(s: SparkSession, dir: String,
-      bloom: Boolean): DataFrame = {
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled",
-      bloom.toString)
-    s.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "1KB")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val o = Tables(s, dir, "orders")
-      .filter(col("o_orderpriority") === "1-URGENT" &&
-        col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
-    Tables(s, dir, "lineitem")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-          .as("revenue"))
-  }
+  private def bloomJoin(name: String, bloom: Boolean): GraftQuery =
+    GraftQuery(name, (s, dir) => {
+      val o = Tables(s, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT" &&
+          col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
+      Tables(s, dir, "lineitem")
+        .join(o, col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n"),
+          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
+            .as("revenue"))
+    }, confs = noBroadcast ++ Map(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> bloom.toString,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+        -> "1KB"))
 
-  /** Session keys the A/B builders pin; Bench/Verify unset them after
-    * every query so a variant's flag never leaks into the next plan. */
-  val PinnedConfKeys: Seq[String] = Seq(
-    "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    // x22/x23 disable AQE's own skew mitigation so the salting A/B
-    // isolates the manual technique; unset falls back to the default
-    // (true), which is also what the GraftSession builder pins
-    "spark.sql.adaptive.skewJoin.enabled",
-    // x27 splits its ~100 MB bench-scale index into task-sized chunks
-    "spark.sql.files.maxPartitionBytes")
+  /** The shuffle-join A/Bs (x09/x10, x22/x23) turn broadcasting off. */
+  private val noBroadcast = Map(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
-  private val x09 = GraftQuery(
-    "x09_bloom_join",
-    (s, dir) => bloomJoin(s, dir, bloom = true))
-
-  private val x10 = GraftQuery(
-    "x10_bloom_off",
-    (s, dir) => bloomJoin(s, dir, bloom = false))
+  private val x09 = bloomJoin("x09_bloom_join", bloom = true)
+  private val x10 = bloomJoin("x10_bloom_off", bloom = false)
 
   /** x12 — the production as-of plan (union + carry-forward window,
     * `Ops.asofJoin`; j10's engine side re-timed): events as the left
@@ -434,27 +360,13 @@ object BenchSuite extends QuerySuite {
       extraConfs: Map[String, String] = Map.empty)
       : GraftQuery =
     GraftQuery(name, (s, dir) => {
-      val confs = extraConfs +
-        ("spark.sql.shuffle.partitions" -> streamStateParts)
-      val saved = confs.keys.map(k =>
-        k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try streamArmBody(s, dir, build)
-      finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-    })
-
-  private def streamArmBody(s: SparkSession, dir: String,
-      build: (SparkSession, DataFrame) => org.apache.spark.sql.Dataset[_])
-      : DataFrame = {
       val stream = graft.streaming.EventStreams.eventsFileStream(s, dir)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-ckpt")
+      // run scratch: deleted when the run ends, off the bench clock
+      val ckpt = Arm.tempDir(s, "graft-bench-ckpt")
       val q = build(s, stream).writeStream
         .format("noop")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .start()
       try q.awaitTermination()
       finally {
@@ -466,18 +378,11 @@ object BenchSuite extends QuerySuite {
         // with no taint mark. Stop it on EVERY exit path.
         try { if (q.isActive) q.stop() }
         catch { case scala.util.control.NonFatal(_) => () }
-        // best-effort checkpoint cleanup (bench runs 3 iterations; a
-        // leaked tmp dir per iteration would accumulate state files).
-        // On a DAEMON thread: this finally block is inside the timed
-        // region, and deleting a many-microbatch state tree would
-        // otherwise be billed to the streaming operator's wall time.
-        val cleaner = new Thread(() => deleteTree(ckpt.toString))
-        cleaner.setDaemon(true)
-        cleaner.start()
       }
       // the timed work happened above; hand the harness a trivial frame
       s.range(1).toDF("ok")
-    }
+    }, confs = extraConfs +
+      ("spark.sql.shuffle.partitions" -> streamStateParts))
 
   /** x17 — streaming as-of enrichment (flatMapGroupsWithState with
     * event-time timeout) over the full events table: lefts = clicks &
@@ -531,31 +436,27 @@ object BenchSuite extends QuerySuite {
     * (flag, salt) — every hot key spreads over saltN reducers.
     * Identical output by construction (the salt never reaches the
     * result); plan pinned in PlanAuditR11Spec. */
-  private def saltedArm(s: SparkSession, dir: String,
-      salted: Boolean): DataFrame = {
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val li = Tables(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_extendedprice"), col("l_discount"))
-    val stats = Tables(s, dir, "lineitem")
-      .groupBy("l_returnflag")
-      .agg(avg(col("l_discount")).as("avg_disc"))
-    val joined =
-      if (salted) graft.ops.Ops.saltedJoin(li, stats, "l_returnflag", 32)
-      else li.join(stats, "l_returnflag")
-    joined.groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("l_discount") > col("avg_disc"),
-            col("l_extendedprice").cast("decimal(18,2)"))
-          .otherwise(lit(0).cast("decimal(18,2)")))
-          .cast("double").as("above_avg_revenue"))
-  }
+  private def saltedArm(name: String, salted: Boolean): GraftQuery =
+    GraftQuery(name, (s, dir) => {
+      val li = Tables(s, dir, "lineitem")
+        .select(col("l_returnflag"), col("l_extendedprice"), col("l_discount"))
+      val stats = Tables(s, dir, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(avg(col("l_discount")).as("avg_disc"))
+      val joined =
+        if (salted) graft.ops.Ops.saltedJoin(li, stats, "l_returnflag", 32)
+        else li.join(stats, "l_returnflag")
+      joined.groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("l_discount") > col("avg_disc"),
+              col("l_extendedprice").cast("decimal(18,2)"))
+            .otherwise(lit(0).cast("decimal(18,2)")))
+            .cast("double").as("above_avg_revenue"))
+    }, confs = noBroadcast +
+      ("spark.sql.adaptive.skewJoin.enabled" -> "false"))
 
-  private val x22 = GraftQuery("x22_salted_join",
-    (s, dir) => saltedArm(s, dir, salted = true))
-  private val x23 = GraftQuery("x23_salted_off",
-    (s, dir) => saltedArm(s, dir, salted = false))
+  private val x22 = saltedArm("x22_salted_join", salted = true)
+  private val x23 = saltedArm("x23_salted_off", salted = false)
 
   /** x24 — the full RAG retrieval lifecycle at bench scale: stage-1
     * kNN (top-100 pools over the 50k inflated corpus, the grouped
@@ -605,21 +506,17 @@ object BenchSuite extends QuerySuite {
     * no longer pays is the same tokenize+shingle gate subtree SIX
     * times (stripWith 2× × {topSegments, segments, short-union} —
     * the r18 stance released the caches up front, so the uncached
-    * plan re-derived every upstream stage per consumer). The previous
-    * iteration's caches are released at the START of the next timed
-    * body — Spark's CacheManager matches by logical plan, so leaving
-    * them would hand iteration N+1 a replay of N's compute — and at
-    * run end via [[releaseCaches]]. */
-  private val x26Prev = new java.util.concurrent.atomic.AtomicReference[
-    Option[graft.etl.CorpusCuration.Result]](None)
+    * plan re-derived every upstream stage per consumer). The caches
+    * are the run's scratch, released when the run ends (untimed) —
+    * Spark's CacheManager matches by logical plan, so leaving them
+    * would hand iteration N+1 a replay of N's compute. */
   private val x26 = GraftQuery("x26_curation_pipeline",
     (s, dir) => {
-      x26Prev.getAndSet(None).foreach(_.release())
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       val res = graft.etl.CorpusCuration.curate(
         docs.filter(col("doc_id") % 23 =!= 0), "doc_id", "text",
         evalDocs = Some(docs.filter(col("doc_id") % 23 === 0)))
-      x26Prev.set(Some(res))
+      Arm.onRunEnd(s)(res.release())
       res.corpus
     })
 
@@ -638,15 +535,13 @@ object BenchSuite extends QuerySuite {
     * parquet, which the default 128 MB maxPartitionBytes bin-packs
     * into 1-2 input tasks — the per-pair verify then runs effectively
     * single-threaded (76 s warm). At 100 TB the layout provides task
-    * granularity naturally; here the arm pins a 4 MB split so the
-    * measurement exercises the intended parallel shape (Bench unsets
-    * the key after every query via [[PinnedConfKeys]]). */
-  private val vdiMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[(Long, Seq[Double])])]
+    * granularity naturally; here the arm declares a 4 MB split so the
+    * measurement exercises the intended parallel shape. */
+  private val smallSplits = Map("spark.sql.files.maxPartitionBytes" -> "4m")
   /** The standing index x27/x30/x32 share: (path, centroids). */
   private def vdiSetup(s: SparkSession, dir: String)
-      : (String, Seq[(Long, Seq[Double])]) =
-    vdiMemo.getOrElseUpdate((s, dir), {
+      : (String, Seq[(Long, Seq[Double])]) = {
+    val cs = Arm.memo(s, dir, "x27_cents") {
       val corpus = inflated(s, dir)
       // cell count scales with the corpus (~12.5k vectors/cell) —
       // the knob every IVF deployment turns. A FIXED cell count is
@@ -656,23 +551,19 @@ object BenchSuite extends QuerySuite {
       // shape with scaled cells). With cells ∝ N, probe work stays
       // ∝ batch size — independent of corpus size.
       val nCells = math.max(16, (corpus.count() / 12500L).toInt)
-      val cs = graft.ops.VectorDedupIndex
-        .seedCentroids(corpus, "id", "vec", nCells)
-      val p = java.nio.file.Files
-        .createTempDirectory("x27_vdi").toString
-      graft.ops.VectorDedupIndex
-        .writeIndex(corpus, "id", "vec", cs, p)
-      (p, cs)
-    })
+      graft.ops.VectorDedupIndex.seedCentroids(corpus, "id", "vec", nCells)
+    }(_ => ())
+    (Arm.memoDir(s, dir, "x27_vdi")(p => graft.ops.VectorDedupIndex
+      .writeIndex(inflated(s, dir), "id", "vec", cs, p)), cs)
+  }
   private val x27 = GraftQuery("x27_vector_dedup_probe",
     (s, dir) => {
-      s.conf.set("spark.sql.files.maxPartitionBytes", "4m")
       val (path, cents) = vdiSetup(s, dir)
       graft.ops.VectorDedupIndex.probePairs(s, path, cents,
           inflated(s, dir).filter(col("id") % 97 === 0),
           "id", "vec", tau = 0.9)
         .groupBy("cell").agg(count(lit(1)).as("n_pairs"))
-    })
+    }, confs = smallSplits)
 
   /** x28 — INCREMENTAL curation of a nightly slice
     * ([[graft.etl.CorpusCuration.curateIncremental]]) — the A/B of
@@ -684,13 +575,11 @@ object BenchSuite extends QuerySuite {
     * (mod-23). The number to compare: x26 re-runs the full funnel on
     * everything; x28 does slice-sized work + one broadcast dictionary
     * join + one hash anti-join. */
-  private val curMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private val x28 = GraftQuery("x28_curate_incremental",
     (s, dir) => {
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       val eval = docs.filter(col("doc_id") % 23 === 0)
-      val base = curMemo.getOrElseUpdate((s, dir), {
+      val base = Arm.memoDir(s, dir, "x28_cur") { p =>
         val standing = docs.filter(
           col("doc_id") % 23 =!= 0 && col("doc_id") % 31 =!= 0)
         val res = graft.etl.CorpusCuration.curate(
@@ -698,14 +587,11 @@ object BenchSuite extends QuerySuite {
         val idx = graft.etl.CorpusCuration.fitIndexes(standing,
           res.corpus.select("doc_id", "text"), "doc_id", "text",
           evalDocs = Some(eval))
-        val p = java.nio.file.Files
-          .createTempDirectory("x28_cur").toString
         idx.boilerplate.write.parquet(s"$p/boiler")
         idx.evalDict.get.write.parquet(s"$p/eval")
         idx.seenHashes.write.parquet(s"$p/seen")
         res.release()
-        p
-      })
+      }
       val standing = graft.etl.CorpusCuration.Indexes(
         s.read.parquet(s"$base/boiler"),
         Some(s.read.parquet(s"$base/eval")), None,
@@ -729,14 +615,11 @@ object BenchSuite extends QuerySuite {
     * aggregate + capped verify join. τ=0.9: the inflation plants 100
     * exact replicas per base vector, so each eval vector flags its
     * replica family — decontamination-shaped output, bounded size. */
-  private val sdMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
   private val x29 = GraftQuery("x29_decontam_128cells",
     (s, dir) => {
       val corpus = inflated(s, dir)
-      val cents = sdMemo.getOrElseUpdate((s, dir),
-        graft.ops.VectorDedupIndex
-          .seedCentroids(corpus, "id", "vec", 128))
+      val cents = Arm.memo(s, dir, "x29_cents")(graft.ops.VectorDedupIndex
+          .seedCentroids(corpus, "id", "vec", 128))(_ => ())
       val eval = Tables(s, dir, "embeddings")
         .filter(col("vec_id") % 251 === 0)
         .select(col("vec_id"), col("embedding"))
@@ -754,13 +637,12 @@ object BenchSuite extends QuerySuite {
     * near-dups nprobe=1 structurally misses. */
   private val x30 = GraftQuery("x30_dedup_probe_np2",
     (s, dir) => {
-      s.conf.set("spark.sql.files.maxPartitionBytes", "4m")
       val (path, cents) = vdiSetup(s, dir)
       graft.ops.VectorDedupIndex.probePairs(s, path, cents,
           inflated(s, dir).filter(col("id") % 97 === 0),
           "id", "vec", tau = 0.9, nprobe = 2)
         .groupBy("cell").agg(count(lit(1)).as("n_pairs"))
-    })
+    }, confs = smallSplits)
 
   /** x31 — x29's decontamination pass over TRAINED centroids
     * (VERDICT r13 stretch 8): 3 Lloyd rounds instead of seed vectors,
@@ -774,13 +656,12 @@ object BenchSuite extends QuerySuite {
     * committed x31 pins come from a fit that left 4 of its 128 cells
     * occupied (PERFORMANCE.md, "IVF cells on the replica-inflated
     * corpus"). */
-  private val sdKmMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
   private val x31 = GraftQuery("x31_decontam_trained",
     (s, dir) => {
       val corpus = inflated(s, dir)
-      val cents = sdKmMemo.getOrElseUpdate((s, dir),
-        graft.vector.Kmeans.fit(corpus, "id", "vec", k = 128, iters = 3))
+      val cents = Arm.memo(s, dir, "x31_cents")(
+        graft.vector.Kmeans.fit(corpus, "id", "vec", k = 128, iters = 3))(
+        _ => ())
       val eval = Tables(s, dir, "embeddings")
         .filter(col("vec_id") % 251 === 0)
         .select(col("vec_id"), col("embedding"))
@@ -799,7 +680,7 @@ object BenchSuite extends QuerySuite {
     * trip — the un-drifted no-op path is the cost a healthy nightly
     * pays every night. The standing index is memoized (x27's — in
     * production it is a lake artifact) and the admit/compact write to
-    * fresh temp dirs, deleted before the arm returns, so iterations
+    * fresh temp dirs, the run's scratch, so iterations
     * never double-admit and the timed work is one night's, every
     * iteration. The rebuild path's cost is already timed by x25
     * (k-means fit) + x27's memoized writeIndex; probe cost by x27/x30. Slice = mod-89 of the inflated corpus
@@ -810,23 +691,21 @@ object BenchSuite extends QuerySuite {
       val (standing, cents) = vdiSetup(s, dir)
       val slice = inflated(s, dir).filter(col("id") % 89 === 0)
       val Seq(night, compacted, refit) = Seq("x32_night", "x32_cmp",
-        "x32_refit").map(java.nio.file.Files.createTempDirectory(_).toString)
-      try {
-        VectorDedupIndex.admitBatch(slice, cents, night, "id", "vec")
-        VectorDedupIndex.compactIndex(s, night, compacted)
-        // sampleFraction is the decision's scale knob: the shift measure
-        // must never re-read a 100 TB index nightly — a 10% sample bounds
-        // the decision to slice-plus-sample-sized work (occupancy stays a
-        // column-pruned full scan: one long column, the cheap half)
-        val report = VectorDedupIndex.maybeRefit(s, standing, slice,
-          "id", "vec", cents, refit,
-          skewThreshold = 1e9, shiftThreshold = 1e9, sampleFraction = 0.1)
-        val admitted = s.read.parquet(compacted).count()
-        // a local frame: nothing reads the three directories after this
-        s.createDataFrame(Seq((admitted, report.refit,
-            report.occupancySkew, report.shiftRatio)))
-          .toDF("admitted", "refit", "occupancy_skew", "shift_ratio")
-      } finally Seq(night, compacted, refit).foreach(deleteTree)
+        "x32_refit").map(Arm.tempDir(s, _))
+      VectorDedupIndex.admitBatch(slice, cents, night, "id", "vec")
+      VectorDedupIndex.compactIndex(s, night, compacted)
+      // sampleFraction is the decision's scale knob: the shift measure
+      // must never re-read a 100 TB index nightly — a 10% sample bounds
+      // the decision to slice-plus-sample-sized work (occupancy stays a
+      // column-pruned full scan: one long column, the cheap half)
+      val report = VectorDedupIndex.maybeRefit(s, standing, slice,
+        "id", "vec", cents, refit,
+        skewThreshold = 1e9, shiftThreshold = 1e9, sampleFraction = 0.1)
+      val admitted = s.read.parquet(compacted).count()
+      // a local frame: nothing reads the three directories after this
+      s.createDataFrame(Seq((admitted, report.refit,
+          report.occupancySkew, report.shiftRatio)))
+        .toDF("admitted", "refit", "occupancy_skew", "shift_ratio")
     })
 
   /** splitmix64 finisher (public algorithm — Steele et al., also the
@@ -874,8 +753,6 @@ object BenchSuite extends QuerySuite {
     * corpus re-pair is not slower (PERFORMANCE.md, retired arms); the
     * standing index's case rests on the slope — x33's work tracks the
     * clip, a re-pair's tracks the corpus. */
-  private val vfiMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def nightClip(s: SparkSession, dir: String) =
     MultimodalSuite.frameHashes(s, dir)
       .filter(col("video") === "v00" && col("frame_idx") < 10)
@@ -888,15 +765,12 @@ object BenchSuite extends QuerySuite {
     * Returns (indexPath, clipPath, framesPath). */
   private def vfiSetup(s: SparkSession, dir: String)
       : (String, String, String) = {
-    val base = vfiMemo.getOrElseUpdate((s, dir), {
-      val base = java.nio.file.Files
-        .createTempDirectory("x33_vfi").toString
+    val base = Arm.memoDir(s, dir, "x33_vfi") { base =>
       inflatedFrames(s, dir).write.parquet(s"$base/frames")
       nightClip(s, dir).coalesce(1).write.parquet(s"$base/clip")
       graft.multimodal.VideoFrameIndex.writeIndex(
         s.read.parquet(s"$base/frames"), s"$base/index")
-      base
-    })
+    }
     (s"$base/index", s"$base/clip", s"$base/frames")
   }
   private val x33 = GraftQuery("x33_video_probe",
@@ -921,18 +795,12 @@ object BenchSuite extends QuerySuite {
     * cost stays in the timed body). The index is x35's own copy
     * (built once in memoized setup from the shared inflated frame
     * table) so the admits never pollute x33's standing index. */
-  private val x35IdxMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private val x35 = GraftQuery("x35_video_ingest",
     (s, dir) => {
       val (_, clip, frames) = vfiSetup(s, dir)
-      val idx = x35IdxMemo.getOrElseUpdate((s, dir), {
-        val p = java.nio.file.Files
-          .createTempDirectory("x35_vfi").toString
+      val idx = Arm.memoDir(s, dir, "x35_vfi")(p =>
         graft.multimodal.VideoFrameIndex.writeIndex(
-          s.read.parquet(frames), p)
-        p
-      })
+          s.read.parquet(frames), p))
       val novel = s.read.parquet(clip).select(
         lit("i01").as("video"), col("frame_idx"),
         col("phash").bitwiseXOR(lit(mix64(9999L))).as("phash"))

@@ -267,12 +267,14 @@ object CurationSuite extends QuerySuite {
       val li = Tables(s, dir, "lineitem")
       val pairs = li.select((col("l_partkey") * 2).as("a"),
         (col("l_suppkey") * 2 + 1).as("b")).distinct()
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src"))
-        .cache()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .withColumnRenamed("src", "node").cache()
+      // both caches are the run's scratch: unpersisted when it ends
+      val edges = graft.Arm.cached(s,
+        pairs.select(col("a").as("src"), col("b").as("dst"))
+          .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
+          .repartition(col("src")))
+      val deg = graft.Arm.cached(s,
+        edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+          .withColumnRenamed("src", "node"))
       val nV = deg.agg(count(lit(1)).as("n"))
       var ranks = deg.crossJoin(broadcast(nV))
         .select(col("node"), expr("1000000000L div n").as("r"))

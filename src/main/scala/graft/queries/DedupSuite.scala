@@ -88,25 +88,14 @@ object DedupSuite extends QuerySuite {
     * tokens/doc) are referenced by several branches of the same query
     * DAG (self-joins, intersection + two size joins). Memoize + cache
     * per (session, dir) so the shingle/hash pipeline runs once per
-    * round, not once per branch. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+    * round, not once per branch; [[graft.Arm.release]] drops them. */
   private def cached(s: SparkSession, dir: String, key: String)(
       mk: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, key), mk.cache())
-
-  /** Lifecycle hook: unpersist and forget every frame memoized for
-    * `session` (all dirs). Long-lived sessions (test JVMs, notebook
-    * servers) call this between rounds — without it the TrieMap pins
-    * executor storage memory forever (the caches re-build lazily on
-    * next use, so releasing is always safe). */
-  def releaseCaches(session: SparkSession): Unit =
-    memo.filterInPlace { case ((s, _, _), df) =>
+    graft.Arm.memo(s, dir, s"dedup.$key")(mk.cache())(
       // blocking: "released" must MEAN released — an async unpersist
       // leaves blocks visible to storage-baseline checks and the next
       // query's memory accounting
-      if (s eq session) { df.unpersist(blocking = true); false } else true
-    }
+      _.unpersist(blocking = true))
 
   private def wideSigCached(s: SparkSession, dir: String): DataFrame =
     cached(s, dir, "wideSig")(wideSig(s, dir))

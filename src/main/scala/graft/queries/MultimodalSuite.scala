@@ -186,18 +186,16 @@ object MultimodalSuite extends QuerySuite {
       val frames = frameHashes(s, dir)
         .withColumn("vnum",
           substring(col("video"), 2, 2).cast("int"))
-      // three "nights" sliced by vnum % 3; fresh temp dirs per
-      // invocation so bench reruns never double-admit
-      val idx = java.nio.file.Files
-        .createTempDirectory("m03_idx").toString
+      // three "nights" sliced by vnum % 3; fresh temp dirs per run,
+      // so bench reruns never double-admit
+      val idx = graft.Arm.tempDir(s, "m03_idx")
       VideoFrameIndex.writeIndex(
         frames.filter(col("vnum") % 3 === 0).drop("vnum"), idx)
       VideoFrameIndex.admitBatch(
         frames.filter(col("vnum") % 3 === 1).drop("vnum"), idx)
       VideoFrameIndex.admitBatch(
         frames.filter(col("vnum") % 3 === 2).drop("vnum"), idx)
-      val compacted = java.nio.file.Files
-        .createTempDirectory("m03_cmp").toString
+      val compacted = graft.Arm.tempDir(s, "m03_cmp")
       VideoFrameIndex.compactIndex(s, idx, compacted)
       VideoFrameIndex.probePairs(s, compacted,
         frames.filter(col("vnum") % 7 === 0).drop("vnum"),

@@ -572,7 +572,13 @@ object VectorSuite extends QuerySuite {
     * against an independent recompute and a constructed straddle. */
   private[graft] val V13K = 17
 
-  /** v13's persisted intermediates, one generation per session.
+  /** v13's store+catalog construction through the REAL degraded-path
+    * operators — shared with the V13 boundary-guard spec, which
+    * asserts the fixture has no distance tie straddling rank K (the
+    * one place where the engine's internal-hash tie order and the
+    * oracle's doc_id tiebreak could legally diverge: the SET of hits
+    * is the contract, and a tie ACROSS the boundary changes the set).
+    *
     * [[graft.embed.EmbeddingPipeline.search]]'s contract says the
     * store is a MATERIALIZED vector table (the with-ties search v13
     * runs scans it twice: the top-k bound, then the filtered pass;
@@ -580,33 +586,9 @@ object VectorSuite extends QuerySuite {
     * writes it before `test_search` reads it) — so v13 persists the
     * store and the LlmFill output instead of re-running the whole
     * degraded pipeline once per scan (LlmFill 3x, embedder 2x: ~2.4 s
-    * of pure recompute at sf0.1). Bench iterations rebuild the query
-    * from scratch, so each iteration still pays exactly ONE full
-    * degraded-pipeline run + persist + search; building a new
-    * generation releases the previous one, and [[releaseCaches]]
-    * drops the last at session teardown (same lifecycle as
-    * DedupSuite/BenchSuite caches). */
-  private val v13Frames = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, Seq[DataFrame]]
-
-  private def v13Persist(s: SparkSession, dfs: DataFrame*): Unit =
-    v13Frames.put(s, dfs)
-      // the previous generation belongs to a finished iteration —
-      // nothing reads it anymore; async release is safe and keeps the
-      // new iteration's timed region free of blocking block-removal
-      .foreach(_.foreach(_.unpersist(blocking = false)))
-
-  /** Lifecycle hook, called by Bench/Verify before `spark.stop()`. */
-  def releaseCaches(session: SparkSession): Unit =
-    v13Frames.remove(session)
-      .foreach(_.foreach(_.unpersist(blocking = true)))
-
-  /** v13's store+catalog construction through the REAL degraded-path
-    * operators — shared with the V13 boundary-guard spec, which
-    * asserts the fixture has no distance tie straddling rank K (the
-    * one place where the engine's internal-hash tie order and the
-    * oracle's doc_id tiebreak could legally diverge: the SET of hits
-    * is the contract, and a tie ACROSS the boundary changes the set). */
+    * of pure recompute at sf0.1). Both frames are the run's scratch:
+    * each bench iteration pays exactly ONE full degraded-pipeline
+    * run + persist + search, and the run's end releases them. */
   private[graft] def v13StoreCatalog(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import graft.embed.{EmbeddingPipeline, ExternalEmbedder, LlmFill}
@@ -629,29 +611,26 @@ object VectorSuite extends QuerySuite {
         when(col("doc_id") % 7 === 0, lit(""))
           .when(col("doc_id") % 11 === 0, lit(null).cast("string"))
           .otherwise(concat(lit("orig_"), col("lang"))))
-    val filled = LlmFill.fillMissing(docs, "description",
-        concat(lit("describe:"), col("doc_id").cast("string")),
-        FlakyTransport, batchSize = 1, maxAttempts = 2)
-      // feeds BOTH the store build and the catalog — one LlmFill pass
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // feeds BOTH the store build and the catalog — one LlmFill pass
+    val filled = graft.Arm.cached(s, LlmFill.fillMissing(docs,
+      "description", concat(lit("describe:"), col("doc_id").cast("string")),
+      FlakyTransport, batchSize = 1, maxAttempts = 2))
     // embed text+description so the FILL is visible in distances
     val toEmbed = filled.select(
       col("doc_id").cast("string").as("product_code"),
       concat_ws(" ", col("text"), col("description")).as("text"))
-    val store = EmbeddingPipeline.embedDocuments(
+    // search's documented store contract: materialized (with ties,
+    // scanned twice)
+    val store = graft.Arm.cached(s, EmbeddingPipeline.embedDocuments(
         toEmbed, ExternalEmbedder(FlakyTransport, dim = 16,
           maxAttempts = 2), batchSize = 1)
       // zero vectors (thrown OR misshapen endpoint responses) are
       // not indexable — their absence from the result set is the
       // oracle-visible trace of the fallback
-      .filter(exists(col("embedding"), x => x =!= 0f))
-      // search's documented store contract: materialized (with ties,
-      // scanned twice)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(exists(col("embedding"), x => x =!= 0f)))
     val catalog = filled.select(
       col("doc_id").cast("string").as("product_code"),
       col("description"), col("lang"))
-    v13Persist(s, filled, store)
     (store, catalog)
   }
 
@@ -1083,17 +1062,15 @@ object VectorSuite extends QuerySuite {
         .orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
       // three "nights" sliced by modulus (SF-stable); fresh temp dirs
-      // per invocation so bench reruns never double-admit
-      val idx = java.nio.file.Files
-        .createTempDirectory("v19_idx").toString
+      // per run, so bench reruns never double-admit
+      val idx = graft.Arm.tempDir(s, "v19_idx")
       VectorDedupIndex.writeIndex(all.filter(col("vec_id") % 3 === 0),
         "vec_id", "qvd", cents, idx)
       VectorDedupIndex.admitBatch(all.filter(col("vec_id") % 3 === 1),
         cents, idx, "vec_id", "qvd")
       VectorDedupIndex.admitBatch(all.filter(col("vec_id") % 3 === 2),
         cents, idx, "vec_id", "qvd")
-      val compacted = java.nio.file.Files
-        .createTempDirectory("v19_cmp").toString
+      val compacted = graft.Arm.tempDir(s, "v19_cmp")
       VectorDedupIndex.compactIndex(s, idx, compacted)
       VectorDedupIndex.probePairs(s, compacted, cents,
         all.filter(col("vec_id") % 7 === 0), "vec_id", "qvd", tau = 0.3)

@@ -120,13 +120,11 @@ class PlanAuditR11Spec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
   }
 
-  private def executedBenchOnly(q: String): String = {
-    val df = SparkEntry.benchOnlyQueries(q)(spark, dir)
-    try {
+  private def executedBenchOnly(q: String): String =
+    Arm.run(spark, dir, SparkEntry.arms(q)) { df =>
       df.collect()
       df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    } finally queries.BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
-  }
+    }
 
   test("x22/x23 salted-join A/B: the salted arm's fact exchange keys " +
       "on (l_returnflag, __salt) — hot keys spread over saltN " +
@@ -143,11 +141,10 @@ class PlanAuditR11Spec extends SparkSpec {
       !plain.contains("BroadcastHashJoin"),
       "broadcast leaked into the shuffle-join A/B")
     // identical output: the salt must never reach the result
-    val a = SparkEntry.benchOnlyQueries("x22_salted_join")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    val b = SparkEntry.benchOnlyQueries("x23_salted_off")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    queries.BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
+    def rows(q: String) = Arm.run(spark, dir, SparkEntry.arms(q))(
+      _.collect().map(_.toSeq).toSet)
+    val a = rows("x22_salted_join")
+    val b = rows("x23_salted_off")
     assert(a == b, s"salted join diverged from plain join: $a vs $b")
   }
 }

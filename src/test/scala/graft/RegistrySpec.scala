@@ -52,22 +52,28 @@ class RegistrySpec extends AnyFunSuite {
   * driver's CORRECTNESS artifact. Most builders only resolve a schema;
   * a few (k-means/DSIR fits) run real Spark jobs eagerly at
   * construction, so the sweep does execute work — bounded by the
-  * sf0.001 fixture, which keeps it cheap across all 169 queries.
+  * sf0.001 fixture, which keeps it cheap across all 174 queries. Each
+  * builds through [[Arm.run]], so a query's run scratch (m03/v19's
+  * index dirs) goes as soon as its schema or plan has been read.
   */
 class RegistryShapeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
+  /** `f` of each oracle-surface query's frame, in name order. */
+  private def eachQuery[T](f: (String, org.apache.spark.sql.DataFrame) => T)
+      : Seq[T] =
+    SparkEntry.queries.keys.toSeq.sorted.map(name =>
+      Arm.run(spark, dir, SparkEntry.arms(name))(f(name, _)))
+
   test("no oracle-surface query emits a top-level array/map/struct column") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, run) =>
-        val bad = run(spark, dir).schema.fields.collect {
-          case f if f.dataType.isInstanceOf[ArrayType] ||
-            f.dataType.isInstanceOf[MapType] ||
-            f.dataType.isInstanceOf[StructType] =>
-            s"$name.${f.name}: ${f.dataType.simpleString}"
-        }
-        bad
-    }
+    val offenders = eachQuery { (name, df) =>
+      df.schema.fields.collect {
+        case f if f.dataType.isInstanceOf[ArrayType] ||
+          f.dataType.isInstanceOf[MapType] ||
+          f.dataType.isInstanceOf[StructType] =>
+          s"$name.${f.name}: ${f.dataType.simpleString}"
+      }.toSeq
+    }.flatten
     assert(offenders.isEmpty,
       s"driver canonicalizer cannot hash these columns — flatten them " +
         s"(concat_ws/array_to_string, the reference's CSV shape): " +
@@ -97,13 +103,12 @@ class RegistryShapeSpec extends SparkSpec {
       case TimestampType | TimestampNTZType | DateType => true
       case _ => false
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, run) =>
-        run(spark, dir).schema.fields.collect {
-          case f if !stable(f.dataType) =>
-            s"$name.${f.name}: ${f.dataType.simpleString}"
-        }
-    }
+    val offenders = eachQuery { (name, df) =>
+      df.schema.fields.collect {
+        case f if !stable(f.dataType) =>
+          s"$name.${f.name}: ${f.dataType.simpleString}"
+      }.toSeq
+    }.flatten
     assert(offenders.isEmpty,
       s"non-driver-stable output types (cast to double/long/string at " +
         s"the projection boundary, mirroring the cast in the oracle " +
@@ -126,18 +131,14 @@ class RegistryShapeSpec extends SparkSpec {
     * so the existing per-query oracles carry them.) */
   test("every global top-k node on the oracle surface has a tiebreak key") {
     import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, run) =>
-        try {
-          run(spark, dir).queryExecution.sparkPlan.collect {
-            case t: TakeOrderedAndProjectExec if t.sortOrder.size < 2 =>
-              s"$name: TakeOrderedAndProject(${t.sortOrder.mkString(", ")})"
-            case k: graft.plans.KnnTopKExec if k.order.size < 2 =>
-              s"$name: KnnTopK(${k.order.mkString(", ")})"
-          }
-        } finally graft.queries.BenchSuite.PinnedConfKeys
-          .foreach(spark.conf.unset)
-    }
+    val offenders = eachQuery { (name, df) =>
+      df.queryExecution.sparkPlan.collect {
+        case t: TakeOrderedAndProjectExec if t.sortOrder.size < 2 =>
+          s"$name: TakeOrderedAndProject(${t.sortOrder.mkString(", ")})"
+        case k: graft.plans.KnnTopKExec if k.order.size < 2 =>
+          s"$name: KnnTopK(${k.order.mkString(", ")})"
+      }
+    }.flatten
     assert(offenders.isEmpty,
       s"single-key global top-k can straddle a tie group at some SF " +
         s"(the v13 class) — add a unique tiebreak to the orderBy in " +

@@ -1,12 +1,13 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Arm, SparkEntry, SparkSpec}
 
-/** The suite memo caches (DedupSuite bands/words/simhash, BenchSuite
-  * inflated corpus + IVF index) pin executor storage per (session, dir)
-  * — `releaseCaches` must remove exactly those blocks, and the caches
-  * must rebuild lazily afterwards. The standing indexes the bench arms
-  * memoize on local disk must go with it.
+/** The arm lifecycle's storage contract ([[graft.Arm]]): per-run
+  * scratch (cached frames, temp dirs, stage caches) goes when the run
+  * ends; the memos (DedupSuite bands/words/simhash, the inflated
+  * corpus, the IVF/PQ indexes, the standing-index dirs) stay across
+  * runs until one `Arm.release(session)` removes exactly them, and
+  * rebuild lazily afterwards.
   *
   * Assertions track RDD IDs, not global counts: the spec shares its
   * JVM with every other suite, and Spark's ContextCleaner may reap an
@@ -20,59 +21,78 @@ class CacheLifecycleSpec extends SparkSpec {
   private def cachedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  test("releaseCaches removes exactly the memoized blocks; lazily rebuilt") {
-    DedupSuite.releaseCaches(spark)
-    BenchSuite.releaseCaches(spark)
-    val base = cachedIds
+  private val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+  /** Temp-dir names with one of the arms' prefixes. */
+  private def dirs(prefixes: Seq[String]): Set[String] =
+    Option(tmp.list()).map(_.toSet).getOrElse(Set.empty[String])
+      .filter(n => prefixes.exists(n.startsWith))
 
-    // force the dedup memos (bands, words, simhash) and the bench
-    // inflated-corpus memo to materialize
-    SparkEntry.queries("d04_jaccard_verify")(spark, dir).collect()
-    SparkEntry.queries("d06_simhash_pairs")(spark, dir).collect()
-    SparkEntry.queries("x02_knn_codegen")(spark, dir).collect()
+  private def runArm(name: String): Unit =
+    Arm.run(spark, dir, SparkEntry.arms(name))(_.collect())
+
+  /** Every arm that holds a memo or registers scratch. */
+  private val lifecycleArms = Seq(
+    "d04_jaccard_verify", "d06_simhash_pairs", "c07_pagerank",
+    "v13_degraded_pipeline", "v19_admit_probe", "m03_video_admit_probe",
+    "x02_knn_codegen", "x03_knn_ivf", "x04_topk_rewrite", "x14_pq_adc",
+    "x15_ivfpq", "x16_bpe_encode", "x17_stream_asof", "x18_stream_hh",
+    "x21_stream_ssj", "x24_mmr_rerank", "x25_kmeans_train",
+    "x26_curation_pipeline", "x27_vector_dedup_probe",
+    "x28_curate_incremental", "x29_decontam_128cells",
+    "x30_dedup_probe_np2", "x31_decontam_trained", "x32_admit_lifecycle",
+    "x33_video_probe", "x35_video_ingest")
+  private val memoDirs = Seq("x27_vdi", "x28_cur", "x33_vfi", "x35_vfi")
+  private val runDirs = Seq("x32_night", "x32_cmp", "x32_refit",
+    "m03_idx", "m03_cmp", "v19_idx", "v19_cmp", "graft-bench-ckpt")
+
+  test("Arm.release removes exactly the memoized blocks; lazily rebuilt") {
+    Arm.release(spark)
+    val base = cachedIds
+    val dirsBefore = dirs(memoDirs ++ runDirs)
+
+    lifecycleArms.foreach(runArm)
     val added = cachedIds -- base
     assert(added.nonEmpty,
-      "expected the suite memos to hold cached RDDs after queries ran")
+      "expected the memos to hold cached RDDs after the arms ran")
+    for (p <- memoDirs)
+      assert((dirs(Seq(p)) -- dirsBefore).nonEmpty, s"no $p dir was memoized")
+    assert((dirs(runDirs) -- dirsBefore).isEmpty,
+      s"run scratch outlived its run: ${dirs(runDirs) -- dirsBefore}")
 
-    DedupSuite.releaseCaches(spark)
-    BenchSuite.releaseCaches(spark)
-    val leftover = cachedIds.intersect(added)
-    assert(leftover.isEmpty,
-      s"releaseCaches left cached RDDs behind: $leftover")
+    Arm.release(spark)
+    assert((cachedIds -- base).isEmpty,
+      s"Arm.release left cached RDDs behind: ${cachedIds -- base}")
+    assert((dirs(memoDirs ++ runDirs) -- dirsBefore).isEmpty,
+      s"Arm.release left ${dirs(memoDirs ++ runDirs) -- dirsBefore} behind")
 
     // lazily rebuilt on next use — same results, caches repopulate
-    val again = SparkEntry.queries("d06_simhash_pairs")(spark, dir)
-    assert(again.count() > 0)
-    val rebuilt = cachedIds -- base -- added
+    assert(Arm.run(spark, dir, SparkEntry.arms("d06_simhash_pairs"))(
+      _.count()) > 0)
+    val rebuilt = cachedIds -- base
     assert(rebuilt.nonEmpty, "memo did not rebuild after release")
-    DedupSuite.releaseCaches(spark)
-    BenchSuite.releaseCaches(spark)
+    Arm.release(spark)
     assert(cachedIds.intersect(rebuilt).isEmpty)
   }
 
-  test("memoized standing-index dirs go with releaseCaches; x32 " +
-      "deletes its per-night dirs before it returns") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def dirs(prefix: String): Set[String] =
-      Option(tmp.list()).map(_.toSet).getOrElse(Set.empty[String])
-        .filter(_.startsWith(prefix))
-    val perNight = Seq("x32_night", "x32_cmp", "x32_refit")
-    BenchSuite.releaseCaches(spark)
-    val before = Seq("x28_cur", "x27_vdi").map(p => p -> dirs(p)).toMap
-    val nightBefore = perNight.map(p => p -> dirs(p)).toMap
-
-    SparkEntry.benchOnlyQueries("x28_curate_incremental")(spark, dir)
-      .collect()
-    SparkEntry.benchOnlyQueries("x32_admit_lifecycle")(spark, dir)
-      .collect()
-    for ((p, seen) <- before)
-      assert((dirs(p) -- seen).nonEmpty, s"no $p dir was memoized")
-    for ((p, seen) <- nightBefore)
-      assert((dirs(p) -- seen).isEmpty, s"x32 left a $p dir behind")
-
-    BenchSuite.releaseCaches(spark)
-    for ((p, seen) <- before)
-      assert((dirs(p) -- seen).isEmpty,
-        s"releaseCaches left ${dirs(p) -- seen} behind")
+  test("run scratch goes at run end: x32/m03/v19 dirs, c07 caches") {
+    val base = cachedIds
+    val before = dirs(runDirs)
+    Arm.run(spark, dir, SparkEntry.arms("c07_pagerank")) { df =>
+      df.collect()
+      assert((cachedIds -- base).nonEmpty, "c07 cached nothing in its run")
+    }
+    assert((cachedIds -- base).isEmpty,
+      s"c07 left persistent RDDs behind: ${cachedIds -- base}")
+    for (arm <- Seq("x32_admit_lifecycle", "m03_video_admit_probe",
+        "v19_admit_probe")) {
+      Arm.run(spark, dir, SparkEntry.arms(arm)) { df =>
+        df.collect()
+        assert((dirs(runDirs) -- before).nonEmpty,
+          s"$arm made no scratch dir in its run")
+      }
+      assert((dirs(runDirs) -- before).isEmpty,
+        s"$arm left ${dirs(runDirs) -- before} behind")
+    }
+    Arm.release(spark)
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Arm, SparkEntry, SparkSpec}
 
 /** Physical-plan shape checks — the scale-readiness criteria from
   * SURVEY.md §4 asserted against the actual executed plans: filters and
@@ -12,11 +12,11 @@ class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
-    val df = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)(name)(spark, dir)
-    df.collect() // finalize AQE so codegen / join choices are visible
-    df.queryExecution.executedPlan.toString
-  }
+  private def plan(name: String): String =
+    Arm.run(spark, dir, SparkEntry.arms(name)) { df =>
+      df.collect() // finalize AQE so codegen / join choices are visible
+      df.queryExecution.executedPlan.toString
+    }
 
   test("filters and column pruning push into the parquet scan (r02)") {
     val p = plan("r02_filter_project")
@@ -238,15 +238,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("x09 injects a runtime bloom filter on the fact side; x10 doesn't") {
-    try {
-      // executed plans print the filter as might_contain(...) over a
-      // bloom_filter_agg subquery on the dim side
-      val on = plan("x09_bloom_join")
-      assert(on.contains("might_contain") && on.contains("bloom_filter_agg"),
-        s"bloom filter did not fire:\n$on")
-      val off = plan("x10_bloom_off")
-      assert(!off.contains("might_contain"), off)
-    } finally BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
+    // executed plans print the filter as might_contain(...) over a
+    // bloom_filter_agg subquery on the dim side
+    val on = plan("x09_bloom_join")
+    assert(on.contains("might_contain") && on.contains("bloom_filter_agg"),
+      s"bloom filter did not fire:\n$on")
+    val off = plan("x10_bloom_off")
+    assert(!off.contains("might_contain"), off)
   }
 
   test("the Z-order key is a pure projection — no Exchange, no UDF (c05)") {
