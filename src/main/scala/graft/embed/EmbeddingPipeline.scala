@@ -3,8 +3,11 @@ package graft.embed
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PreparedSearches
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.etl.{DocTemplate, ProductDoc}
+import graft.plans.{PreparedSearch, SearchTemplate}
 
 /** The reference's embedding pipeline end-to-end (SURVEY.md §3.3, ref
   * `scripts/transform/generate_embeddings.py`): product rows → templated
@@ -92,12 +95,20 @@ object EmbeddingPipeline {
     * null embedding are not searchable. Plain mode returns at most k
     * rows, ranked 1..k, and scans `store` once.
     *
-    * Serving: pass a cached (persisted and materialized) `store` and
-    * `catalog`. The catalog's broadcast is then built by the first
-    * query and kept until the catalog is unpersisted
-    * ([[org.apache.spark.sql.graft.BroadcastReuse]]), so every later
-    * plain-mode query runs as one Spark job. An uncached catalog is
-    * re-read and re-broadcast by every query.
+    * Serving: `search` returns a frame over a
+    * [[graft.plans.PreparedSearch]] leaf, and running it binds this
+    * query's vector into a physical plan held per (cached `store`,
+    * cached `catalog`, `k`, `withTies`, the columns the caller reads)
+    * ([[org.apache.spark.sql.graft.PreparedSearches]]). The first query
+    * plans and runs the search under AQE. Every later one runs that
+    * final plan with only its vector swapped, so the catalog broadcast,
+    * the cache stages and the generated classes are reused and a
+    * plain-mode query is the one scan → top-k → probe job. The plan is
+    * dropped when either input is unpersisted; a re-cached input gets a
+    * new one. Inputs count as cached when the whole frame is (persisted,
+    * as `CacheManager` finds it); with an uncached `store` or `catalog`,
+    * every query plans the search afresh, as any query. Concurrent
+    * clients may share one held plan: each query runs its own copy.
     *
     * `withTies = true` switches the contract from "some k rows in
     * distance order" to SQL's `rank() <= k` (top-k WITH TIES): every
@@ -110,28 +121,58 @@ object EmbeddingPipeline {
     * exactly this: v13's boundary landed inside a 6-member sqrt(7) tie
     * group that sf0.01 and sf0.1 don't produce). Cost: a second,
     * filtered store scan bounded by `max(dist)` of the plain top-k (a
-    * scalar subquery) — pay it when the result feeds a correctness
-    * contract; skip it for serving. Both modes read `store` per scan,
-    * so pass a read-from-disk or cached frame, not an expensive live
-    * computation. */
+    * scalar subquery), read in one task — pay it when the result feeds
+    * a correctness contract; skip it for serving. Both modes read
+    * `store` per scan, so pass a read-from-disk or cached frame, not an
+    * expensive live computation. */
   def search(store: DataFrame, catalog: DataFrame,
       queryText: String, embedder: TextEmbedder, k: Int,
       withTies: Boolean = false): DataFrame = {
     val qvec = embedder.embedBatch(Seq(queryText)).head
-    // the distance is null exactly when the embedding is (null-intolerant)
-    val scored = store.filter(col("embedding").isNotNull)
-      .select(col("product_code"), call_function("graft_l2_distance",
-        col("embedding"), typedLit(qvec)).as("dist"))
-    val order = Seq(col("dist"), col("product_code"))
-    val topk = scored.orderBy(order: _*).limit(k)
-    val hits =
-      if (!withTies)
-        topk.withColumn("rank", row_number().over(Window.orderBy(order: _*)))
-      else
-        // rank() <= k ⟺ dist <= d_k, and d_k = max(dist) of ANY valid top-k
-        scored.filter(col("dist") <= topk.agg(max(col("dist"))).scalar())
-          .withColumn("rank", rank().over(Window.orderBy(col("dist"))))
-    hits.join(catalog, Seq("product_code"), "left")
-      .withColumn("score", lit(1.0) - col("dist"))
+    PreparedSearches.frame(store.sparkSession,
+      PreparedSearch(Search(store, catalog, k, withTies), qvec.map(_.toDouble)))
+  }
+
+  /** [[search]]'s plan for one query vector. */
+  private final case class Search(store: DataFrame, catalog: DataFrame,
+      k: Int, withTies: Boolean) extends SearchTemplate {
+
+    def inputs: Seq[DataFrame] = Seq(store, catalog)
+
+    def key: Any = (k, withTies, store.schema, catalog.schema)
+
+    def schema: StructType = {
+      val isCode = (f: StructField) =>
+        store.sparkSession.sessionState.conf.resolver(f.name, "product_code")
+      val code = store.schema.find(isCode).getOrElse(throw new IllegalArgumentException(
+        s"search: the store has no product_code column: ${store.schema.simpleString}"))
+      // the left join keeps every hit: catalog columns may be null
+      StructType(Seq(code, StructField("dist", DoubleType),
+          StructField("rank", IntegerType, nullable = false)) ++
+        catalog.schema.filterNot(isCode).map(_.copy(nullable = true)) :+
+        StructField("score", DoubleType))
+    }
+
+    def frame(query: Array[Double]): DataFrame = {
+      // the distance is null exactly when the embedding is (null-intolerant)
+      val scored = store.filter(col("embedding").isNotNull)
+        .select(col("product_code"), call_function("graft_l2_distance",
+          col("embedding"), typedLit(query)).as("dist"))
+      val order = Seq(col("dist"), col("product_code"))
+      val topk = scored.orderBy(order: _*).limit(k)
+      val hits =
+        if (!withTies)
+          topk.withColumn("rank", row_number().over(Window.orderBy(order: _*)))
+        else
+          // rank() <= k ⟺ dist <= d_k, and d_k = max(dist) of ANY valid top-k.
+          // The survivors meet on one partition without a shuffle: a
+          // shuffle stage would hold this query's rows, and a held plan
+          // could not re-bind the vector inside it.
+          scored.filter(col("dist") <= topk.agg(max(col("dist"))).scalar())
+            .coalesce(1)
+            .withColumn("rank", rank().over(Window.orderBy(col("dist"))))
+      hits.join(catalog, Seq("product_code"), "left")
+        .withColumn("score", lit(1.0) - col("dist"))
+    }
   }
 }

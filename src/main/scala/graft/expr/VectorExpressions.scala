@@ -884,6 +884,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // registered-index cell pruning on top of the KnnTopK rewrite
     ext.injectOptimizerRule(graft.plans.IvfPruneRule)
     ext.injectPlannerStrategy(graft.plans.KnnTopKStrategy)
+    // EmbeddingPipeline.search: a leaf over a plan held per set of cached
+    // inputs, narrowed to the columns the caller reads (see PreparedSearches)
+    ext.injectOptimizerRule(graft.plans.PreparedSearchPrune)
+    ext.injectPlannerStrategy(graft.plans.PreparedSearchStrategy)
     // a broadcast of cached data is built once and reused across queries
     // until that data is unpersisted (see BroadcastReuse)
     ext.injectQueryStagePrepRule(org.apache.spark.sql.graft.BroadcastReuseRule)

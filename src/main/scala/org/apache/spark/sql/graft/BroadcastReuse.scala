@@ -48,16 +48,23 @@ object BroadcastReuse extends PredicateHelper {
   /** A kept broadcast and the statistics of its build. */
   final case class Entry(broadcast: Broadcast[Any], stats: Statistics)
 
-  private final class Registry(val sc: SparkContext) extends SparkListener {
+  /** What is kept per SparkContext, each entry keyed on the ids of the
+    * cached RDDs it was built from: the broadcasts, and the search plans
+    * of [[PreparedSearches]]. Unpersisting one of those RDDs drops every
+    * entry built from it. */
+  private[graft] final class Registry(val sc: SparkContext) extends SparkListener {
     val entries = new ConcurrentHashMap[(SparkPlan, Seq[Int]), Entry]()
-    override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+    val searches = new ConcurrentHashMap[(Any, Seq[Int]), SparkPlan]()
+    override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = {
       entries.keySet.removeIf(_._2.contains(e.rddId))
+      searches.keySet.removeIf(_._2.contains(e.rddId))
+    }
   }
 
   // one registry per SparkContext: RDD ids restart with a new context
   @volatile private var current: Registry = _
 
-  private def registry(sc: SparkContext): Registry = synchronized {
+  private[graft] def registry(sc: SparkContext): Registry = synchronized {
     if (current == null || (current.sc ne sc)) {
       current = new Registry(sc)
       sc.addSparkListener(current)
@@ -91,12 +98,19 @@ object BroadcastReuse extends PredicateHelper {
     Option(registry(sc).entries.get(key))
 
   private[graft] def record(sc: SparkContext, key: (SparkPlan, Seq[Int]),
-      entry: Entry): Unit = {
-    val entries = registry(sc).entries
-    entries.putIfAbsent(key, entry)
+      entry: Entry): Unit =
+    keep(sc, registry(sc).entries, key, entry)
+
+  /** Keeps `value` under `key` in `memo`, where `key._2` holds the ids
+    * of the cached RDDs `value` was built from. The first value kept
+    * under a key stays. */
+  private[graft] def keep[K, V](sc: SparkContext,
+      memo: ConcurrentHashMap[(K, Seq[Int]), V], key: (K, Seq[Int]),
+      value: V): Unit = {
+    memo.putIfAbsent(key, value)
     // an unpersist that landed during the build has already been heard
     val live = sc.getPersistentRDDs
-    if (!key._2.forall(live.contains)) entries.remove(key, entry)
+    if (!key._2.forall(live.contains)) memo.remove(key, value)
   }
 
   /** Broadcasts kept for `sc`, and their built size in bytes. */

@@ -2,8 +2,6 @@ package graft.embed
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{SparkPlan, SortExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -13,10 +11,12 @@ import graft.plans.KnnTopKExec
 /** [[EmbeddingPipeline.search]]'s contract: plain mode is the pgvector
   * `ORDER BY embedding <-> q LIMIT k` idiom planned as one KnnTopK
   * exec over ONE store scan, ranked on the merged partition,
-  * then left-joined to the catalog; results equal a plain-Scala brute
-  * force, null embeddings are not searchable, and k bounds the row
-  * count even when product codes repeat in the store. */
-class SearchPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  * then left-joined to the catalog — the shape of the plan held for a
+  * cached store and catalog, which every warm query runs; results
+  * equal a plain-Scala brute force, null embeddings are not
+  * searchable, and k bounds the row count even when product codes
+  * repeat in the store. */
+class SearchPlanSpec extends SparkSpec {
   import spark.implicits._
 
   private val dim = 8
@@ -57,21 +57,32 @@ class SearchPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.select("product_code", "dist", "rank").as[(String, Double, Int)]
       .collect().toSeq.sortBy(_._3)
 
-  private def nodes(df: DataFrame): Seq[SparkPlan] = {
-    df.collect()
-    collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+  /** Runs `body` on the nodes of the plan held for a cached 3-partition
+    * store and a cached catalog: the plan a second, warm query ran. */
+  private def heldPlan(rows: Seq[(String, Array[Float])], withTies: Boolean)
+      (body: Seq[SparkPlan] => Unit): Unit = {
+    val store = storeOf(rows, 3).persist()
+    val catalog = catalogOf(rows.map(_._1)).persist()
+    try {
+      store.count(); catalog.count()
+      val before = SearchFixtures.held(spark)
+      def search(q: String) = EmbeddingPipeline.search(store, catalog, q,
+        embedder, k = 5, withTies = withTies)
+      search("bánh mì").collect()
+      assert(SearchFixtures.held(spark) == before + 1)
+      val warm = search(query)
+      warm.collect()
+      body(SearchFixtures.ranNodes(warm))
+    } finally {
+      store.unpersist(blocking = true)
+      catalog.unpersist(blocking = true)
+    }
   }
 
   test("plain mode: one KnnTopK exec, one store scan, no shuffle " +
       "exchange, grouped aggregate or nested-loop join, rank on the " +
       "merged partition") {
-    val rows = storeRows(200)
-    val store = storeOf(rows, 3).persist()
-    try {
-      store.count()
-      val hits = EmbeddingPipeline.search(store,
-        catalogOf(rows.map(_._1)), query, embedder, k = 5)
-      val plan = nodes(hits)
+    heldPlan(storeRows(200), withTies = false) { plan =>
       val names = plan.map(_.nodeName)
       assert(names.count(_ == "KnnTopKGlobal") == 1, names)
       assert(!names.contains("KnnTopKLocal"), names)
@@ -79,26 +90,20 @@ class SearchPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(!plan.exists(_.isInstanceOf[ShuffleExchangeExec]), names)
       assert(!names.exists(_.startsWith("ObjectHashAggregate")), names)
       assert(!names.exists(_.startsWith("BroadcastNestedLoopJoin")), names)
-      assert(plan.count(_.isInstanceOf[InMemoryTableScanExec]) == 1, names)
+      assert(SearchFixtures.storeScans(plan) == 1, names)
       // row_number reads KnnTopKGlobal's sorted single partition as is
       assert(!plan.exists(_.isInstanceOf[SortExec]), names)
       val windows = plan.collect { case w: WindowExec => w }
       assert(windows.size == 1 &&
         windows.head.child.isInstanceOf[KnnTopKExec], names)
-    } finally store.unpersist(blocking = true)
+    }
   }
 
   test("with ties: the bound's top-k and one filtered pass, two scans") {
-    val rows = storeRows(200)
-    val store = storeOf(rows, 3).persist()
-    try {
-      store.count()
-      val plan = nodes(EmbeddingPipeline.search(store,
-        catalogOf(rows.map(_._1)), query, embedder, k = 5, withTies = true))
-      assert(plan.count(_.isInstanceOf[InMemoryTableScanExec]) == 2,
-        plan.map(_.nodeName))
+    heldPlan(storeRows(200), withTies = true) { plan =>
+      assert(SearchFixtures.storeScans(plan) == 2, plan.map(_.nodeName))
       assert(plan.exists(_.nodeName == "KnnTopKGlobal"), plan.map(_.nodeName))
-    } finally store.unpersist(blocking = true)
+    }
   }
 
   test("results equal brute force: null embeddings excluded, k < n " +

@@ -6,13 +6,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.graft.{BroadcastReuse, CachedBroadcastExchangeExec, TestBus}
 
 import graft.SparkSpec
-import graft.embed.{EmbeddingPipeline, HashingEmbedder}
+import graft.embed.{EmbeddingPipeline, HashingEmbedder, SearchFixtures}
 
 /** Cross-query broadcast reuse ([[BroadcastReuse]]): a search against a
   * cached store and a cached catalog runs one job once the catalog's
@@ -20,7 +19,7 @@ import graft.embed.{EmbeddingPipeline, HashingEmbedder}
   * sides that are not plain reads of cached data keep Spark's exchange;
   * unpersist drops the kept broadcast without breaking a query that
   * holds it; concurrent cold builds all answer correctly. */
-class BroadcastReuseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class BroadcastReuseSpec extends SparkSpec {
   import spark.implicits._
 
   private val dim = 8
@@ -50,9 +49,10 @@ class BroadcastReuseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.select("product_code", "dist", "product_name", "rank")
       .as[(String, Double, String, Int)].collect().toSeq.sortBy(_._4)
 
+  /** The nodes of the plan the search ran. */
   private def nodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
-    collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+    SearchFixtures.ranNodes(df)
   }
 
   private def kept: Int = BroadcastReuse.retained(spark.sparkContext)._1

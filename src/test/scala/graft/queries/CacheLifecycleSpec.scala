@@ -74,6 +74,12 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(cachedIds.intersect(rebuilt).isEmpty)
   }
 
+  test("v13 leaves no held search plan once its run ends") {
+    val before = graft.embed.SearchFixtures.held(spark)
+    runArm("v13_degraded_pipeline")
+    assert(graft.embed.SearchFixtures.held(spark) == before)
+  }
+
   test("run scratch goes at run end: x32/m03/v19 dirs, c07 caches") {
     val base = cachedIds
     val before = dirs(runDirs)
